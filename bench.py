@@ -106,10 +106,20 @@ def _tail_line(
     warm twins, then remaining cold entries, each added only while the
     serialized line stays under ``budget``. Entries that don't fit are
     still present in the complete dicts on the big line above; nothing
-    is ever dropped from those (the ADD-only contract)."""
+    is ever dropped from those (the ADD-only contract).
+
+    The base scalars are fitted too: if they alone overflow the budget
+    (a run with many failures or retimes), ``failed`` is cut to its
+    first five names with the full count in ``n_failed``, and the
+    ``retimed`` entries are dropped."""
     out = dict(base)
     out["queries"] = {}
     out["queries_warm"] = {}
+    if len(json.dumps(out, separators=(",", ":"))) > budget:
+        failed = out["failed"]
+        out["failed"] = failed[:5]
+        out["n_failed"] = len(failed)
+        out["retimed"] = {}
     adds = (
         [("queries", n, timings[n]) for n in headline if n in timings]
         + [("queries_warm", n, warm[n]) for n in headline if n in warm]

@@ -5072,14 +5072,13 @@ def _bm25_served_terms(spark, sf_dir, qterms, k: int):
     whose /tmp dir was reaped rebuilds instead of failing the entry.
 
     qterms is lazily localCheckpointed here (r13 opt): BM25Index.query
-    evaluates its lineage THREE times per call (bucket-id collect + the
-    tf broadcast join + the df broadcast join — no exchange reuse
-    across the differing projections), and every fixture query set
-    carries a full corpus text decode behind its tiny row count. The
-    table is broadcast-sized by the query() contract, so the
-    checkpoint is a few-KB materialization that removes two corpus
-    passes per serve (measured: prf_bm25_fixed's served q0 leg
-    6.3 s → the checkpointed form, see OPTIMIZATION_r13.md). Frames
+    evaluates its lineage TWICE per call (the bucket-id collect + the
+    one query broadcast its postings and df joins share), and every
+    fixture query set carries a full corpus text decode behind its
+    tiny row count. The table is broadcast-sized by the query()
+    contract, so the checkpoint is a few-KB materialization that
+    removes a corpus pass per serve (measured: prf_bm25_fixed's served
+    q0 leg 6.3 s → the checkpointed form, see OPTIMIZATION_r13.md). Frames
     from _qterms_cached arrive already checkpointed (batch 7) — a
     second checkpoint would just re-copy the 40-row frame per entry."""
     if not getattr(qterms, "_mrgo_ckpt", False):

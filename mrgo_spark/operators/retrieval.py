@@ -87,11 +87,11 @@ def bm25_topk(
     tf = cand.groupBy("query_id", "doc_id", "term").agg(
         F.count("*").cast("long").alias("tf")
     ).localCheckpoint(eager=False)
-    dfreq = (
-        tf.select("term", "doc_id")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count("*").cast("long").alias("df"))
+    # tf holds one row per (query, doc, term), and a query's candidates
+    # are every doc containing its term, so the per-(query, term) row
+    # count IS the corpus df
+    dfreq = tf.groupBy("query_id", "term").agg(
+        F.count("*").cast("long").alias("df")
     )
     return _bm25_rank(tf, dfreq, dl, scalars, k)
 
@@ -125,13 +125,14 @@ def _bm25_rank(
     k: int,
 ) -> DataFrame:
     """The shared BM25 scoring tail: join the per-(query, doc, term)
-    tf stream with the (broadcast) df table, doc lengths, and corpus
-    scalars, sum exact-integer per-term scores, take top-k per query.
-    Used by both the two-pass form (``bm25_topk``) and the at-rest
-    index serve path (``BM25Index.query``), so the two stay in exact
-    lockstep by construction."""
+    tf stream with the (broadcast) per-(query, term) df table, doc
+    lengths, and corpus scalars, sum exact-integer per-term scores,
+    take top-k per query. Used by both the two-pass form
+    (``bm25_topk``) and the at-rest index serve path
+    (``BM25Index.query``), so the two stay in exact lockstep by
+    construction."""
     score_fp = term_score_fp_expr()
-    base = tf.join(F.broadcast(dfreq), "term").join(dl, "doc_id")
+    base = tf.join(F.broadcast(dfreq), ["query_id", "term"]).join(dl, "doc_id")
     if isinstance(scalars, tuple):
         # (n, tt) known driver-side (the index serve path collects the
         # 1-row scalars table once per instance — r13 optimization
@@ -161,16 +162,6 @@ def _bm25_rank(
 
 
 CHAMPION_C = 32  # champion-list length per term (Manning IR §7.1.3)
-
-# BM25Index serve: largest distinct-term batch whose term list is
-# collected driver-side and inlined as a `term IN (...)` plan literal
-# (the r13 serve-plan slimming). Past this, the df prune falls back to
-# the distinct+broadcast-join so corpus-proportional batches degrade
-# executor-side — driver memory and plan size stay bounded at any
-# scale (VERDICT_r13 #3). 512 terms ≈ a few KB of plan literal; the
-# IN form only saves a fixed ~0.1-0.3 s of exchange/aggregate latency
-# per serve, which is noise for batches this large anyway.
-MAX_INLINE_TERMS = 512
 
 
 def champion_lists(
@@ -292,15 +283,16 @@ class BM25Index:
     - ``dl``: (doc_id, dl) — two longs per doc.
     - ``scalars``: the 1-row (n, tt) corpus totals.
 
-    ``query`` serves any query batch with ZERO corpus passes: the
-    term-bucket set is collected from the broadcast-sized query table,
-    postings/df scans prune to those buckets, and the scoring tail is
-    the exact ``_bm25_rank`` the two-pass form uses — so served
+    ``query`` serves any query batch with ZERO corpus passes and one
+    path: a single collect of the batch's distinct term buckets (at
+    most ``n_buckets`` rows) prunes the postings and df scans, both
+    scans inner-join the one broadcast query table, and the scoring
+    tail is the exact ``_bm25_rank`` the two-pass form uses — so served
     rankings are bit-identical to ``bm25_topk`` (parity-pinned in
-    tests/test_retrieval.py). At 100 TB the build is one tokenize +
-    two partial aggs + partitioned writes, amortized across every
-    subsequent query batch (bench pair: bm25_index_build /
-    bm25_topk_docs@index)."""
+    tests/test_retrieval.py). No query term ever becomes a plan
+    literal. At 100 TB the build is one tokenize + two partial aggs +
+    partitioned writes, amortized across every subsequent query batch
+    (bench pair: bm25_index_build / bm25_topk_docs@index)."""
 
     def __init__(self, spark, path: str):
         self.spark = spark
@@ -470,25 +462,13 @@ class BM25Index:
         """Same output contract as ``bm25_topk`` for the same
         (query_id, term) table, zero corpus passes.
 
-        SELECTIVE-BATCH CONTRACT (VERDICT_r7 #4): the query table must
-        be broadcast-sized — it is broadcast into the postings join,
-        so a corpus-sized query table does not fit this path (shard
-        it, or use the two-pass ``bm25_topk`` whose query side is
-        still broadcast but whose corpus side needs no index). The
-        distinct (term, bucket) set is collected driver-side ONLY up
-        to ``MAX_INLINE_TERMS`` distinct terms (r14, VERDICT_r13 #3):
-        below it, the df read becomes a ``term IN (...)`` plan literal
-        (the r13 serve-plan slimming); above it, the df prune falls
-        back to the distinct+broadcast-join and only the bucket ids
-        (≤ n_buckets rows) are collected — batches past the bound
-        degrade executor-side instead of via a driver collect + plan
-        literal that would grow with the batch. Partition pruning
-        degrades GRACEFULLY with batch size: once the batch's terms
-        hash into every bucket the scan is the full postings table —
-        still CORRECT, just unpruned (tested in
-        tests/test_retrieval.py::test_bm25_index_many_term_batch);
-        when all buckets are hit the isin filter is skipped entirely
-        rather than evaluated per row."""
+        SELECTIVE-BATCH CONTRACT: the query table must fit in a
+        broadcast — it is broadcast into the postings and df joins, so
+        a corpus-sized query table does not fit this path (shard it,
+        or use the two-pass ``bm25_topk``). Partition pruning degrades
+        gracefully with batch size: once the batch's terms hash into
+        every bucket the scans read the whole tables, still correct
+        (tests/test_retrieval.py::test_bm25_index_many_term_batch)."""
         tf, dfreq, dl, scalars = self._query_parts(query_terms)
         return _bm25_rank(tf, dfreq, dl, scalars, k)
 
@@ -496,28 +476,22 @@ class BM25Index:
         self, query_terms: DataFrame
     ) -> tuple[DataFrame, DataFrame, DataFrame, tuple[int, int]]:
         """The pruned per-index table reads behind ``query``: (tf,
-        dfreq, dl, (n, tt)) for one index/segment. Factored out so
-        ``BM25SegmentSet`` can union them across segments before the
-        shared ``_bm25_rank`` tail (tiered ingestion, VERDICT_r9 #1).
+        dfreq, dl, (n, tt)) for one index/segment, with tf keyed by
+        (query_id, doc_id, term) and dfreq by (query_id, term).
+        Factored out so ``BM25SegmentSet`` can union them across
+        segments before the shared ``_bm25_rank`` tail.
 
-        One collect serves two pruning roles (r13 optimization round):
-        the (term, bucket) pairs of the broadcast-sized query table
-        yield the partition-prune bucket set AND the distinct term
-        list, so the df read is a filter (``term IN (...)``) instead
-        of the old distinct+broadcast-join — that drops a shuffle
-        Exchange + two HashAggregates + a BroadcastExchange from every
-        serve plan with identical output rows (inner join on the
-        distinct key set == IN-filter by the same set)."""
-        qt = query_terms.select("query_id", "term")
-        terms, buckets = self._terms_buckets(query_terms, qt)
-        prune = (
-            F.col("term_bucket").isin(buckets)
-            if len(buckets) < self.n_buckets
-            else F.lit(True)
-        )
-        post = self._rel("postings").filter(prune)
-        tf = post.join(F.broadcast(qt), "term").select(
-            "query_id", "doc_id", "term", "tf"
+        One collect of at most ``n_buckets`` rows (``_bucket_prune``)
+        prunes both scans; df then inner-joins the SAME broadcast query
+        table the postings join uses, so Spark builds the broadcast
+        once and no term list enters the plan."""
+        qt = F.broadcast(query_terms.select("query_id", "term"))
+        prune = self._bucket_prune(qt)
+        tf = (
+            self._rel("postings")
+            .filter(prune)
+            .join(qt, "term")
+            .select("query_id", "doc_id", "term", "tf")
         )
         tomb = self._tombstones()
         if tomb is not None:
@@ -527,77 +501,29 @@ class BM25Index:
             # tombstone set big enough to strain a broadcast is the
             # signal to expunge.
             tf = tf.join(F.broadcast(tomb), "doc_id", "left_anti")
-        dfreq = self._rel("df").filter(prune)
-        if terms is not None:
-            # small batch: the collected term list rides as a plan
-            # literal — no exchange, no aggregate, no broadcast build
-            dfreq = dfreq.filter(F.col("term").isin(terms))
-        else:
-            # batch past MAX_INLINE_TERMS (VERDICT_r13 #3): prune by
-            # the distinct+broadcast-join instead — identical rows
-            # (inner join on the distinct key set == IN-filter by the
-            # same set; both drop NULL terms), but the term set stays
-            # executor-side however large the batch grows
-            dfreq = dfreq.join(
-                F.broadcast(qt.select("term").distinct()), "term"
-            )
-        dfreq = dfreq.select("term", "df")
-        dl = self._rel("dl")
-        return tf, dfreq, dl, self._scalars_nt()
+        dfreq = (
+            self._rel("df")
+            .filter(prune)
+            .join(qt, "term")
+            .select("query_id", "term", "df")
+        )
+        return tf, dfreq, self._rel("dl"), self._scalars_nt()
 
-    def _terms_buckets(
-        self, query_terms: DataFrame, qt: DataFrame
-    ) -> tuple[list | None, list]:
-        """Collect the query table's distinct terms + hash buckets —
-        ONE job serving both pruning roles, BOUNDED (r14, VERDICT_r13
-        #3): the probe is ``limit(MAX_INLINE_TERMS + 1)``, so the
-        driver never collects more than that many (term, bucket) rows.
-        A batch under the bound returns (terms, buckets) for the
-        IN-literal df prune; past it, terms comes back ``None`` (the
-        caller joins instead) and a second, ≤ n_buckets-row collect
-        yields just the bucket ids for partition pruning. NULL terms
-        are dropped before sorting (a tokenizer never emits them, but
-        a caller-built frame could — the old sort raised TypeError).
-
-        Memoized on the INPUT frame object per n_buckets (r13
-        optimization round, batch 7): the session-cached fixture
-        query frames are reused across serve entries, and a
-        DataFrame's CONTENT is immutable, so repeated serves of the
-        same frame object skip the collect job entirely. The memo
-        assumes the frame's SOURCE is immutable too: a frame read
-        from a path that is rewritten between serves would prune with
-        stale term/bucket sets — checkpoint or re-create the frame
-        after rewriting its source (the session caches and the
-        at-rest index tables both satisfy this by construction).
-        Fresh frames compute exactly as before."""
-        memo = getattr(query_terms, "_mrgo_tb", None)
-        if memo is None:
-            memo = {}
-            try:
-                query_terms._mrgo_tb = memo
-            except Exception:
-                pass
-        got = memo.get(self.n_buckets)
-        if got is None:
-            bcol = F.pmod(
-                F.xxhash64("term"), F.lit(self.n_buckets)
-            ).alias("b")
-            tb = (
-                qt.select("term", bcol)
-                .distinct()
-                .limit(MAX_INLINE_TERMS + 1)
-                .collect()
-            )
-            if len(tb) <= MAX_INLINE_TERMS:
-                got = (
-                    sorted({r.term for r in tb if r.term is not None}),
-                    sorted({int(r.b) for r in tb}),
-                )
-            else:
-                bs = qt.select(bcol).distinct().collect()
-                got = (None, sorted({int(r.b) for r in bs}))
-            memo[self.n_buckets] = got
-        return got
+    def _bucket_prune(self, qt: DataFrame):
+        """The term_bucket partition filter for a (query_id, term)
+        table: one collect of its distinct non-NULL term buckets (at
+        most ``n_buckets`` rows). NULL terms match nothing, so their
+        bucket is never scanned. When every bucket is hit the filter
+        is the constant TRUE rather than a per-row isin."""
+        rows = (
+            qt.filter(F.col("term").isNotNull())
+            .select(F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).alias("b"))
+            .distinct()
+            .collect()
+        )
+        if len(rows) >= self.n_buckets:
+            return F.lit(True)
+        return F.col("term_bucket").isin(sorted(int(r.b) for r in rows))
 
     def _scalars_nt(self) -> tuple[int, int]:
         """The 1-row corpus scalars (n, tt), collected ONCE per
@@ -684,15 +610,9 @@ class BM25Index:
         if not os.path.isfile(f"{out}/_SUCCESS"):
             self.build_champions(c)
         qt = query_terms.select("query_id", "term")
-        _, buckets = self._terms_buckets(query_terms, qt)
-        prune = (
-            F.col("term_bucket").isin(buckets)
-            if len(buckets) < self.n_buckets
-            else F.lit(True)
-        )
         ch = (
             self._rel(f"champions_c{c}")
-            .filter(prune)
+            .filter(self._bucket_prune(qt))
             .select("term", "doc_id", "term_score_fp")
         )
         tomb = self._tombstones()
@@ -884,7 +804,9 @@ class BM25SegmentSet:
             dfr = dfr.unionByName(dfr2)
             dl = dl.unionByName(dl2)
             n, tt = n + n2, tt + tt2
-        dfreq = dfr.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
+        dfreq = dfr.groupBy("query_id", "term").agg(
+            F.sum("df").cast("long").alias("df")
+        )
         # per-segment (n, tt) are exact longs — their integer sum is
         # precisely what the old unioned-scalars agg computed
         return _bm25_rank(tf, dfreq, dl, (n, tt), k)

@@ -2039,22 +2039,29 @@ class IVFIndex:
             corpus_cells = corpus_cells.join(
                 F.broadcast(tomb), "neighbor_id", "left_anti"
             )
-        cand = corpus_cells.join(F.broadcast(query_cells), "cell_id").filter(
-            F.col("query_id") != F.col("neighbor_id")
-        )
-        scored = cand.select(
-            "query_id",
-            "neighbor_id",
-            cosine_fx(F.col("qvec_"), F.col("cvec_")).alias("score"),
-        ).distinct()
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "score", "rank")
-        )
+        return _ivf_rank(corpus_cells, query_cells, k)
+
+
+def _ivf_rank(corpus_cells: DataFrame, query_cells: DataFrame, k: int) -> DataFrame:
+    """The shared IVF scoring tail: join the (cell_id, neighbor_id,
+    cvec_) corpus rows with the broadcast (cell_id, query_id, qvec_)
+    probe table, score exact cosine, take top-k per query. Used by
+    both ``topk_cosine_ivf`` and the at-rest ``IVFIndex.query``, so
+    the two stay in lockstep (the retrieval._bm25_rank rule)."""
+    cand = corpus_cells.join(F.broadcast(query_cells), "cell_id").filter(
+        F.col("query_id") != F.col("neighbor_id")
+    )
+    scored = cand.select(
+        "query_id",
+        "neighbor_id",
+        cosine_fx(F.col("qvec_"), F.col("cvec_")).alias("score"),
+    ).distinct()
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", "rank")
+    )
 
 
 def topk_cosine_ivf(
@@ -2084,20 +2091,7 @@ def topk_cosine_ivf(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec_")),
         cents, "query_id", "qvec_", n_probe=n_probe,
     )
-    cand = corpus_cells.join(F.broadcast(query_cells), "cell_id").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine_fx(F.col("qvec_"), F.col("cvec_")).alias("score"),
-    ).distinct()
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _ivf_rank(corpus_cells, query_cells, k)
 
 
 # ------------------------------------------- md5-portable SRP LSH

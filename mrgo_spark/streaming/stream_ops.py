@@ -760,31 +760,25 @@ def streaming_bm25_scores(index, query_stream: DataFrame) -> DataFrame:
     happens in the consumer (a second streaming agg would be illegal;
     for ranked per-batch output use ``serve_bm25_foreach_batch``).
     Columns: (query_id, doc_id, n_terms, score_fp)."""
-    from ..operators.retrieval import BM25_SCALE
+    from ..operators.retrieval import term_score_fp_expr
 
     sc = index.spark.read.parquet(f"{index.path}/scalars").collect()[0]
-    n, tt = int(sc.n), int(sc.tt)
     post = index.spark.read.parquet(f"{index.path}/postings").select(
         "term", "doc_id", "tf"
     )
     dfreq = index.spark.read.parquet(f"{index.path}/df").select("term", "df")
     dl = index.spark.read.parquet(f"{index.path}/dl")
     qt = query_stream.select("query_id", "term")
-    scored = qt.join(post, "term").join(dfreq, "term").join(dl, "doc_id")
-    score_fp = F.expr(
-        f"cast("
-        f"((cast(2 as decimal(38,0)) * {n} - 2 * df + 1)"
-        f" * (cast(22 as decimal(38,0)) * {tt} * tf)"
-        f" * cast({BM25_SCALE} as decimal(38,0)))"
-        f" div ((cast(2 as decimal(38,0)) * df + 1)"
-        f" * (cast(10 as decimal(38,0)) * {tt} * tf"
-        f"     + cast(3 as decimal(38,0)) * {tt}"
-        f"     + cast(9 as decimal(38,0)) * dl * {n}))"
-        f" as bigint)"
+    scored = (
+        qt.join(post, "term")
+        .join(dfreq, "term")
+        .join(dl, "doc_id")
+        .withColumn("n", F.lit(int(sc.n)).cast("long"))
+        .withColumn("tt", F.lit(int(sc.tt)).cast("long"))
     )
     return scored.groupBy("query_id", "doc_id").agg(
         F.count("*").cast("long").alias("n_terms"),
-        F.sum(score_fp).cast("long").alias("score_fp"),
+        F.sum(term_score_fp_expr()).cast("long").alias("score_fp"),
     )
 
 

@@ -55,13 +55,19 @@ def test_tail_line_fits_window_and_parses():
 
 
 def test_tail_line_keeps_scalars_and_compact_separators():
+    base = _base(retimed={"winnow_overlap_pairs": 2.359})
+    base["failed"] = ["one_query", "two_query"]
     line = bench._tail_line(
-        _base(retimed={"winnow_overlap_pairs": 2.359}),
+        base,
         {n: 1.0 for n in bench.HEADLINE},
         {},
         bench.HEADLINE,
     )
     parsed = json.loads(line)
+    # a base inside the budget keeps failed and retimed whole
+    assert parsed["failed"] == base["failed"]
+    assert parsed["retimed"] == base["retimed"]
+    assert "n_failed" not in parsed
     for key in (
         "value",
         "warm_total",
@@ -85,3 +91,23 @@ def test_tail_line_small_input_includes_everything():
     parsed = json.loads(line)
     assert parsed["queries"] == {k: v for k, v in timings.items()}
     assert parsed["queries_warm"] == warm
+
+
+def test_tail_line_base_overflow_cuts_failed_and_retimed():
+    # ~50 long failed names plus retimes push the base scalars alone
+    # past the budget; the line must still fit and keep the headline
+    failed = [f"a_failed_query_with_a_long_name_{i:03d}" for i in range(50)]
+    base = _base(retimed={n: 2.5 for n in failed})
+    base["failed"] = failed
+    timings = {n: 1.234 for n in bench.HEADLINE}
+    line = bench._tail_line(base, timings, dict(timings), bench.HEADLINE)
+    assert len(line) <= 2000 - 1
+    parsed = json.loads(line)
+    assert parsed["n_failed"] == 50
+    assert parsed["failed"] == failed[:5]
+    assert parsed["retimed"] == {}
+    for key in ("value", "warm_total", "value_ex_jit", "calibration", "sf"):
+        assert parsed[key] == base[key], key
+    for n in bench.HEADLINE:
+        assert n in parsed["queries"], n
+        assert n in parsed["queries_warm"], n

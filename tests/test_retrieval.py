@@ -172,25 +172,51 @@ def test_bm25_index_parity_with_two_pass_form(spark, tmp_path):
     assert sorted(map(tuple, reopened.query(qterms, k=10).collect())) == direct
 
 
+def _partition_filters(plan: str) -> list[str]:
+    """The scans' PartitionFilters entries, expression ids stripped so
+    plans of different frames compare."""
+    return sorted(
+        re.sub(r"#\d+L?", "", m)
+        for m in re.findall(r"PartitionFilters: \[[^\]]*\]", plan)
+    )
+
+
 def test_bm25_index_query_prunes_partitions(spark, tmp_path):
     """The postings scan must carry a term_bucket partition filter:
     a single-term query reads only its bucket's directory, not the
-    whole postings table."""
+    whole postings table. A NULL term matches nothing, so adding one
+    must neither change the rows nor scan its hash bucket."""
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     idx = retrieval.BM25Index.build(docs, str(tmp_path / "bm25idx"))
     one_term = spark.createDataFrame(
         [(1, "the")], "query_id long, term string"
     )
-    plan = (
-        idx.query(one_term, k=5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    with_null = spark.createDataFrame(
+        [(1, "the"), (1, None)], "query_id long, term string"
     )
+    # the NULL term's bucket differs from the real term's, so a NULL
+    # that leaked into the bucket set would show as an extra bucket
+    null_b, the_b = (
+        spark.range(1)
+        .select(
+            F.pmod(F.xxhash64(F.lit(None).cast("string")), F.lit(idx.n_buckets)),
+            F.pmod(F.xxhash64(F.lit("the")), F.lit(idx.n_buckets)),
+        )
+        .first()
+    )
+    assert null_b != the_b
+    served = [idx.query(q, k=5) for q in (one_term, with_null)]
+    plans = [
+        d._jdf.queryExecution().executedPlan().toString() for d in served
+    ]
     # partition pruning shows as a PartitionFilters entry on the scan
-    assert "term_bucket" in plan
+    assert "term_bucket" in plans[0]
     # and the serve path never re-reads the documents table
-    assert "documents" not in plan
+    assert "documents" not in plans[0]
+    filters = [_partition_filters(p) for p in plans]
+    assert filters[0] and filters[0] == filters[1]
+    rows = [sorted(map(tuple, d.collect())) for d in served]
+    assert rows[0] and rows[0] == rows[1]
 
 
 def test_retrieval_eval_hand_case(spark):
@@ -299,28 +325,42 @@ def test_bm25_index_many_term_batch_degrades_gracefully(spark, tmp_path):
     assert served == direct
 
 
-def test_bm25_index_large_batch_join_fallback(
-    spark, tmp_path, monkeypatch
+def test_bm25_index_large_batch_serves_without_term_literal(
+    spark, tmp_path
 ):
-    """VERDICT_r13 #3: a batch past MAX_INLINE_TERMS must NOT collect
-    its term list driver-side — the df prune falls back to the
-    distinct+broadcast-join (terms memoized as None), with rankings
-    identical to the IN-literal path and the two-pass form."""
-    docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    idx = retrieval.BM25Index.build(docs, str(tmp_path / "big"), n_buckets=4)
-    qterms = retrieval.query_terms_from_docs(
-        docs, F.col("doc_id") % 5 == 0, n_terms=8
+    """A batch of more than 512 distinct terms serves exactly what the
+    two-pass form does, and no term list enters the plan: df is pruned
+    through the broadcast query table, never by an In/InSet filter on
+    term."""
+    import itertools
+    import random
+
+    # the fixture corpus has too small a vocabulary, so build one with
+    # 1000 distinct words spread over 300 documents
+    vocab = ["".join(w) for w in itertools.product("abcdefghij", repeat=3)]
+    rnd = random.Random(7)
+    docs = spark.createDataFrame(
+        [
+            (d, " ".join(rnd.choice(vocab) for _ in range(rnd.randint(20, 60))))
+            for d in range(300)
+        ],
+        "doc_id long, text string",
+    )
+    idx = retrieval.BM25Index.build(docs, str(tmp_path / "big"), n_buckets=16)
+    qterms = spark.createDataFrame(
+        [(i % 40, w) for i, w in enumerate(rnd.sample(vocab, 600))],
+        "query_id long, term string",
     ).localCheckpoint()
-    inline = sorted(map(tuple, idx.query(qterms, k=10).collect()))
-    monkeypatch.setattr(retrieval, "MAX_INLINE_TERMS", 3)
-    qterms2 = qterms.select("*")  # fresh frame object: no stale memo
-    fallback = sorted(map(tuple, idx.query(qterms2, k=10).collect()))
-    assert fallback == inline
-    # the memo records the join-path marker, proving the bounded probe
-    # actually took the fallback branch (not a silent full collect)
-    terms, buckets = qterms2._mrgo_tb[idx.n_buckets]
-    assert terms is None
-    assert buckets == sorted(buckets) and len(buckets) <= idx.n_buckets
+    assert qterms.count() > 512
+    got = idx.query(qterms, k=10)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"\bterm#\d+ (IN|INSET)\b", plan)
+    assert "In(term," not in plan and "InSet(term," not in plan
+    served = sorted(map(tuple, got.collect()))
+    direct = sorted(
+        map(tuple, retrieval.bm25_topk(docs, qterms, k=10).collect())
+    )
+    assert served and served == direct
 
 
 def test_bm25_scalars_null_tt_degrades(spark, tmp_path):
