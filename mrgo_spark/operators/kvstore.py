@@ -46,7 +46,14 @@ class KVStore:
         self._log("append", key, value)
 
     def oplog(self) -> DataFrame:
-        return self.spark.createDataFrame(self._ops, _OPLOG_SCHEMA)
+        """The driver-side log as a DataFrame, built from pandas so
+        Arrow ships it to the JVM: reads run no Python-worker tasks."""
+        import pandas as pd
+
+        cols = [f.split()[0] for f in _OPLOG_SCHEMA.split(", ")]
+        return self.spark.createDataFrame(
+            pd.DataFrame(self._ops, columns=cols), _OPLOG_SCHEMA
+        )
 
     def state(self) -> DataFrame:
         """Materialized (key, state) via the declarative fold (O21)."""

@@ -5031,7 +5031,6 @@ def _qterms_cached(spark, sf_dir, tag, build):
     if hit is not None and hit[0] is spark:
         return hit[1]
     qt = build().select("query_id", "term").localCheckpoint(eager=False)
-    qt._mrgo_ckpt = True  # _bm25_served_terms skips its re-checkpoint
     _QTERMS_CACHE[(sf_dir, tag)] = (spark, qt)
     return qt
 
@@ -5071,20 +5070,10 @@ def _bm25_served_terms(spark, sf_dir, qterms, k: int):
     the topk_cosine_ivf dead-cached-path recovery: a cached index
     whose /tmp dir was reaped rebuilds instead of failing the entry.
 
-    qterms is lazily localCheckpointed here (r13 opt): BM25Index.query
-    evaluates its lineage TWICE per call (the bucket-id collect + the
-    one query broadcast its postings and df joins share), and every
-    fixture query set carries a full corpus text decode behind its
-    tiny row count. The table is broadcast-sized by the query()
-    contract, so the checkpoint is a few-KB materialization that
-    removes a corpus pass per serve (measured: prf_bm25_fixed's served
-    q0 leg 6.3 s → the checkpointed form, see OPTIMIZATION_r13.md). Frames
-    from _qterms_cached arrive already checkpointed (batch 7) — a
-    second checkpoint would just re-copy the 40-row frame per entry."""
-    if not getattr(qterms, "_mrgo_ckpt", False):
-        qterms = qterms.select("query_id", "term").localCheckpoint(
-            eager=False
-        )
+    No checkpoint is taken here: BM25Index.query pins the table once
+    per call, so its lineage (a full corpus text decode behind every
+    fixture query set's tiny row count) runs once per serve. A dead-path
+    rebuild serves again and so runs it once more."""
     idx = _bm25_index(spark, sf_dir)
     try:
         return idx.query(qterms, k=k)

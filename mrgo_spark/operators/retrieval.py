@@ -284,12 +284,14 @@ class BM25Index:
     - ``scalars``: the 1-row (n, tt) corpus totals.
 
     ``query`` serves any query batch with ZERO corpus passes and one
-    path: a single collect of the batch's distinct term buckets (at
-    most ``n_buckets`` rows) prunes the postings and df scans, both
-    scans inner-join the one broadcast query table, and the scoring
-    tail is the exact ``_bm25_rank`` the two-pass form uses — so served
-    rankings are bit-identical to ``bm25_topk`` (parity-pinned in
-    tests/test_retrieval.py). No query term ever becomes a plan
+    path: the (query_id, term) table is pinned once per call, a
+    shuffle-free collect of its term buckets (one row per query-term
+    row, deduped on the driver) prunes the postings and df scans,
+    both scans inner-join the one broadcast of the pinned table, and
+    the scoring tail is the exact ``_bm25_rank`` the two-pass form
+    uses — so served rankings are bit-identical to ``bm25_topk``
+    (parity-pinned in tests/test_retrieval.py). The caller's lineage
+    runs exactly once per call, and no query term ever becomes a plan
     literal. At 100 TB the build is one tokenize + two partial aggs +
     partitioned writes, amortized across every subsequent query batch
     (bench pair: bm25_index_build / bm25_topk_docs@index)."""
@@ -463,17 +465,22 @@ class BM25Index:
         (query_id, term) table, zero corpus passes.
 
         SELECTIVE-BATCH CONTRACT: the query table must fit in a
-        broadcast — it is broadcast into the postings and df joins, so
-        a corpus-sized query table does not fit this path (shard it,
-        or use the two-pass ``bm25_topk``). Partition pruning degrades
-        gracefully with batch size: once the batch's terms hash into
-        every bucket the scans read the whole tables, still correct
+        broadcast — it is broadcast into the postings and df joins, and
+        its term-bucket column is collected for the prune, so a
+        corpus-sized query table does not fit this path (shard it, or
+        use the two-pass ``bm25_topk``). The table is pinned with an
+        eager localCheckpoint once per call, so the prune collect and
+        both joins read the same rows and the caller's lineage runs
+        once. Partition pruning degrades gracefully with batch size:
+        once the batch's terms hash into every bucket the scans read
+        the whole tables, still correct
         (tests/test_retrieval.py::test_bm25_index_many_term_batch)."""
-        tf, dfreq, dl, scalars = self._query_parts(query_terms)
+        qt = query_terms.select("query_id", "term").localCheckpoint(eager=True)
+        tf, dfreq, dl, scalars = self._query_parts(qt)
         return _bm25_rank(tf, dfreq, dl, scalars, k)
 
     def _query_parts(
-        self, query_terms: DataFrame
+        self, qt: DataFrame
     ) -> tuple[DataFrame, DataFrame, DataFrame, tuple[int, int]]:
         """The pruned per-index table reads behind ``query``: (tf,
         dfreq, dl, (n, tt)) for one index/segment, with tf keyed by
@@ -481,12 +488,14 @@ class BM25Index:
         Factored out so ``BM25SegmentSet`` can union them across
         segments before the shared ``_bm25_rank`` tail.
 
-        One collect of at most ``n_buckets`` rows (``_bucket_prune``)
-        prunes both scans; df then inner-joins the SAME broadcast query
-        table the postings join uses, so Spark builds the broadcast
-        once and no term list enters the plan."""
-        qt = F.broadcast(query_terms.select("query_id", "term"))
+        ``qt`` is the caller's (query_id, term) table, already pinned
+        once per call (segments share one pin). One shuffle-free
+        collect of its term buckets (``_bucket_prune``) prunes both
+        scans; df then inner-joins the SAME broadcast query table the
+        postings join uses, so Spark builds the broadcast once and no
+        term list enters the plan."""
         prune = self._bucket_prune(qt)
+        qt = F.broadcast(qt)
         tf = (
             self._rel("postings")
             .filter(prune)
@@ -511,19 +520,21 @@ class BM25Index:
 
     def _bucket_prune(self, qt: DataFrame):
         """The term_bucket partition filter for a (query_id, term)
-        table: one collect of its distinct non-NULL term buckets (at
-        most ``n_buckets`` rows). NULL terms match nothing, so their
-        bucket is never scanned. When every bucket is hit the filter
-        is the constant TRUE rather than a per-row isin."""
-        rows = (
-            qt.filter(F.col("term").isNotNull())
+        table: one map-only collect of its non-NULL term buckets (one
+        row per query-term row — broadcast-sized by the selective-
+        batch contract), deduped on the driver, so the collect needs
+        no shuffle. NULL terms match nothing, so their bucket is never
+        scanned. When every bucket is hit the filter is the constant
+        TRUE rather than a per-row isin."""
+        buckets = {
+            int(r.b)
+            for r in qt.filter(F.col("term").isNotNull())
             .select(F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).alias("b"))
-            .distinct()
             .collect()
-        )
-        if len(rows) >= self.n_buckets:
+        }
+        if len(buckets) >= self.n_buckets:
             return F.lit(True)
-        return F.col("term_bucket").isin(sorted(int(r.b) for r in rows))
+        return F.col("term_bucket").isin(sorted(buckets))
 
     def _scalars_nt(self) -> tuple[int, int]:
         """The 1-row corpus scalars (n, tt), collected ONCE per
@@ -797,7 +808,10 @@ class BM25SegmentSet:
         return self
 
     def query(self, query_terms: DataFrame, k: int = 10) -> DataFrame:
-        parts = [s._query_parts(query_terms) for s in self.segments]
+        """``BM25Index.query`` over the live set: the (query_id, term)
+        table is pinned once and every segment reads that one pin."""
+        qt = query_terms.select("query_id", "term").localCheckpoint(eager=True)
+        parts = [s._query_parts(qt) for s in self.segments]
         tf, dfr, dl, (n, tt) = parts[0]
         for tf2, dfr2, dl2, (n2, tt2) in parts[1:]:
             tf = tf.unionByName(tf2)
@@ -1377,7 +1391,10 @@ def rrf_fuse(
     query, ties by doc_id.
 
     Scale shape: inputs are already top-k-per-query (bounded); the
-    fuse is a union + one small groupBy + a per-query window.
+    fuse is a union partitioned once by query_id, then one small
+    groupBy and a per-query window that both reuse that partitioning
+    (one shuffle: the inputs are too small for a map-side combine to
+    pay for a second).
     """
     contrib = F.expr(f"cast({scale} div ({k_rrf} + rank) as bigint)")
     parts = [
@@ -1386,7 +1403,7 @@ def rrf_fuse(
     allc = parts[0]
     for p in parts[1:]:
         allc = allc.unionAll(p)
-    fused = allc.groupBy("query_id", "doc_id").agg(
+    fused = allc.repartition("query_id").groupBy("query_id", "doc_id").agg(
         F.count("*").cast("long").alias("n_sources"),
         F.sum("_c").cast("long").alias("rrf_score_fp"),
     )

@@ -909,24 +909,53 @@ def ivf_seed_candidates(embeddings: DataFrame, k: int, n: int,
     )
 
 
-def _assign_cells(df: DataFrame, centroids: DataFrame, idname: str,
+def _centroid_rows(centroids) -> list:
+    """(cell_id, cvec) centroid rows sorted by cell_id; a DataFrame is
+    collected (K ≈ √n rows — driver-tiny), a row list passes through."""
+    if isinstance(centroids, DataFrame):
+        centroids = centroids.collect()
+    return sorted(centroids, key=lambda r: int(r.cell_id))
+
+
+def _probe_cells_column(centroids: list, qvec, n_probe: int) -> F.Column:
+    """The ``n_probe`` nearest cell_ids as an array column over the
+    collected centroid rows — window-free, so it is map-only in batch
+    and legal on a streaming DataFrame. Order: desc affinity, ties to
+    the LOWEST cell_id (an asc sort on (-aff, cell_id) structs)."""
+    scored = F.array(
+        *[
+            F.struct(
+                (-_fx_dot(qvec, lit_doubles(r.cvec))).alias("neg"),
+                F.lit(int(r.cell_id)).alias("cell_id"),
+            )
+            for r in centroids
+        ]
+    )
+    return F.transform(
+        F.slice(F.array_sort(scored), 1, n_probe), lambda s: s["cell_id"]
+    )
+
+
+def _assign_cells(df: DataFrame, centroids, idname: str,
                   vec_col: str, n_probe: int = 1) -> DataFrame:
-    """Attach the ``n_probe`` nearest centroid ids to each vector.
+    """Attach the ``n_probe`` nearest centroid ids to each vector, one
+    output row per (vector, cell).
 
-    centroids: (cell_id, cvec) — small by construction (K ≈ √n).
+    centroids: (cell_id, cvec) — a DataFrame or its collected rows,
+    small by construction (K ≈ √n).
 
-    n_probe == 1 (the build/refine/ingest hot path) is MAP-ONLY
-    (r12): the centroids ride as literals (the kmeans-assignment
-    recipe) and the argmax is a greatest() over per-cell structs —
-    no 16× row fan-out, no per-vector window SHUFFLE of the corpus.
-    At 100 TB that turns every assignment pass into a pure scan.
-    Tie-break (max affinity, then LOWEST cell_id) matches the window
-    form exactly via the negated-cell struct field; _fx_dot is exact
-    integer, so the two paths are bit-identical (parity-pinned in
-    tests/test_similarity.py). n_probe > 1 keeps the broadcast-join
-    + window form."""
+    MAP-ONLY for every n_probe: the centroids ride as literals (the
+    kmeans-assignment recipe), so there is no 16× row fan-out and no
+    per-vector window SHUFFLE of the corpus — at 100 TB every
+    assignment pass is a pure scan. n_probe == 1 (the build/refine/
+    ingest hot path) is an argmax: a greatest() over per-cell structs
+    whose negated-cell field breaks ties to the LOWEST cell_id.
+    n_probe > 1 explodes ``_probe_cells_column``'s sorted top-n_probe
+    array, with the same tie-break. _fx_dot is exact integer, so both
+    forms pick exactly the cells a (max affinity, lowest cell_id)
+    ranking picks (parity-pinned in tests/test_similarity.py)."""
+    rows = _centroid_rows(centroids)
     if n_probe == 1:
-        rows = sorted(centroids.collect(), key=lambda r: int(r.cell_id))
         structs = [
             F.struct(
                 _fx_dot(
@@ -943,19 +972,9 @@ def _assign_cells(df: DataFrame, centroids: DataFrame, idname: str,
             F.col(vec_col),
             (-best["negc"]).cast("int").alias("cell_id"),
         )
-    scored = df.select(
-        F.col(idname), F.col(vec_col)
-    ).join(F.broadcast(centroids)).select(
-        idname,
-        vec_col,
-        "cell_id",
-        _fx_dot(F.col(vec_col), F.col("cvec")).alias("aff"),
-    )
-    w = Window.partitionBy(idname).orderBy(F.desc("aff"), F.asc("cell_id"))
-    return (
-        scored.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= n_probe)
-        .drop("_r", "aff")
+    cells = _probe_cells_column(rows, F.col(vec_col), n_probe)
+    return df.select(
+        F.col(idname), F.col(vec_col), F.explode(cells).alias("cell_id")
     )
 
 
@@ -1142,6 +1161,11 @@ class IVFIndex:
         self.spark = spark
         self.path = path
         self.centroids = spark.read.parquet(f"{path}/centroids")
+        # per-instance caches for ``query``: the centroids are frozen
+        # at build (``add`` assigns against them, never rewrites them)
+        # and every cells writer keeps the at-rest schema
+        self._cent_rows: list | None = None
+        self._cells_schema = None
         # cells probed by the last bounded-idempotency anti-join —
         # the observability hook the r10 verdict asked for (tests
         # assert a disjoint-id batch probes zero cells)
@@ -1958,9 +1982,7 @@ class IVFIndex:
         frame, never the corpus. Rows-only surface (IVF centroids are
         double means — not hash-portable); the oracle-checked twin is
         ``imi_cell_skew_audit`` over the PQ coarse cells."""
-        cents = sorted(
-            self.centroids.collect(), key=lambda r: int(r.cell_id)
-        )
+        cents = self._centroid_rows()
         pairs = [
             F.struct(
                 _fx_dot(
@@ -2010,6 +2032,25 @@ class IVFIndex:
             "cell_id", "n_vecs", "n_drifted", "skew_milli"
         )
 
+    def _centroid_rows(self) -> list:
+        """The centroid rows, collected once per instance."""
+        if self._cent_rows is None:
+            self._cent_rows = _centroid_rows(self.centroids)
+        return self._cent_rows
+
+    def _cells(self) -> DataFrame:
+        """The at-rest cells relation. Its schema is inferred once per
+        instance, so later reads run no schema-inference job; the file
+        listing stays per call, so cells appended by ``add`` are seen.
+        A listing with no part file (a reaped dir) is read without the
+        schema, so it fails as an unreadable index instead of serving
+        an empty corpus."""
+        cells = f"{self.path}/cells"
+        if self._cells_schema is None:
+            self._cells_schema = self.spark.read.parquet(cells).schema
+        rel = self.spark.read.schema(self._cells_schema).parquet(cells)
+        return rel if rel.inputFiles() else self.spark.read.parquet(cells)
+
     def query(
         self,
         queries: DataFrame,
@@ -2019,18 +2060,27 @@ class IVFIndex:
         vec_col: str = "embedding",
     ) -> DataFrame:
         """Same output contract as topk_cosine_ivf, but the corpus
-        side is the persisted, cell-partitioned index."""
+        side is the persisted, cell-partitioned index.
+
+        SELECTIVE-BATCH CONTRACT: the query table must fit in a
+        broadcast — its n_probe rows per query are collected for the
+        probe set and broadcast into the cell join, so a corpus-sized
+        query table does not fit this path (shard it, or use
+        ``topk_cosine_ivf``). Probe cells are assigned map-only, and
+        the assigned (query_id, qvec_, cell_id) rows are pinned once
+        per call: the probe-set collect and the broadcast both read
+        the pinned blocks, so the caller's lineage runs exactly once.
+        The centroid rows and the cells schema are cached per
+        instance."""
         query_cells = _assign_cells(
             queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec_")),
-            self.centroids,
+            self._centroid_rows(),
             "query_id",
             "qvec_",
             n_probe=n_probe,
-        )
-        probed = [r.cell_id for r in query_cells.select("cell_id").distinct().collect()]
-        corpus_cells = self.spark.read.parquet(f"{self.path}/cells").filter(
-            F.col("cell_id").isin(probed)
-        )
+        ).localCheckpoint(eager=True)
+        probed = sorted({r.cell_id for r in query_cells.select("cell_id").collect()})
+        corpus_cells = self._cells().filter(F.col("cell_id").isin(probed))
         tomb = self._tombstones()
         if tomb is not None:
             # delete() contract: tombstoned vectors vanish from
@@ -2047,15 +2097,21 @@ def _ivf_rank(corpus_cells: DataFrame, query_cells: DataFrame, k: int) -> DataFr
     cvec_) corpus rows with the broadcast (cell_id, query_id, qvec_)
     probe table, score exact cosine, take top-k per query. Used by
     both ``topk_cosine_ivf`` and the at-rest ``IVFIndex.query``, so
-    the two stay in lockstep (the retrieval._bm25_rank rule)."""
+    the two stay in lockstep (the retrieval._bm25_rank rule). The
+    candidates are partitioned once by query_id, so the distinct and
+    the top-k window share that one shuffle."""
     cand = corpus_cells.join(F.broadcast(query_cells), "cell_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine_fx(F.col("qvec_"), F.col("cvec_")).alias("score"),
-    ).distinct()
+    scored = (
+        cand.select(
+            "query_id",
+            "neighbor_id",
+            cosine_fx(F.col("qvec_"), F.col("cvec_")).alias("score"),
+        )
+        .repartition("query_id")
+        .distinct()
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -2082,7 +2138,9 @@ def topk_cosine_ivf(
     cell_id); the query join is an equi-join on cell_id — candidates
     ≈ corpus × n_probe / n_cells, never corpus².
     """
-    cents = ivf_centroids(embeddings, k=n_cells, id_col=id_col, vec_col=vec_col)
+    cents = _centroid_rows(
+        ivf_centroids(embeddings, k=n_cells, id_col=id_col, vec_col=vec_col)
+    )
     corpus_cells = _assign_cells(
         embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec_")),
         cents, "neighbor_id", "cvec_", n_probe=1,

@@ -636,29 +636,6 @@ def streaming_corpus_prep(
 # ---- streaming ANN serve over a persisted IVF index ----------------------
 
 
-def _probe_cells_column(centroids: list, qvec, n_probe: int):
-    """n_probe nearest cell_ids as a pure column expression over the
-    (tiny, collected) centroid table — window-free, so it is legal on
-    a streaming DataFrame where ``_assign_cells``'s row_number is not.
-    Ordering matches the batch path exactly: desc affinity, asc
-    cell_id (encoded as an asc sort on (-aff, cell_id) structs)."""
-    from ..functions.vectors import lit_doubles
-    from ..operators.similarity import _fx_dot
-
-    scored = F.array(
-        *[
-            F.struct(
-                (-_fx_dot(qvec, lit_doubles(cvec))).alias("neg"),
-                F.lit(int(cid)).alias("cell_id"),
-            )
-            for cid, cvec in centroids
-        ]
-    )
-    return F.transform(
-        F.slice(F.array_sort(scored), 1, n_probe), lambda s: s["cell_id"]
-    )
-
-
 def streaming_ann_topk(
     index,
     query_stream: DataFrame,
@@ -670,8 +647,9 @@ def streaming_ann_topk(
     """X3 streaming: serve ANN queries from an unbounded query stream
     against a persisted ``IVFIndex`` — index once, answer forever.
 
-    Shape: probe-cell assignment is a map-side expression over the
-    collected centroids (K ≈ √n rows — driver-tiny by construction);
+    Shape: probe-cell assignment is the map-side expression
+    ``IVFIndex.query`` uses (``similarity._probe_cells_column``) over
+    the collected centroids (K ≈ √n rows — driver-tiny by construction);
     the only join is stream-STATIC on cell_id (no stream-stream state);
     per-query top-k is a streaming groupBy whose candidates all arrive
     in the query's own micro-batch, folded to one sorted array (window
@@ -683,13 +661,14 @@ def streaming_ann_topk(
     For per-batch partition pruning of the static side, use
     ``serve_ann_foreach_batch`` instead.
     """
-    from ..operators.similarity import cosine_fx
+    from ..operators.similarity import _probe_cells_column, cosine_fx
 
-    cents = [(r["cell_id"], list(r["cvec"])) for r in index.centroids.collect()]
     qc = query_stream.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec_"),
-        _probe_cells_column(cents, F.col(vec_col), n_probe).alias("_cells"),
+        _probe_cells_column(
+            index._centroid_rows(), F.col(vec_col), n_probe
+        ).alias("_cells"),
     ).select("query_id", "qvec_", F.explode("_cells").alias("cell_id"))
     corpus = index.spark.read.parquet(f"{index.path}/cells")
     scored = (
@@ -727,13 +706,16 @@ def serve_ann_foreach_batch(
     k: int = 5,
     n_probe: int = 6,
 ):
-    """X3 streaming, foreachBatch form: every micro-batch of queries
-    runs through ``IVFIndex.query`` — which collects the batch's probe
-    set and filters the cell-partitioned parquet on it, so the static
-    side gets REAL partition pruning per batch (the stream-static join
-    in ``streaming_ann_topk`` cannot prune — it reads whichever cells
-    the join touches). ``sink(result_df, batch_id)`` receives the
-    ranked (query_id, neighbor_id, score, rank) rows per batch.
+    """X3 streaming, foreachBatch form: every non-empty micro-batch
+    of queries runs through ``IVFIndex.query``, which assigns probe
+    cells map-only, pins the assigned rows once, collects the batch's
+    probe set from the pinned blocks and filters the cell-partitioned
+    parquet on it. The static side therefore gets REAL partition
+    pruning per batch (the stream-static join in
+    ``streaming_ann_topk`` cannot prune — it reads whichever cells the
+    join touches), and the query side is read once for the emptiness
+    check and once for the pin. ``sink(result_df, batch_id)`` receives
+    the ranked (query_id, neighbor_id, score, rank) rows per batch.
     Returns the started-query builder (caller starts/awaits)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:

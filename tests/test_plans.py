@@ -744,3 +744,36 @@ def test_discounted_returns_single_user_shuffle(spark):
     plan = plans.explain_str(df, "simple")
     assert plan.count("Exchange hashpartitioning") == 1
     assert "CartesianProduct" not in plan
+
+
+def test_rrf_fuse_one_shuffle(spark):
+    """The fuse partitions its union once by query_id: the per-doc
+    aggregate and the per-query top-k window share that one shuffle."""
+    from mrgo_spark.operators import retrieval
+
+    schema = "query_id long, doc_id long, rank int"
+    lex = spark.createDataFrame([(1, 10, 1), (1, 11, 2)], schema)
+    sem = spark.createDataFrame([(1, 11, 1), (2, 13, 1)], schema)
+    plan = plans.explain_str(retrieval.rrf_fuse([lex, sem], k=10), "simple")
+    assert plan.count("Exchange hashpartitioning") == 1
+
+
+def test_ivf_rank_tail_one_shuffle(spark):
+    """The IVF scoring tail partitions its candidates once by
+    query_id: the distinct and the top-k window share that shuffle,
+    and the probe join stays a broadcast."""
+    from mrgo_spark.operators import similarity
+
+    corpus = spark.createDataFrame(
+        [(0, 1, [1.0, 0.0]), (1, 2, [0.0, 1.0])],
+        "cell_id int, neighbor_id long, cvec_ array<double>",
+    )
+    probes = spark.createDataFrame(
+        [(0, 9, [1.0, 0.5]), (1, 9, [1.0, 0.5])],
+        "cell_id int, query_id long, qvec_ array<double>",
+    )
+    ranked = similarity._ivf_rank(corpus, probes, k=5)
+    plan = plans.explain_str(ranked, "simple")
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert "BroadcastHashJoin" in plan
+    assert [r.neighbor_id for r in ranked.orderBy("rank").collect()] == [1, 2]

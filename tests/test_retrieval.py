@@ -1003,3 +1003,50 @@ def test_query_champions_rebuilds_partial_dir(spark, tmp_path):
     )
     got = sorted(map(tuple, idx.query_champions(q, k=5).collect()))
     assert got == want
+
+
+def _counted_frame(spark, rows, schema):
+    """``rows`` as a frame filtered through a Python UDF that bumps an
+    accumulator once per evaluated row — the filter runs whichever
+    columns a consumer reads."""
+    acc = spark.sparkContext.accumulator(0)
+
+    def bump(x):
+        acc.add(1)
+        return True
+
+    df = spark.createDataFrame(rows, schema)
+    return df.filter(F.udf(bump, "boolean")(df.columns[0])), acc
+
+
+def test_serve_paths_evaluate_query_frame_once(spark, tmp_path):
+    """BM25Index.query, BM25SegmentSet.query and IVFIndex.query pin the
+    caller's query frame once per call: the prune or probe collect and
+    the broadcast join read the same pinned rows, so the frame's
+    lineage runs exactly once — the accumulator reads the row count,
+    not a multiple of it."""
+    from mrgo_spark.operators.similarity import IVFIndex
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    idx = retrieval.BM25Index.build(docs, str(tmp_path / "bm"), n_buckets=8)
+    sset = retrieval.BM25SegmentSet([
+        retrieval.BM25Index.build(
+            docs.filter(F.col("doc_id") % 2 == i), str(tmp_path / f"s{i}")
+        )
+        for i in range(2)
+    ])
+    terms = [(1, "the"), (1, "data"), (2, "of"), (2, None)]
+    for served in (idx, sset):
+        qt, acc = _counted_frame(spark, terms, "query_id long, term string")
+        assert served.query(qt, k=5).collect()
+        assert acc.value == len(terms)
+
+    emb = load_table(spark, SF, "embeddings")
+    ivf = IVFIndex.build(emb, str(tmp_path / "ivf"), n_cells=8)
+    qrows = [
+        (int(r.vec_id), [float(x) for x in r.embedding])
+        for r in emb.filter(F.col("vec_id") % 100 == 0).collect()
+    ]
+    qv, acc = _counted_frame(spark, qrows, "vec_id long, embedding array<double>")
+    got = ivf.query(qv, k=5, n_probe=3).collect()
+    assert got and acc.value == len(qrows)

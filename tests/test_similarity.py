@@ -889,10 +889,11 @@ def test_knn_label_eval_imi_pruned_shape(spark):
 
 
 def test_assign_cells_literal_path_matches_window_form(spark):
-    """r12 map-only assignment: the n_probe=1 literal-argmax fast
-    path must be bit-identical to the broadcast-join + window form
-    (max affinity, ties to the LOWEST cell_id), and its plan must
-    carry no Exchange (pure scan — the 100 TB win)."""
+    """Map-only assignment: every n_probe must pick exactly the cells
+    a (max affinity, ties to the LOWEST cell_id) ranking picks — the
+    n_probe=1 literal argmax and the n_probe > 1 sorted-array explode
+    alike, including n_probe above the cell count — and no plan may
+    carry an Exchange or a Window (pure scan — the 100 TB win)."""
     from mrgo_spark.operators import similarity as S
     from mrgo_spark.sources.tables import load_table
     from pyspark.sql import functions as F
@@ -922,3 +923,25 @@ def test_assign_cells_literal_path_matches_window_form(spark):
         cents, "neighbor_id", "cvec_", n_probe=1,
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "Window" not in plan
+    # n_probe > 1: the top n_probe cells by affinity desc, ties to the
+    # lowest cell_id, from the collected rows or the frame alike
+    vecs = emb.select("vec_id", "embedding").collect()
+    for n_probe in (2, 3, len(cl) + 1):
+        want = {
+            (r.vec_id, c)
+            for r in vecs
+            for _, c in sorted(
+                (-sum(round(float(x) * float(y) * S.FX)
+                      for x, y in zip(r.embedding, cv)), c)
+                for c, cv in cl
+            )[:n_probe]
+        }
+        for src in (cents, cents.collect()):
+            out = S._assign_cells(
+                emb.selectExpr("vec_id as neighbor_id", "embedding as cvec_"),
+                src, "neighbor_id", "cvec_", n_probe=n_probe,
+            )
+            rows = [(r.neighbor_id, r.cell_id) for r in out.collect()]
+            assert len(rows) == len(want) and set(rows) == want
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan and "Window" not in plan
