@@ -19,11 +19,11 @@ Portability design (the tfidf/zipf lessons applied to BM25):
 
 - idf uses the rational BM25 form (N − df + ½)/(df + ½) =
   (2N − 2df + 1)/(2df + 1) — same monotone ranking as the log form,
-  zero libm (the r2 tfidf finding: ln() is not hash-safe).
+  zero libm (ln() is not hash-safe across libm builds).
 
 - A float Σ over query terms would be order-dependent; instead each
   per-term score becomes fixed-point via one truncating division
-  (products in decimal(38,0) — the r6 overflow rule), and the
+  (products in decimal(38,0), so they cannot overflow), and the
   per-document score is an exact integer SUM.
 
 Scale shape: query term tables are broadcast-sized; corpus-side work
@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import ascii_tokens
+from ..sources.tables import _append_tombstones, _read_tombstones
 
 BM25_SCALE = 1_000_000  # fixed-point scale for per-term scores
 RRF_K = 60              # the standard RRF damping constant
@@ -71,8 +72,8 @@ def bm25_topk(
     # dl is consumed twice (the scalars agg and the score join) and tf
     # three ways (score join, df derivation) — and Catalyst will NOT
     # reuse exchanges across consumers with different pruned
-    # projections (the r3/r4 no-exchange-reuse class: measured here as
-    # the corpus tokenize running once per consumer). Both frames are
+    # projections (measured here as the corpus tokenize running once
+    # per consumer). Both frames are
     # checkpoint-cheap — dl is two longs per doc, tf is candidate-
     # sized — so lazy localCheckpoints pin the corpus work to exactly
     # TWO passes (one tokenize+explode, one tokenize count) at any
@@ -135,9 +136,9 @@ def _bm25_rank(
     base = tf.join(F.broadcast(dfreq), ["query_id", "term"]).join(dl, "doc_id")
     if isinstance(scalars, tuple):
         # (n, tt) known driver-side (the index serve path collects the
-        # 1-row scalars table once per instance — r13 optimization
-        # round): inline them as literal columns instead of a
-        # broadcast crossJoin, removing a scan + BroadcastExchange +
+        # 1-row scalars table once per instance): inline them as
+        # literal columns instead of a broadcast crossJoin, removing a
+        # scan + BroadcastExchange +
         # BroadcastNestedLoopJoin from every serve plan. Values are
         # the exact longs the table holds, so scores are unchanged.
         n_lit, tt_lit = scalars
@@ -267,21 +268,75 @@ def champion_lists_from_docs(
     return champion_lists(tf, dfreq, dl, scalars, c)
 
 
+def _term_bucket(n_buckets: int) -> F.Column:
+    """The at-rest bucket of column ``term``: the partition key of the
+    postings, df and champion tables and the key every prune
+    recomputes. The bucket choice affects which files are READ, never
+    a result."""
+    return F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+
+
+def _write_segment(
+    postings: DataFrame, dl: DataFrame, path: str, n_buckets: int
+) -> None:
+    """Write one BM25 segment at ``path`` — the one writer of the
+    at-rest layout behind ``BM25Index.build``, ``merge`` and
+    ``expunge_deletes``, which differ only in the rows they pass.
+
+    ``postings`` is (term, doc_id, tf) and ``dl`` is (doc_id, dl).
+    Both are pinned with a lazy localCheckpoint, so each is computed
+    once however many tables read it. Tables written:
+
+    - ``postings``: (term, doc_id, tf), partitioned by ``term_bucket``;
+    - ``df``: (term, df) re-counted from those postings, same buckets —
+      never summed from stored df tables, so a segment written from
+      tombstone-filtered rows has exact stats;
+    - ``dl``: (doc_id, dl);
+    - ``scalars``: the 1-row (n, tt) totals, 0 rather than NULL for an
+      empty segment;
+    - ``meta``: (n_buckets)."""
+    spark = postings.sparkSession
+    post = (
+        postings.select("term", "doc_id", "tf")
+        .withColumn("term_bucket", _term_bucket(n_buckets))
+        .localCheckpoint(eager=False)
+    )
+    (
+        post.repartition("term_bucket")
+        .write.mode("overwrite")
+        .partitionBy("term_bucket")
+        .parquet(f"{path}/postings")
+    )
+    (
+        post.groupBy("term_bucket", "term")
+        .agg(F.count("*").cast("long").alias("df"))
+        .repartition("term_bucket")
+        .write.mode("overwrite")
+        .partitionBy("term_bucket")
+        .parquet(f"{path}/df")
+    )
+    dl = dl.select("doc_id", "dl").localCheckpoint(eager=False)
+    dl.write.mode("overwrite").parquet(f"{path}/dl")
+    dl.agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("dl").cast("long").alias("tt"),
+    ).fillna(0).write.mode("overwrite").parquet(f"{path}/scalars")
+    spark.createDataFrame([(int(n_buckets),)], "n_buckets int").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/meta")
+
+
 class BM25Index:
     """Persisted BM25 corpus statistics — the retrieval analog of
-    ``similarity.IVFIndex`` (VERDICT_r6 #3): a retrieval SERVICE over
-    a static corpus should not re-tokenize it per query batch.
+    ``similarity.IVFIndex``: a retrieval SERVICE over a static corpus
+    should not re-tokenize it per query batch.
 
-    ``build`` tokenizes the corpus ONCE and writes four tables:
-
-    - ``postings``: (term, doc_id, tf), partitioned by
-      ``term_bucket = pmod(xxhash64(term), n_buckets)`` — a query
-      batch reads only the partition directories its terms hash into
-      (partition pruning, the IVFIndex cell idiom; the bucket choice
-      affects which files are READ, never the result).
-    - ``df``: (term, df) with the same bucketing.
-    - ``dl``: (doc_id, dl) — two longs per doc.
-    - ``scalars``: the 1-row (n, tt) corpus totals.
+    ``build`` tokenizes the corpus ONCE and writes the segment layout
+    of ``_write_segment``: ``postings`` (term, doc_id, tf) and ``df``
+    (term, df), both partitioned by ``_term_bucket`` so a query batch
+    reads only the partition directories its terms hash into (the
+    IVFIndex cell idiom); ``dl`` (doc_id, dl); the 1-row ``scalars``
+    (n, tt); ``meta``.
 
     ``query`` serves any query batch with ZERO corpus passes and one
     path: the (query_id, term) table is pinned once per call, a
@@ -301,14 +356,14 @@ class BM25Index:
         self.path = path
         meta = spark.read.parquet(f"{path}/meta").collect()[0]
         self.n_buckets = int(meta.n_buckets)
-        # Analyzed-relation cache (r13 optimization round): the
-        # at-rest tables of a given path are IMMUTABLE — delete()
-        # appends tombstones (read fresh per query, never cached
-        # here), expunge/merge write NEW paths — so repeated query()
-        # calls can reuse one analyzed relation per table instead of
-        # paying file listing + schema inference per call (measured:
-        # steady serve 1.3 s → 0.7 s at sf0.1; partition pruning is
-        # a per-plan filter, unaffected by relation reuse).
+        # Analyzed-relation cache: the at-rest tables of a given path
+        # are IMMUTABLE — delete() appends tombstones (read fresh per
+        # query, never cached here), expunge/merge write NEW paths —
+        # so repeated query() calls can reuse one analyzed relation
+        # per table instead of paying file listing + schema inference
+        # per call (measured: steady serve 1.3 s → 0.7 s at sf0.1;
+        # partition pruning is a per-plan filter, unaffected by
+        # relation reuse).
         self._rels: dict[str, DataFrame] = {}
 
     def _rel(self, name: str) -> DataFrame:
@@ -330,92 +385,45 @@ class BM25Index:
         text_col: str = "text",
         id_col: str = "doc_id",
     ) -> "BM25Index":
-        spark = documents.sparkSession
         toks = ascii_tokens(text_col, lowercase=True)
         dl = documents.select(
             F.col(id_col).alias("doc_id"), F.size(toks).cast("long").alias("dl")
-        ).localCheckpoint(eager=False)
-        dl.write.mode("overwrite").parquet(f"{path}/dl")
-        dl.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("dl").cast("long").alias("tt"),
-        ).write.mode("overwrite").parquet(f"{path}/scalars")
-        ex = documents.select(
-            F.col(id_col).alias("doc_id"), F.explode(toks).alias("term")
         )
-        postings = ex.groupBy("term", "doc_id").agg(
-            F.count("*").cast("long").alias("tf")
-        ).withColumn(
-            "term_bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-        ).localCheckpoint(eager=False)
-        (
-            postings.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/postings")
+        postings = (
+            documents.select(
+                F.col(id_col).alias("doc_id"), F.explode(toks).alias("term")
+            )
+            .groupBy("term", "doc_id")
+            .agg(F.count("*").cast("long").alias("tf"))
         )
-        (
-            postings.groupBy("term_bucket", "term")
-            .agg(F.count("*").cast("long").alias("df"))
-            .repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/df")
-        )
-        spark.createDataFrame(
-            [(int(n_buckets),)], "n_buckets int"
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return BM25Index(spark, path)
+        _write_segment(postings, dl, path, n_buckets)
+        return BM25Index(documents.sparkSession, path)
 
     @staticmethod
     def merge(a: "BM25Index", b: "BM25Index", path: str) -> "BM25Index":
         """Segment merge for incremental ingestion (the Lucene story):
         given indexes over two DISJOINT document sets, produce the
-        index of the union WITHOUT touching any document text —
-        postings and dl union (minus each side's tombstones — merge
-        is where deletes get APPLIED, r12), df re-counted from the
-        retained postings, scalars re-summed from the retained dl.
+        index of the union WITHOUT touching any document text — the
+        union of both sides' live tables (``_live_tables``: merge is
+        where deletes get APPLIED) handed to ``_write_segment``.
         merge(build(A), build(B)) == build(A ∪ B) exactly, and
         merge(delete(build(A), X), build(B)) == build((A−X) ∪ B)
         (both parity-pinned in tests/test_retrieval.py), so a 100 TB
-        corpus
-        ingests as per-batch builds + metadata-sized merges; only the
-        bucketed stats tables are ever rewritten, never the corpus.
+        corpus ingests as per-batch builds + metadata-sized merges;
+        only the bucketed stats tables are ever rewritten, never the
+        corpus.
 
         Caller contract: doc sets disjoint (same-doc postings in both
-        would double-count tf). The contract is CHECKED, not just
-        documented (ADVICE r7): the two dl tables are joined on
-        doc_id BEFORE anything is written — an overlap silently
-        corrupts every downstream score, so it fails loudly here,
-        and failing FIRST means a rejected merge leaves no partial
-        index at ``path`` (r8 review finding: the original post-write
-        check stranded postings/df/dl with no scalars/meta). One
-        join-count over the 2-longs-per-doc dl tables (metadata-sized
-        next to the corpus; at ingest cadence it rides the merge
-        job). Bucket counts may differ — terms are re-bucketed to
-        ``a``'s n_buckets."""
-        spark, nb = a.spark, a.n_buckets
-
-        def side(idx: "BM25Index"):
-            # merge is the moment deletes are APPLIED (the Lucene
-            # story, r12): each side's postings/dl drop its own
-            # tombstoned docs here, so the merged segment is born
-            # expunged with exact stats and no tombstones table
-            post = spark.read.parquet(f"{idx.path}/postings")
-            dl = spark.read.parquet(f"{idx.path}/dl")
-            tomb = idx._tombstones()
-            if tomb is not None:
-                tomb = F.broadcast(tomb)
-                post = post.join(tomb, "doc_id", "left_anti").select(
-                    "term", "doc_id", "tf", "term_bucket"
-                )
-                dl = dl.join(tomb, "doc_id", "left_anti").select(
-                    "doc_id", "dl"
-                )
-            return post, dl
-
-        post_a, dl_a = side(a)
-        post_b, dl_b = side(b)
+        would double-count tf). The contract is CHECKED: the two live
+        dl tables are joined on doc_id BEFORE anything is written — an
+        overlap silently corrupts every downstream score, so it fails
+        loudly here, and failing first means a rejected merge leaves
+        no partial index at ``path``. One join-count over the
+        2-longs-per-doc dl tables (metadata-sized next to the corpus).
+        Bucket counts may differ — terms are re-bucketed to ``a``'s
+        n_buckets."""
+        post_a, dl_a = a._live_tables()
+        post_b, dl_b = b._live_tables()
         overlap = (
             dl_a.select("doc_id").join(dl_b.select("doc_id"), "doc_id").count()
         )
@@ -425,40 +433,31 @@ class BM25Index:
                 f" doc_ids) — merging would double-count tf/df/n/tt;"
                 f" deduplicate upstream or rebuild instead"
             )
-        rebucket = F.pmod(F.xxhash64("term"), F.lit(nb)).cast("int")
-        post = (
-            post_a.unionByName(post_b)
-            .withColumn("term_bucket", rebucket)
-            .localCheckpoint(eager=False)
+        _write_segment(
+            post_a.unionByName(post_b),
+            dl_a.unionByName(dl_b),
+            path,
+            a.n_buckets,
         )
-        (
-            post.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/postings")
+        return BM25Index(a.spark, path)
+
+    def _live_tables(self) -> tuple[DataFrame, DataFrame]:
+        """(postings (term, doc_id, tf), dl (doc_id, dl)) at rest minus
+        the tombstoned docs — the rows ``merge`` and
+        ``expunge_deletes`` rewrite and ``build_champions`` ranks. The
+        anti-join runs only when tombstones exist."""
+        tomb = self._tombstones()
+
+        def live(name: str, cols: list[str]) -> DataFrame:
+            t = self.spark.read.parquet(f"{self.path}/{name}").select(*cols)
+            if tomb is None:
+                return t
+            # the USING join puts doc_id first; restore the layout
+            return t.join(F.broadcast(tomb), "doc_id", "left_anti").select(*cols)
+
+        return live("postings", ["term", "doc_id", "tf"]), live(
+            "dl", ["doc_id", "dl"]
         )
-        # df re-counted from the retained postings (NOT summed from
-        # the stored df tables): with tombstones applied the stored
-        # df is stale by design, and the recount is exactly build()'s
-        # derivation, preserving merge == build parity
-        (
-            post.groupBy("term_bucket", "term")
-            .agg(F.count("*").cast("long").alias("df"))
-            .repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/df")
-        )
-        dl = dl_a.unionByName(dl_b).localCheckpoint(eager=False)
-        dl.write.mode("overwrite").parquet(f"{path}/dl")
-        dl.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("dl").cast("long").alias("tt"),
-        ).fillna(0).write.mode("overwrite").parquet(f"{path}/scalars")
-        spark.createDataFrame([(int(nb),)], "n_buckets int").write.mode(
-            "overwrite"
-        ).parquet(f"{path}/meta")
-        return BM25Index(spark, path)
 
     def query(self, query_terms: DataFrame, k: int = 10) -> DataFrame:
         """Same output contract as ``bm25_topk`` for the same
@@ -529,7 +528,7 @@ class BM25Index:
         buckets = {
             int(r.b)
             for r in qt.filter(F.col("term").isNotNull())
-            .select(F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).alias("b"))
+            .select(_term_bucket(self.n_buckets).alias("b"))
             .collect()
         }
         if len(buckets) >= self.n_buckets:
@@ -538,23 +537,23 @@ class BM25Index:
 
     def _scalars_nt(self) -> tuple[int, int]:
         """The 1-row corpus scalars (n, tt), collected ONCE per
-        instance and inlined as literals by ``_bm25_rank`` (r13
-        optimization round). Safe for the same reason as the analyzed-
-        relation cache: the scalars table of a given path is immutable
-        (delete() leaves stats stale BY CONTRACT until expunge/merge,
-        which write new paths)."""
+        instance and inlined as literals by ``_bm25_rank``. Safe for
+        the same reason as the analyzed-relation cache: the scalars
+        table of a given path is immutable (delete() leaves stats
+        stale BY CONTRACT until expunge/merge, which write new
+        paths)."""
         got = getattr(self, "_scalars_cache", None)
         if got is None:
             row = self._rel("scalars").collect()[0]
-            # `or 0`: build() fillna(0)s its scalars write, but an
-            # index written by an older build could carry NULLs for a
-            # 0-doc corpus — degrade to the empty result, not a
-            # TypeError at plan construction (ADVICE_r13)
+            # `or 0`: _write_segment fillna(0)s its scalars write, but
+            # an index written by an older build could carry NULLs for
+            # a 0-doc corpus — degrade to the empty result, not a
+            # TypeError at plan construction
             got = (int(row.n or 0), int(row.tt or 0))
             self._scalars_cache = got
         return got
 
-    # ---- champion lists (r13): impact-ordered serving ----
+    # ---- champion lists: impact-ordered serving ----
 
     def build_champions(self, c: int = CHAMPION_C) -> str:
         """Materialize per-term champion lists (``champion_lists``)
@@ -565,27 +564,20 @@ class BM25Index:
         query batch (the build/serve split the index itself uses).
         Idempotent overwrite; returns the table path.
 
-        Tombstones are applied at BUILD time (r13 review finding):
-        without the anti-join, deleting a common term's entire top-c
-        would leave its champion list 100% tombstoned — the serve
-        anti-join would then surface ZERO candidates for the term
-        while live lower-scoring postings exist. With it, a rebuild
-        after deletes restores full candidate lists. Stats (df/dl/
-        n/tt) inside the contributions still count tombstoned docs
-        until ``expunge_deletes`` rewrites the segment — expunge,
+        Tombstones are applied at BUILD time (the rows come from
+        ``_live_tables``): without that, deleting a common term's
+        entire top-c would leave its champion list 100% tombstoned —
+        the serve anti-join would then surface ZERO candidates for the
+        term while live lower-scoring postings exist. With it, a
+        rebuild after deletes restores full candidate lists. Stats
+        (df/n/tt) inside the contributions still count tombstoned
+        docs until ``expunge_deletes`` rewrites the segment — expunge,
         not rebuild, is the stats refresh (the Lucene story)."""
-        post = self.spark.read.parquet(f"{self.path}/postings").select(
-            "term", "doc_id", "tf"
-        )
-        tomb = self._tombstones()
-        if tomb is not None:
-            post = post.join(F.broadcast(tomb), "doc_id", "left_anti")
+        post, dl = self._live_tables()
         dfreq = self.spark.read.parquet(f"{self.path}/df").select("term", "df")
-        dl = self.spark.read.parquet(f"{self.path}/dl")
         scalars = self.spark.read.parquet(f"{self.path}/scalars")
         ch = champion_lists(post, dfreq, dl, scalars, c).withColumn(
-            "term_bucket",
-            F.pmod(F.xxhash64("term"), F.lit(self.n_buckets)).cast("int"),
+            "term_bucket", _term_bucket(self.n_buckets)
         )
         out = f"{self.path}/champions_c{c}"
         (
@@ -608,19 +600,22 @@ class BM25Index:
         buckets — and unlike ``query``, the pruned partitions hold
         ≤ c rows per term, so a stopword-heavy batch reads c·|terms|
         rows instead of its full posting lists. Tombstoned docs are
-        anti-joined out (the ``query`` delete contract).
+        anti-joined out (the ``query`` delete contract). The
+        (query_id, term) table is pinned once per call, as in
+        ``query``: the prune collect and the champion join read the
+        same rows.
 
         The on-demand check requires the _SUCCESS marker, not just
-        the directory (r13 review finding): a /tmp reaper can empty
-        the dir, and a crashed overwrite leaves a partial one —
-        either way the healthy index rebuilds the table in one call
-        instead of serving a partial scan or failing the entry."""
+        the directory: a /tmp reaper can empty the dir, and a crashed
+        overwrite leaves a partial one — either way the healthy index
+        rebuilds the table in one call instead of serving a partial
+        scan or failing the entry."""
         import os
 
         out = f"{self.path}/champions_c{c}"
         if not os.path.isfile(f"{out}/_SUCCESS"):
             self.build_champions(c)
-        qt = query_terms.select("query_id", "term")
+        qt = query_terms.select("query_id", "term").localCheckpoint(eager=True)
         ch = (
             self._rel(f"champions_c{c}")
             .filter(self._bucket_prune(qt))
@@ -631,7 +626,7 @@ class BM25Index:
             ch = ch.join(F.broadcast(tomb), "doc_id", "left_anti")
         return bm25_champion_topk(ch, qt, k)
 
-    # ---- deletes (r12): the third CRUD leg next to merge/tiering ----
+    # ---- deletes: the third CRUD leg next to merge/tiering ----
 
     def delete(self, doc_ids) -> "BM25Index":
         """Tombstone deletion — the Lucene semantics, stated plainly:
@@ -643,101 +638,44 @@ class BM25Index:
         bounded, monotone, and exactly what every Lucene deployment
         serves between merges; callers needing fresh stats expunge.
         Accepts a list of ids or a 1-column DataFrame; duplicate and
-        unknown ids are harmless (the filter is an anti-join).
-        Single-writer, like merge/ingestion (the workdir contract)."""
-        if not isinstance(doc_ids, DataFrame):
-            doc_ids = self.spark.createDataFrame(
-                [(int(d),) for d in doc_ids], "doc_id long"
-            )
-        (
-            doc_ids.select(F.col("doc_id").cast("long"))
-            .distinct()
-            .write.mode("append")
-            .parquet(f"{self.path}/tombstones")
-        )
+        unknown ids are harmless (the store is
+        ``sources.tables._append_tombstones``). Single-writer, like
+        merge/ingestion (the workdir contract)."""
+        _append_tombstones(self.spark, self.path, doc_ids, "doc_id")
         return self
 
     def _tombstones(self) -> DataFrame | None:
-        """None iff no deletes were ever recorded (no tombstones dir).
-        A dir that EXISTS but fails to read PROPAGATES — treating a
-        corrupt/unreadable tombstones table as 'no deletes' would
-        resurrect deleted docs in every query (ADVICE r12; the IVF
-        twin has the identical contract)."""
-        import os
-
-        tdir = f"{self.path}/tombstones"
-        if not os.path.isdir(tdir):
-            return None  # no deletes yet
-        t = self.spark.read.parquet(tdir)
-        return t.select("doc_id").distinct()
+        """The deleted doc_ids, or None when there are none — read
+        semantics of ``sources.tables._read_tombstones``."""
+        return _read_tombstones(self.spark, self.path, "doc_id")
 
     def expunge_deletes(self, path: str) -> "BM25Index":
-        """Rewrite the index WITHOUT the tombstoned docs, with exact
-        recomputed stats: postings/dl drop the tombstoned rows, df is
-        re-counted from the retained postings and scalars re-summed
-        from the retained dl — so expunge(delete(build(A∪B), B))
-        equals build(A) bit-for-bit (parity-pinned in tests). Writes
-        a fresh segment at ``path`` (never in place — the IVF
-        compaction crash-window lesson; callers flip their manifest
-        the way tiered ingestion does) with NO tombstones table."""
-        spark = self.spark
-        tomb = self._tombstones()
-        if tomb is None:
-            tomb = spark.createDataFrame([], "doc_id long")
-        tomb = F.broadcast(tomb)
-        post = (
-            spark.read.parquet(f"{self.path}/postings")
-            .join(tomb, "doc_id", "left_anti")
-            # the join reorders columns (doc_id first); restore the
-            # build layout so expunge == build is bit-identical
-            .select("term", "doc_id", "tf", "term_bucket")
-            .localCheckpoint(eager=False)
-        )
-        (
-            post.repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/postings")
-        )
-        (
-            post.groupBy("term_bucket", "term")
-            .agg(F.count("*").cast("long").alias("df"))
-            .repartition("term_bucket")
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(f"{path}/df")
-        )
-        dl = (
-            spark.read.parquet(f"{self.path}/dl")
-            .join(tomb, "doc_id", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        dl.write.mode("overwrite").parquet(f"{path}/dl")
-        dl.agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("dl").cast("long").alias("tt"),
-        ).fillna(0).write.mode("overwrite").parquet(f"{path}/scalars")
-        spark.createDataFrame(
-            [(int(self.n_buckets),)], "n_buckets int"
-        ).write.mode("overwrite").parquet(f"{path}/meta")
-        return BM25Index(spark, path)
+        """Rewrite the index WITHOUT the tombstoned docs: the live
+        tables (``_live_tables``) through ``_write_segment``, so stats
+        are exact and expunge(delete(build(A∪B), B)) equals build(A)
+        bit-for-bit (parity-pinned in tests). Writes a fresh segment
+        at ``path`` (never in place — the IVF compaction crash-window
+        lesson; callers flip their manifest the way tiered ingestion
+        does) with NO tombstones table."""
+        post, dl = self._live_tables()
+        _write_segment(post, dl, path, self.n_buckets)
+        return BM25Index(self.spark, path)
 
     def n_docs(self) -> int:
-        """Corpus size at rest (one 1-row scalars read) — the tier key
-        for tiered segment merging. Deliberately INCLUDES tombstoned
-        docs (stats-at-rest, the delete() contract): tier sizes track
-        bytes on disk, which deletes don't shrink until expunge."""
-        return int(
-            self.spark.read.parquet(f"{self.path}/scalars").collect()[0].n
-        )
+        """Corpus size at rest — the tier key for tiered segment
+        merging, read from the cached scalars. Deliberately INCLUDES
+        tombstoned docs (stats-at-rest, the delete() contract): tier
+        sizes track bytes on disk, which deletes don't shrink until
+        expunge."""
+        return self._scalars_nt()[0]
 
 
 class BM25SegmentSet:
     """A SET of disjoint BM25Index segments served as one logical
-    index — the Lucene segment story (VERDICT_r9 #1): tiered ingestion
-    keeps ≤1 segment per size tier instead of folding every batch into
-    one accumulated index, so merge I/O over B batches is
-    O(index·log B), not O(index·B).
+    index — the Lucene segment story: tiered ingestion keeps ≤1
+    segment per size tier instead of folding every batch into one
+    accumulated index, so merge I/O over B batches is O(index·log B),
+    not O(index·B).
 
     ``query`` unions the per-segment pruned reads (each segment
     prunes to the query terms' buckets with its OWN n_buckets), sums
@@ -769,8 +707,8 @@ class BM25SegmentSet:
 
     def doc_ids(self) -> DataFrame:
         """Union of LIVE doc_ids — at rest minus each segment's
-        tombstones (r12): this feeds the ingestion overlap guard, and
-        a deleted doc must be re-ingestable (the merge that later
+        tombstones: this feeds the ingestion overlap guard, and a
+        deleted doc must be re-ingestable (the merge that later
         consumes the tombstoned segment applies the delete, so the
         new copy never coexists with the old in any merged index)."""
         out = None
@@ -799,10 +737,7 @@ class BM25SegmentSet:
             F.col("doc_id").cast("long")
         ).distinct().localCheckpoint(eager=False)
         for s in self.segments:
-            mine = doc_ids.join(
-                s.spark.read.parquet(f"{s.path}/dl").select("doc_id"),
-                "doc_id",
-            )
+            mine = doc_ids.join(s._rel("dl").select("doc_id"), "doc_id")
             if mine.limit(1).count():
                 s.delete(mine)
         return self
@@ -920,7 +855,7 @@ def prf_expand_terms(
     # pushed below the Generate, so the old join-after shape ran the
     # candidate-term explode over the WHOLE corpus (and the static
     # planner happily broadcast the corpus-sized exploded side at
-    # fixture stats — the r13 plan audit). Semi-joining the raw docs
+    # fixture stats). Semi-joining the raw docs
     # against the broadcast feedback doc-set first makes the explode
     # genuinely feedback-sized at any corpus scale.
     dt = (
@@ -962,7 +897,7 @@ def proximity_min_span(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Proximity retrieval (r12): the minimal window containing ALL
+    """Proximity retrieval: the minimal window containing ALL
     of a query's terms — the ranking signal between BM25's bag of
     words (any positions) and phrase_search's exact adjacency
     (consecutive positions). Classic sloppy-phrase/proximity scoring:
@@ -1203,7 +1138,7 @@ def kendall_tau_eval(
     run_a: DataFrame,
     run_b: DataFrame,
 ) -> DataFrame:
-    """Kendall-τ rank correlation between two rankers (r13) — the
+    """Kendall-τ rank correlation between two rankers — the
     ranker-AGREEMENT eval the family lacked (hits@k/MRR/nDCG/BLEU all
     compare a run against graded truth; τ compares two runs with no
     truth at all — the standard diagnostic when swapping a ranking
@@ -1277,7 +1212,7 @@ def dcg_eval(
 ) -> DataFrame:
     """Graded-relevance ranking eval: DCG/nDCG with the DYADIC
     discount — the exactly-portable member of the nDCG family
-    (VERDICT_r8 #2; retrieval_eval deliberately omits true nDCG
+    (retrieval_eval deliberately omits true nDCG
     because log2 is not hash-portable across libm builds).
 
     Standard DCG discounts gain i by log2(rank_i + 1); here the
@@ -1329,7 +1264,7 @@ def dcg_eval(
     )
     # Duplicate (query_id, doc_id) truth rows would double-count dcg
     # contributions through the run join, inflate n_truth, and occupy
-    # two ideal positions — silently skewing ndcg (ADVICE r9). Enforced
+    # two ideal positions — silently skewing ndcg. Enforced
     # loudly like the rank/rel contracts; the window is over the
     # queries×k-bounded truth frame, never corpus-sized.
     w_dup = Window.partitionBy("query_id", "doc_id")

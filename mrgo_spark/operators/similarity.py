@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import lit_doubles, lit_longs
+from ..sources.tables import _append_tombstones, _read_tombstones
 
 FX = 1_000_000  # fixed-point scale for cross-engine determinism
 
@@ -58,7 +59,7 @@ def topk_cosine_exact(
     """
     # Precompute per-side norms below the join: corpus norms are
     # evaluated once per corpus row, not once per (query, corpus) pair.
-    # Widen the corpus stream side (r13 optimization round): the
+    # Widen the corpus stream side: the
     # interpreted per-pair fixed-point folds ran single-task on the
     # 1-row-group fixture scan (1.7 s → 0.7 s warm at sf0.1 for the
     # declared topk_cosine; parity-verified — exact integer scores +
@@ -299,7 +300,7 @@ def hard_negatives_imi(
     vec_col: str = "embedding",
     label_col: str = "label",
 ) -> DataFrame:
-    """IMI-pruned hard-negative mining (VERDICT_r6 #5/#2): candidates
+    """IMI-pruned hard-negative mining: candidates
     come from each query's ``n_probe`` best coarse cells (subspace-0
     PQ codes — the pq_topk_imi prune), the label-inequality filter
     rides the candidate join, and only SURVIVORS get the exact
@@ -351,13 +352,13 @@ def topk_cosine_imi(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IMI-pruned cosine top-k (VERDICT_r7 #1): ``hard_negatives_imi``
+    """IMI-pruned cosine top-k: ``hard_negatives_imi``
     without the label filter — candidates come from each query's
     ``n_probe`` best coarse cells (subspace-0 PQ codes), only
     survivors get the exact fixed-point cosine verify. The served
     semantic RETRIEVAL leg: rrf_hybrid's fusion composes this with
     the at-rest BM25 index so BOTH hybrid legs are index-served (the
-    lexical leg was served in r7, leaving the semantic leg the last
+    lexical leg was served first, leaving the semantic leg the last
     brute-force serving path).
 
     Same column contract as ``topk_cosine_exact`` (query_id,
@@ -532,7 +533,7 @@ def knn_label_eval_imi(
     vec_col: str = "embedding",
     label_col: str = "label",
 ) -> DataFrame:
-    """IMI-SERVED k-NN classification eval (VERDICT_r8 #4): the last
+    """IMI-SERVED k-NN classification eval: the last
     exact-scorer consumer gains its pruned twin — neighbors come from
     ``topk_cosine_imi`` (candidates from each query's ``n_probe``
     best coarse PQ cells, exact fixed-point cosine on survivors
@@ -729,7 +730,7 @@ def normalize_unit(
     engines; sqrt and division are IEEE-exact). Columns: (vec_id,
     unit: array<double>). Map-side only — no shuffle.
 
-    Plan hazard (r4): the norm fold is inlined inside the transform
+    Plan hazard: the norm fold is inlined inside the transform
     lambda, so it re-evaluates once PER ELEMENT (64× the work), and
     posexploding ``unit`` additionally copies the whole expression
     into the Generate's pushed-down size()/isnotnull predicates on an
@@ -774,7 +775,7 @@ def group_centroids_long(
     """Per-group mean vectors in LONG form: one scalar row per
     (grp, pos) instead of an array column. This is the declared-gate
     shape — the driver canonicalizes results via pandas sort_values,
-    which cannot sort array cells (the r3 red rows). Columns:
+    which cannot sort array cells. Columns:
     (grp, pos, n_vecs, value); value = mean of dimension `pos`."""
     per_dim = _centroid_per_dim(embeddings, n_groups, id_col, vec_col)
     return per_dim.select(
@@ -1023,7 +1024,7 @@ def ivf_centroids(embeddings: DataFrame, k: int = 16,
         # (the kmeans driver-tiny collect precedent) — without this
         # the returned frame carries the WHOLE Lloyd chain as lazy
         # lineage and every consumer re-runs refine_iters corpus
-        # passes (r12 profile: the 16-row centroid write alone cost
+        # passes (profiled: the 16-row centroid write alone cost
         # 5 s at sf0.1, and IVFIndex.build paid the chain again for
         # the assignment). Also pins the centroids: a lazy plan
         # re-executing per consumer could re-aggregate float means
@@ -1167,8 +1168,8 @@ class IVFIndex:
         self._cent_rows: list | None = None
         self._cells_schema = None
         # cells probed by the last bounded-idempotency anti-join —
-        # the observability hook the r10 verdict asked for (tests
-        # assert a disjoint-id batch probes zero cells)
+        # the observability hook (tests assert a disjoint-id batch
+        # probes zero cells)
         self.last_probe_cells: list[int] = []
         self._recover_compaction()
 
@@ -1182,25 +1183,24 @@ class IVFIndex:
     ) -> "IVFIndex":
         cents = ivf_centroids(embeddings, k=n_cells, id_col=id_col, vec_col=vec_col)
         cents.write.mode("overwrite").parquet(f"{path}/centroids")
-        # Widen the FINAL assignment scan (r13 optimization round,
-        # guide §2.5/§6: the single-row-group fixture scan serializes
-        # the interpreted 16×64 fixed-point folds onto ONE task —
-        # 3.0 s → ~0.3 s at sf0.1; the PQ widen_scan rule applied to
-        # the IVF build). Safe for bit-identity: the assignment is
-        # exact integer affinities with a deterministic tie-break, so
-        # partitioning cannot change any row. The REFINE passes in
-        # ivf_centroids stay narrow on purpose — their float means
-        # are only deterministic with a single map-side partial per
-        # (cell, pos) key (multi-partition merge order is not
-        # guaranteed stable across runs).
+        # Widen the FINAL assignment scan (guide §2.5/§6: the
+        # single-row-group fixture scan serializes the interpreted
+        # 16×64 fixed-point folds onto ONE task — 3.0 s → ~0.3 s at
+        # sf0.1; the PQ widen_scan rule applied to the IVF build).
+        # Safe for bit-identity: the assignment is exact integer
+        # affinities with a deterministic tie-break, so partitioning
+        # cannot change any row. The REFINE passes in ivf_centroids
+        # stay narrow on purpose — their float means are only
+        # deterministic with a single map-side partial per (cell, pos)
+        # key (multi-partition merge order is not guaranteed stable
+        # across runs).
         from ..sources.tables import widen_scan
         # Eagerly pin the assignment ONCE: the partitioned write, the
         # per-cell counts and the bloom words all read the checkpointed
-        # blocks, so build is one corpus assignment pass total.
-        # (VERDICT_r11 #1: the old path re-read the just-written cells
-        # from disk for the sidecar — two extra full-index jobs that
-        # doubled ivf_index_build. _sidecar_from_cells remains the
-        # recovery path for a missing/corrupt sidecar only.)
+        # blocks, so build is one corpus assignment pass total (reading
+        # the just-written cells back for the sidecar would cost two
+        # more full-index jobs; _sidecar_from_cells is the recovery
+        # path for a missing/corrupt sidecar only).
         cells = _assign_cells(
             widen_scan(
                 embeddings.select(
@@ -1221,11 +1221,11 @@ class IVFIndex:
         )
         idx = IVFIndex(embeddings.sparkSession, path)
         idx._write_sidecar(
-            idx._sidecar_from_frame(cells.select("cell_id", "neighbor_id"))
+            idx._sidecar_merge({}, cells.select("cell_id", "neighbor_id"))
         )
         return idx
 
-    # ---- id sidecar (bounded idempotency probe, VERDICT_r10 #1) ----
+    # ---- id sidecar: the bounded idempotency probe ----
 
     def _bloom_expr(self, id_col: str) -> F.Column:
         """Per-row bloom membership test against the joined `_bloom`
@@ -1267,34 +1267,45 @@ class IVFIndex:
             .collect()
         )
 
-    def _sidecar_from_frame(self, assigned: DataFrame) -> dict:
-        """Sidecar dict from an assigned (cell_id, neighbor_id) frame
-        — two driver-tiny aggregates (≤n_cells and ≤n_cells·WORDS
-        rows). build() feeds it the checkpointed assignment frame so
-        the sidecar costs zero extra corpus passes."""
-        per = {
-            int(r.cell_id): int(r.n)
-            for r in assigned.groupBy("cell_id")
-            .agg(F.count("*").alias("n"))
+    def _bloom_probe(self, ids: DataFrame, side: dict) -> list[int]:
+        """The sorted cells whose sidecar bloom may hold any id of
+        ``ids`` (a ``neighbor_id`` frame). CELL-AGNOSTIC: every id is
+        tested against EVERY cell's bloom (an ids × ≤n_cells broadcast
+        cross), because an id may be at rest in a cell other than the
+        one it assigns to now (a re-embedded vector moves cells). A
+        cell left out is one that definitely holds none of the ids;
+        false positives only cost a pruned scan."""
+        sidecar_df = self.spark.createDataFrame(
+            [(c, s["bloom"]) for c, s in sorted(side.items())]
+            or [(None, None)],
+            "_scell int, _bloom array<long>",
+        ).filter(F.col("_scell").isNotNull())
+        return sorted(
+            r._scell
+            for r in ids.select("neighbor_id")
+            .crossJoin(F.broadcast(sidecar_df))
+            .filter(self._bloom_expr("neighbor_id"))
+            .select("_scell")
+            .distinct()
             .collect()
-        }
-        side = {
-            c: {"n_claimed": n, "bloom": [0] * self.BLOOM_WORDS}
-            for c, n in per.items()
-        }
-        for r in self._bloom_words(assigned):
-            side[int(r.cell_id)]["bloom"][int(r.word)] |= int(r.b)
-        return side
+        )
 
     def _sidecar_from_cells(self) -> dict:
         """Exact rebuild from the at-rest id column (one pruned scan):
         the recovery path when the sidecar is missing/corrupt — always
         a valid superset because it IS the at-rest set."""
-        return self._sidecar_from_frame(
+        return self._sidecar_merge(
+            {},
             self.spark.read.parquet(f"{self.path}/cells").select(
                 "cell_id", "neighbor_id"
-            )
+            ),
         )
+
+    def _sidecar(self) -> dict:
+        """The sidecar every writer starts from: the stored one, or the
+        exact at-rest rebuild when it is missing or unreadable."""
+        side = self._read_sidecar()
+        return self._sidecar_from_cells() if side is None else side
 
     def _read_sidecar(self) -> dict | None:
         try:
@@ -1310,12 +1321,23 @@ class IVFIndex:
         }
 
     def _write_sidecar(self, side: dict) -> None:
+        """Replace ``idstats/`` with ``side`` — the one sidecar writer.
+
+        SUPERSET-FIRST contract: at every instant, crashes included,
+        the stored sidecar must claim every id at rest (a false
+        negative would let ``add`` append a duplicate). So a writer
+        that ADDS ids writes the grown sidecar BEFORE the cell append
+        (``add``: a crash in between leaves claims with nothing
+        physical, which a retry bloom-collides on and appends exactly
+        once), and a writer that REMOVES ids writes the shrunk sidecar
+        only AFTER the removal is final (``expunge_deletes``: after
+        ``_swap_cells`` has dropped the trash)."""
         # ONE parallelize slice, not coalesce(1): coalescing a
         # default-sliced local collection funnels all 32 Python-worker
         # round-trips (one per slice, mostly empty) through a single
         # task SEQUENTIALLY — measured 4.7 s per sidecar write vs
-        # 0.2 s with a 1-slice RDD (r13 optimization round; this was
-        # the single biggest piece of ivf_index_build).
+        # 0.2 s with a 1-slice RDD (this was the single biggest piece
+        # of ivf_index_build).
         self.spark.createDataFrame(
             self.spark.sparkContext.parallelize(
                 [
@@ -1373,51 +1395,46 @@ class IVFIndex:
         when the added fraction gets large (Lucene-style segment
         hygiene).
 
-        ``dedupe=True`` (default) makes add IDEMPOTENT (ADVICE r7: a
-        retried ingestion job re-adding the same batch silently
-        duplicated vectors in the cell files and changed query
-        results): ids already in the index are anti-joined out before
-        the append — an id-column-pruned scan of the existing cells,
-        which a retried batch job affords — and the incoming batch is
-        ALSO deduped on id (r8 review finding: a batch that is itself
-        a union of retry attempts would otherwise append both
-        copies). Only EXACT retry duplicates are safe to collapse —
-        the same id arriving with two DIFFERENT vectors WITHIN the
-        batch is a caller bug (two writers disagree about the
-        vector), so dedupe raises ValueError instead of silently
-        keeping an arbitrary copy (ADVICE r8). ACROSS calls the index
-        wins: an id already at rest is anti-joined out BEFORE the
-        conflict check, so a changed vector for an existing id is
-        dropped, not detected — re-embedding requires a rebuild (the
-        existing-beats-batch priority; detecting it would mean
-        scanning the at-rest vectors per add). Set ``dedupe=False``
-        only when the caller guarantees disjointness upstream (e.g.
-        an exactly-once writer), skipping the probe and the conflict
-        check (the documented zero-read-amplification scale path).
+        ``dedupe=True`` (default) makes add IDEMPOTENT (a retried
+        ingestion job re-adding the same batch must not duplicate
+        vectors in the cell files and change query results): ids
+        already in the index are anti-joined out before the append —
+        an id-column-pruned scan of the existing cells, which a
+        retried batch job affords — and the incoming batch is ALSO
+        deduped on id (a batch that is itself a union of retry
+        attempts would otherwise append both copies). Only EXACT retry
+        duplicates are safe to collapse — the same id arriving with
+        two DIFFERENT vectors WITHIN the batch is a caller bug (two
+        writers disagree about the vector), so dedupe raises
+        ValueError instead of silently keeping an arbitrary copy.
+        ACROSS calls the index wins: an id already at rest is
+        anti-joined out BEFORE the conflict check, so a changed vector
+        for an existing id is dropped, not detected — re-embedding
+        requires a rebuild (the existing-beats-batch priority;
+        detecting it would mean scanning the at-rest vectors per add).
+        Set ``dedupe=False`` only when the caller guarantees
+        disjointness upstream (e.g. an exactly-once writer), skipping
+        the probe and the conflict check (the documented
+        zero-read-amplification scale path).
 
-        BOUNDED idempotency probe (VERDICT_r10 #1 — the old anti-join
-        scanned the at-rest id column of the WHOLE index every batch):
-        each batch id checks against EVERY cell's bloom in the
-        ``idstats/`` sidecar (cell-AGNOSTIC — a re-embedded vector
-        assigns to a different cell than its at-rest copy, and the
-        lake-wins drop must still see it); only the colliding cells'
-        id columns are scanned (partition-pruned ``isin``), and a
-        batch of genuinely new ids skips the at-rest scan entirely
-        (``last_probe_cells == []``). Correctness never depends on the
-        bloom — it only prunes definite-absent rows; survivors still
-        get the exact anti-join. The sidecar is updated BEFORE the
-        cell append, so it is a superset of at-rest ids across every
-        crash window: crash after the sidecar write → the retried
-        batch bloom-collides, anti-joins against at-rest (absent), and
-        appends exactly once. A missing/corrupt sidecar rebuilds from
-        one at-rest id scan (exact superset). ``dedupe=False`` appends
-        still fold their ids in, keeping later probed adds sound.
+        BOUNDED idempotency probe (never a scan of the at-rest id
+        column of the WHOLE index per batch): the batch ids go through
+        ``_bloom_probe`` against the ``idstats/`` sidecar; only the
+        colliding cells' id columns are scanned (partition-pruned
+        ``isin``), and a batch of genuinely new ids skips the at-rest
+        scan entirely (``last_probe_cells == []``). Correctness never
+        depends on the bloom — it only prunes definite-absent rows;
+        survivors still get the exact anti-join. The surviving ids are
+        claimed in the sidecar BEFORE the cell append (the
+        ``_write_sidecar`` superset-first contract). ``dedupe=False``
+        appends still fold their ids in, keeping later probed adds
+        sound.
 
         SINGLE-WRITER contract (like the BM25 ingestion workdir):
         concurrent add() calls could interleave sidecar writes and
         lose claims (a lost claim = a possible duplicate append), and
         compact_cells must not run concurrently with add() on the
-        same path. Since r12 this is ENFORCED, not honor-system: both
+        same path. This is ENFORCED, not honor-system: both
         take the ``_writer_lease`` file (atomic O_CREAT|O_EXCL; a
         second writer gets a loud RuntimeError instead of a silent
         superset violation; leases older than LEASE_TTL_S are stolen
@@ -1427,7 +1444,7 @@ class IVFIndex:
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("cvec_"),
         )
-        # normalize to the at-rest vector type (r12 full-suite find):
+        # normalize to the at-rest vector type:
         # a float32-built index receiving an array<double> batch would
         # append DOUBLE parquet pages into the same cell dirs — later
         # reads fail with PARQUET_COLUMN_DATA_TYPE_MISMATCH depending
@@ -1462,7 +1479,7 @@ class IVFIndex:
         if dedupe:
             # collapse exact retry duplicates first; what survives with
             # >1 row per id carries conflicting vectors — refuse loudly.
-            # The deduped batch is eagerly pinned (r9 review finding):
+            # The deduped batch is eagerly pinned:
             # without the checkpoint the upstream batch lineage re-runs
             # for the conflict probe, the anti-join AND the write — and
             # a nondeterministic upstream could pass the check yet
@@ -1488,30 +1505,10 @@ class IVFIndex:
         assigned = _assign_cells(
             batch, self.centroids, "neighbor_id", "cvec_", n_probe=1
         ).localCheckpoint(eager=False)
+        side = self._sidecar()
+        self.last_probe_cells = []
         if dedupe:
-            side = self._read_sidecar()
-            if side is None:
-                side = self._sidecar_from_cells()
-            # CELL-AGNOSTIC membership: a batch id may be at rest in
-            # a cell OTHER than its current assignment (a re-embedded
-            # vector moves cells — the lake-wins drop must still see
-            # it), so every id checks against EVERY cell's bloom
-            # (batch × ≤n_cells broadcast cross) and the anti-join
-            # prunes to the union of colliding cells.
-            sidecar_df = self.spark.createDataFrame(
-                [(c, s["bloom"]) for c, s in sorted(side.items())]
-                or [(None, None)],
-                "_scell int, _bloom array<long>",
-            ).filter(F.col("_scell").isNotNull())
-            self.last_probe_cells = sorted(
-                r._scell
-                for r in assigned.select("neighbor_id")
-                .crossJoin(F.broadcast(sidecar_df))
-                .filter(self._bloom_expr("neighbor_id"))
-                .select("_scell")
-                .distinct()
-                .collect()
-            )
+            self.last_probe_cells = self._bloom_probe(assigned, side)
             if self.last_probe_cells:
                 existing = (
                     self.spark.read.parquet(f"{self.path}/cells")
@@ -1521,13 +1518,8 @@ class IVFIndex:
                 assigned = assigned.join(
                     existing, "neighbor_id", "left_anti"
                 ).localCheckpoint(eager=False)
-        else:
-            self.last_probe_cells = []
-            side = self._read_sidecar()
-            if side is None:
-                side = self._sidecar_from_cells()
         # superset-first: claim the surviving ids in the sidecar
-        # BEFORE the cell append (see docstring crash analysis)
+        # BEFORE the cell append (``_write_sidecar``)
         self._write_sidecar(self._sidecar_merge(side, assigned))
         (
             assigned.repartition("cell_id")
@@ -1543,7 +1535,7 @@ class IVFIndex:
     LEASE_TTL_S = 600.0
 
     def _acquire_lease(self, op: str):
-        """Single-writer guard (VERDICT_r11 #8): ``add`` and
+        """Single-writer guard: ``add`` and
         ``compact_cells`` take a lease file under the index root so a
         second concurrent writer fails LOUDLY instead of silently
         losing sidecar claims (the documented superset violation).
@@ -1558,7 +1550,7 @@ class IVFIndex:
 
         lease = os.path.join(self.path, "_writer_lease")
         # the nonce makes the release self-verifying: only the writer
-        # whose claim is CURRENT unlinks (ADVICE r12 — a TTL stealer
+        # whose claim is CURRENT unlinks (a TTL stealer
         # owns the file after expiry; the expired holder's finally
         # must not delete the stealer's lease out from under it)
         nonce = f"pid={os.getpid()} op={op} nonce={os.urandom(8).hex()}"
@@ -1595,7 +1587,7 @@ class IVFIndex:
                 # stale holder: unlink then retry the EXCLUSIVE claim —
                 # of N concurrent stealers exactly one wins the
                 # recreate (the old rewrite-in-place steal let every
-                # stealer that saw age>=TTL proceed: ADVICE r12 TOCTOU)
+                # stealer that saw age>=TTL proceed: a TOCTOU race)
                 try:
                     os.unlink(lease)
                 except FileNotFoundError:
@@ -1617,7 +1609,7 @@ class IVFIndex:
 
         return held()
 
-    # ---- deletes (r12): the ANN twin of BM25Index tombstones ----
+    # ---- deletes: the ANN twin of BM25Index tombstones ----
 
     def delete(self, vec_ids) -> "IVFIndex":
         """Tombstone deletion for ANN serving — the BM25Index.delete
@@ -1625,68 +1617,44 @@ class IVFIndex:
         ``query`` immediately (anti-joined from the probed cells),
         while the physical cell rows and the bloom sidecar's claims
         persist until ``expunge_deletes`` (the sidecar stays a valid
-        SUPERSET — exactly the property its crash contract needs).
-        Accepts a list of ids or a 1-column DataFrame; duplicates and
-        unknown ids are harmless. Re-adding a deleted id is REFUSED
-        by ``add`` until expunged: the at-rest copy would win the
-        idempotency anti-join while the tombstone killed both copies
-        at serve time — silent data loss, so it fails loudly
-        instead. Lease-guarded like every writer."""
+        SUPERSET). Accepts a list of ids or a 1-column DataFrame;
+        duplicates and unknown ids are harmless (the store is
+        ``sources.tables._append_tombstones``). Re-adding a deleted
+        id is REFUSED by ``add`` until expunged: the at-rest copy
+        would win the idempotency anti-join while the tombstone killed
+        both copies at serve time — silent data loss, so it fails
+        loudly instead. Lease-guarded like every writer."""
         with self._acquire_lease("delete"):
-            if not isinstance(vec_ids, DataFrame):
-                ids = self.spark.createDataFrame(
-                    [(int(v),) for v in vec_ids], "neighbor_id long"
-                )
-            else:
-                ids = vec_ids.select(
-                    F.col(vec_ids.columns[0])
-                    .cast("long")
-                    .alias("neighbor_id")
-                )
-            ids.distinct().write.mode("append").parquet(
-                f"{self.path}/tombstones"
-            )
+            _append_tombstones(self.spark, self.path, vec_ids, "neighbor_id")
         return self
 
     def _tombstones(self) -> DataFrame | None:
-        """None iff no deletes were ever recorded (no tombstones dir —
-        probed on the local FS every writer already assumes, the
-        _dead_index_path spirit). A dir that EXISTS but fails to read
-        (corrupt parquet, transient FS error) PROPAGATES: silently
-        treating it as 'no deletes' would serve deleted vectors and
-        bypass add()'s tombstone-refusal guard (ADVICE r12 — the
-        exact silent-loss path delete() documents as forbidden)."""
-        import os
-
-        tdir = f"{self.path}/tombstones"
-        if not os.path.isdir(tdir):
-            return None  # no deletes yet
-        t = self.spark.read.parquet(tdir)
-        return t.select("neighbor_id").distinct()
+        """The deleted neighbor_ids, or None when there are none — read
+        semantics of ``sources.tables._read_tombstones``."""
+        return _read_tombstones(self.spark, self.path, "neighbor_id")
 
     def expunge_deletes(self) -> dict:
         with self._acquire_lease("expunge_deletes"):
             return self._expunge_locked()
 
     def _expunge_locked(self) -> dict:
-        """Physically remove tombstoned vectors: bloom-prune to the
-        cells that can hold one (the add() probe machinery — a
-        tombstoned id's cells collide by the superset invariant),
-        rewrite ONLY those cells minus the tombstones through the
-        crash-safe compact swap, rebuild the rewritten cells' sidecar
-        rows exactly from the retained frame (one checkpointed pruned
-        pass — the build() lesson), then clear the tombstones.
+        """Physically remove tombstoned vectors: ``_bloom_probe`` the
+        tombstones to the cells that can hold one (a tombstoned id's
+        cells collide by the superset invariant), rewrite ONLY those
+        cells minus the tombstones through ``_swap_cells``, rebuild
+        the rewritten cells' sidecar rows exactly from the retained
+        frame (one checkpointed pruned pass — the build() lesson),
+        then clear the tombstones.
 
-        Crash windows, in order: an interrupted swap is finished by
-        ``_recover_compaction`` (an all-deleted cell restored from
-        trash is re-deleted on the next expunge — the tombstones are
-        removed LAST, after the trash is gone, so restoration can
-        never resurrect data past a completed expunge); a crash
-        before the sidecar write leaves a stale SUPERSET (valid); a
-        crash before tombstone removal leaves an idempotent re-run.
+        The shrunk sidecar is written after the swap (the
+        ``_write_sidecar`` contract) and the tombstones are removed
+        LAST, so every crash leaves a correct re-run: an interrupted
+        swap is finished by ``_recover_compaction`` (an all-deleted
+        cell restored from trash is re-selected by the old superset
+        sidecar and re-expunged), and a crash before tombstone removal
+        leaves an idempotent re-run.
 
         Returns {"expunged_cells", "n_removed"}."""
-        import os
         import shutil
 
         self._recover_compaction()
@@ -1694,99 +1662,84 @@ class IVFIndex:
         if tomb is None:
             return {"expunged_cells": [], "n_removed": 0}
         tomb = tomb.localCheckpoint()
-        side = self._read_sidecar()
-        if side is None:
-            side = self._sidecar_from_cells()
-        sidecar_df = self.spark.createDataFrame(
-            [(c, s["bloom"]) for c, s in sorted(side.items())]
-            or [(None, None)],
-            "_scell int, _bloom array<long>",
-        ).filter(F.col("_scell").isNotNull())
-        cand = sorted(
-            r._scell
-            for r in tomb.crossJoin(F.broadcast(sidecar_df))
-            .filter(self._bloom_expr("neighbor_id"))
-            .select("_scell")
-            .distinct()
-            .collect()
-        )
-        cells_root = os.path.join(self.path, "cells")
-        if not cand:
-            shutil.rmtree(
-                os.path.join(self.path, "tombstones"), ignore_errors=True
+        side = self._sidecar()
+        cand = self._bloom_probe(tomb, side)
+        n_removed = 0
+        if cand:
+            live = self.spark.read.parquet(f"{self.path}/cells").filter(
+                F.col("cell_id").isin(cand)
             )
-            return {"expunged_cells": [], "n_removed": 0}
-        live = self.spark.read.parquet(cells_root).filter(
-            F.col("cell_id").isin(cand)
-        )
-        retained = (
-            live.join(F.broadcast(tomb), "neighbor_id", "left_anti")
-            .select(live.columns)
-            .localCheckpoint()
-        )
-        n_removed = live.count() - retained.count()
+            retained = (
+                live.join(F.broadcast(tomb), "neighbor_id", "left_anti")
+                .select(live.columns)
+                .localCheckpoint()
+            )
+            n_removed = live.count() - retained.count()
+            self._swap_cells(retained, cand)
+            # exact sidecar rows for the rewritten cells, from the
+            # already-checkpointed retained frame
+            for c in cand:
+                side[c] = {"n_claimed": 0, "bloom": [0] * self.BLOOM_WORDS}
+            side = self._sidecar_merge(side, retained)
+            # a fully-emptied cell keeps no sidecar row (its dir is gone
+            # too), so the at-rest rebuild recipe reproduces this sidecar
+            # exactly
+            self._write_sidecar(
+                {
+                    c: s
+                    for c, s in side.items()
+                    if s["n_claimed"] > 0 or any(s["bloom"])
+                }
+            )
+        shutil.rmtree(f"{self.path}/tombstones", ignore_errors=True)
+        return {"expunged_cells": cand, "n_removed": int(n_removed)}
+
+    def _swap_cells(self, frame: DataFrame, cells: list[int]) -> None:
+        """Replace the live dirs of ``cells`` with ``frame``'s rows
+        (cell-partitioned, as at rest) — the one crash-safe cell
+        rewrite behind ``compact_cells`` and ``expunge_deletes``.
+
+        ``frame`` is written to ``_compact_tmp`` first; then, per cell,
+        the live dir moves to ``_compact_trash`` and the rewritten dir
+        moves in. A cell the rewrite produced no dir for holds no rows,
+        so its live dir simply goes. A cell with no live dir (sidecar
+        claims whose append never happened) has nothing to move out.
+        Crash order: ``_recover_compaction`` restores any trash dir
+        whose live twin is missing, so a crash between the two renames
+        loses nothing. The trash is removed before this returns, i.e.
+        before any sidecar write that follows (the ``_write_sidecar``
+        contract); ``_compact_tmp`` goes last."""
+        import os
+        import shutil
+
+        cells_root = os.path.join(self.path, "cells")
         tmp = os.path.join(self.path, "_compact_tmp")
+        trash = os.path.join(self.path, "_compact_trash")
         shutil.rmtree(tmp, ignore_errors=True)
         (
-            retained.repartition("cell_id")
+            frame.repartition("cell_id")
             .write.mode("overwrite")
             .partitionBy("cell_id")
             .parquet(tmp)
         )
-        trash = os.path.join(self.path, "_compact_trash")
         shutil.rmtree(trash, ignore_errors=True)
         os.makedirs(trash)
-        for c in cand:
+        for c in cells:
             src = os.path.join(tmp, f"cell_id={c}")
             dst = os.path.join(cells_root, f"cell_id={c}")
-            # a candidate cell can hold bloom CLAIMS but no dir:
-            # add() writes the sidecar superset-first, so a crash
-            # before its cell append leaves claimed ids with nothing
-            # physical — skipping is safe, the sidecar rewrite below
-            # zeroes the row (ADVICE r12 low)
             if os.path.isdir(dst):
                 os.rename(dst, os.path.join(trash, f"cell_id={c}"))
             if os.path.isdir(src):
                 os.rename(src, dst)
-            # else: every row of this cell was deleted — the live dir
-            # stays gone (unlike compact's leave-alone case, absence
-            # IS the correct end state here)
-        # ORDER MATTERS (ADVICE r12 medium): the trash must go BEFORE
-        # the new sidecar is written. A crash between the two leaves
-        # the OLD superset sidecar, whose blooms still select every
-        # candidate cell for a correct idempotent re-run. The old
-        # order (sidecar first) had a window where _recover_compaction
-        # restored an all-deleted cell from trash while the NEW
-        # sidecar carried no row for it — the bloom-driven re-run
-        # never re-expunged it, tombstones were cleared, and the
-        # resurrected rows held no sidecar claims (superset broken).
         shutil.rmtree(trash)
-        # exact sidecar rows for the rewritten cells, from the
-        # already-checkpointed retained frame
-        for c in cand:
-            side[c] = {"n_claimed": 0, "bloom": [0] * self.BLOOM_WORDS}
-        side = self._sidecar_merge(side, retained)
-        # a fully-emptied cell keeps no sidecar row (its dir is gone
-        # too), so the at-rest rebuild recipe reproduces this sidecar
-        # exactly
-        side = {
-            c: s
-            for c, s in side.items()
-            if s["n_claimed"] > 0 or any(s["bloom"])
-        }
-        self._write_sidecar(side)
         shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(
-            os.path.join(self.path, "tombstones"), ignore_errors=True
-        )
-        return {"expunged_cells": cand, "n_removed": int(n_removed)}
 
     def _recover_compaction(self) -> None:
-        """Finish an interrupted ``compact_cells`` swap: any cell dir
-        stranded in ``_compact_trash`` whose live twin is missing is
-        restored (the crash hit between the two renames); twins that
-        exist mean the swap completed — the trash copy is stale and
-        dropped. No-op when no trash dir exists."""
+        """Finish an interrupted ``_swap_cells``: any cell dir stranded
+        in ``_compact_trash`` whose live twin is missing is restored
+        (the crash hit between the two renames); twins that exist mean
+        the swap completed — the trash copy is stale and dropped.
+        No-op when no trash dir exists."""
         import os
         import shutil
 
@@ -1808,20 +1761,18 @@ class IVFIndex:
             return self._compact_cells_locked(max_files_per_cell)
 
     def _compact_cells_locked(self, max_files_per_cell: int = 8) -> dict:
-        """Cell-file hygiene for incremental ingestion (VERDICT_r10
-        #1 — ``add`` appends ≥1 parquet file per touched cell per
-        call, so minute-level micro-batches accrue thousands of small
-        files per cell and every pruned query pays per-file open
-        cost). Rewrites ONLY cells whose file count exceeds
-        ``max_files_per_cell`` — one partition-pruned read of those
-        cells, one ``partitionBy`` write (each cell lands in exactly
-        one task → one output file), then a crash-safe per-cell swap
-        (live dir → ``_compact_trash``, compacted dir in; an
-        interrupted swap is finished by ``_recover_compaction`` on
-        the next construction/compact). Query results are unchanged
-        (parity-pinned in tests); the id sidecar is untouched (the id
-        SET is invariant). Self-noops below the threshold, so
-        ingestion can call it every batch (the tiered-BM25 cadence).
+        """Cell-file hygiene for incremental ingestion (``add``
+        appends ≥1 parquet file per touched cell per call, so
+        minute-level micro-batches accrue thousands of small files per
+        cell and every pruned query pays per-file open cost). Rewrites
+        ONLY cells whose file count exceeds ``max_files_per_cell`` —
+        one partition-pruned read of those cells through
+        ``_swap_cells`` (each cell lands in exactly one task → one
+        output file; a cell whose files hold zero rows ends with no
+        dir). Query results are unchanged (parity-pinned in tests);
+        the id sidecar is untouched (the id SET is invariant).
+        Self-noops below the threshold, so ingestion can call it every
+        batch (the tiered-BM25 cadence).
 
         Coordination caveat (the BM25 one-flip-later analog): the
         swap deletes the pre-compaction files, so run it from the
@@ -1832,60 +1783,34 @@ class IVFIndex:
 
         Returns {"compacted_cells", "files_before", "files_after"}."""
         import os
-        import shutil
 
         self._recover_compaction()
         cells_root = os.path.join(self.path, "cells")
-        over: dict[int, int] = {}
-        for d in os.listdir(cells_root):
-            if not d.startswith("cell_id="):
-                continue
-            n = sum(
-                1
-                for f in os.listdir(os.path.join(cells_root, d))
-                if f.endswith(".parquet")
-            )
-            if n > max_files_per_cell:
-                over[int(d.split("=", 1)[1])] = n
-        if not over:
-            return {
-                "compacted_cells": [],
-                "files_before": 0,
-                "files_after": 0,
-            }
-        tmp = os.path.join(self.path, "_compact_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        (
-            self.spark.read.parquet(cells_root)
-            .filter(F.col("cell_id").isin(sorted(over)))
-            .repartition("cell_id")
-            .write.mode("overwrite")
-            .partitionBy("cell_id")
-            .parquet(tmp)
+
+        def n_files(c: int) -> int:
+            d = os.path.join(cells_root, f"cell_id={c}")
+            if not os.path.isdir(d):
+                return 0
+            return sum(1 for f in os.listdir(d) if f.endswith(".parquet"))
+
+        cells = (
+            int(d.split("=", 1)[1])
+            for d in os.listdir(cells_root)
+            if d.startswith("cell_id=")
         )
-        trash = os.path.join(self.path, "_compact_trash")
-        shutil.rmtree(trash, ignore_errors=True)
-        os.makedirs(trash)
-        files_after = 0
-        for c in sorted(over):
-            src = os.path.join(tmp, f"cell_id={c}")
-            dst = os.path.join(cells_root, f"cell_id={c}")
-            if not os.path.isdir(src):
-                # all of this cell's files held zero rows — the
-                # compacted write produced no dir; leave the live dir
-                # alone rather than stranding it in trash
-                continue
-            os.rename(dst, os.path.join(trash, f"cell_id={c}"))
-            os.rename(src, dst)
-            files_after += sum(
-                1 for f in os.listdir(dst) if f.endswith(".parquet")
+        counts = {c: n_files(c) for c in cells}
+        over = {c: n for c, n in counts.items() if n > max_files_per_cell}
+        if over:
+            self._swap_cells(
+                self.spark.read.parquet(cells_root).filter(
+                    F.col("cell_id").isin(sorted(over))
+                ),
+                sorted(over),
             )
-        shutil.rmtree(trash)
-        shutil.rmtree(tmp, ignore_errors=True)
         return {
             "compacted_cells": sorted(over),
             "files_before": sum(over.values()),
-            "files_after": files_after,
+            "files_after": sum(n_files(c) for c in over),
         }
 
     def ingest_conflict_audit(
@@ -1895,10 +1820,10 @@ class IVFIndex:
         vec_col: str = "embedding",
         scale: int = FX,
     ) -> DataFrame:
-        """Re-embed conflict VISIBILITY for incremental ingestion
-        (VERDICT_r9 #4): ``add`` anti-joins ids already at rest out of
-        the batch BEFORE its conflict guard can see them, so a changed
-        vector for an existing id is dropped lake-wins, undetectably.
+        """Re-embed conflict VISIBILITY for incremental ingestion:
+        ``add`` anti-joins ids already at rest out of the batch BEFORE
+        its conflict guard can see them, so a changed vector for an
+        existing id is dropped lake-wins, undetectably.
         This audit is the detection pass a deployment runs at its own
         cadence: join the batch against the at-rest cell vectors on
         id, fixed-point-compare the vectors (round(x·scale) per dim —
@@ -1957,8 +1882,7 @@ class IVFIndex:
         )
 
     def staleness_audit(self) -> DataFrame:
-        """Staleness / skew audit for the serving index (VERDICT_r9
-        #5): after many ``add`` batches against FROZEN centroids, cell
+        """Staleness / skew audit for the serving index: after many ``add`` batches against FROZEN centroids, cell
         balance degrades and recall decays silently. Per live cell:
 
             (cell_id, n_vecs, n_drifted, skew_milli)
@@ -2003,7 +1927,8 @@ class IVFIndex:
         )
         # pin the ≤n_cells frame: three consumers with different
         # projections would re-run the cells scan + affinity folds
-        # per consumer otherwise (the r3 no-exchange-reuse class)
+        # per consumer otherwise (Catalyst does not reuse exchanges
+        # across differently-pruned consumers)
         per = b.groupBy("cell_id").agg(
             F.count("*").cast("long").alias("n_vecs"),
             F.sum(
@@ -2436,7 +2361,7 @@ def imi_cell_skew_audit(
     q: DataFrame, cents, subdim: int = 8
 ) -> DataFrame:
     """Cell-balance / staleness audit over the IMI coarse cells
-    (VERDICT_r9 #5) — the ORACLE-checked twin of
+    — the ORACLE-checked twin of
     ``IVFIndex.staleness_audit`` (IVF centroids are double means, not
     hash-portable; PQ's subspace-0 codebook is the integer-exact
     coarse quantizer the IMI serve paths prune on). Per populated
@@ -2488,8 +2413,8 @@ def imi_cell_skew_audit(
     )
     # per feeds THREE consumers (output rows, the median window, the
     # max/count agg) with different projections — without the pin the
-    # whole corpus map-scan re-runs per consumer (the r3 no-exchange-
-    # reuse class; PLANS.md showed 3 scans). ≤k rows — pin is free.
+    # whole corpus map-scan re-runs per consumer (PLANS.md showed 3
+    # scans). ≤k rows — pin is free.
     per = rows.groupBy("cell0").agg(
         F.count("*").cast("long").alias("n_vecs"),
         F.sum("own_d").cast("long").alias("sum_dist2"),
@@ -2751,7 +2676,7 @@ def pq_topk_imi(
     cells whose subspace-0 LUT distance is smallest (tie-break cid)
     and ADC-scores ONLY vectors in probed cells: the broadcast probe
     rows carry the query LUT, so candidates are joined on cell0
-    BEFORE any ADC sum is computed (prune-then-score — the r4 form
+    BEFORE any ADC sum is computed (prune-then-score — the old form
     scored all pairs and discarded 3/4 after, doing full ADC work
     plus a join; see _pq_imi_scored).
 
@@ -2795,8 +2720,7 @@ def pq_topk_adc_join(
     cents=None,
     assigned=None,
 ) -> DataFrame:
-    """Join-form ADC twin for TABLE-sized query sets (VERDICT_r4
-    finding #3): the literal form (`pq_topk_adc`) bakes one LUT
+    """Join-form ADC twin for TABLE-sized query sets: the literal form (`pq_topk_adc`) bakes one LUT
     struct per query into the plan, so plan size grows linearly with
     n_queries — fine for the 8-query serving demo, wrong for a batch
     ANN over a query *table*. Here the LUT is DATA, not plan:
@@ -3050,10 +2974,10 @@ def margin_bitext_mine_imi(
     (≤ n_queries ids, a driver-tiny collect — the IVF-seeds
     precedent; NOTE this means DataFrame CONSTRUCTION triggers Spark
     jobs, so bench/probe timing must keep construction inside the
-    clock, the r2/r8 lesson). An empty fwd leg (probed cells hold no
+    clock). An empty fwd leg (probed cells hold no
     opposite-side vectors) short-circuits the backward pass to an
-    empty frame instead of building LUTs from an empty id list
-    (ADVICE_r10). n_probe = K (all cells) degenerates to the exact
+    empty frame instead of building LUTs from an empty id list.
+    n_probe = K (all cells) degenerates to the exact
     margin_bitext_mine on the same query set — pinned in tests.
     Columns: identical to margin_bitext_mine."""
     q = _pq_quantized(embeddings, id_col, vec_col)

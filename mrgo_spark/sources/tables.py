@@ -101,6 +101,39 @@ def widen_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
+def _read_tombstones(
+    spark: SparkSession, path: str, id_col: str
+) -> DataFrame | None:
+    """The distinct deleted ids under ``{path}/tombstones``, as one
+    ``id_col`` column — the tombstone store both at-rest indexes
+    (``BM25Index``, ``IVFIndex``) share.
+
+    Read semantics: ``None`` iff no delete was ever recorded, decided
+    by an ``os.path.isdir`` check on the local FS every index writer
+    already assumes, so an index without deletes launches no Spark
+    job. A directory that EXISTS but cannot be read (corrupt parquet,
+    a transient FS error) PROPAGATES: treating it as 'no deletes'
+    would serve deleted rows and let a deleted id be re-added."""
+    tdir = f"{path}/tombstones"
+    if not os.path.isdir(tdir):
+        return None
+    return spark.read.parquet(tdir).select(id_col).distinct()
+
+
+def _append_tombstones(
+    spark: SparkSession, path: str, ids, id_col: str
+) -> None:
+    """Record deletes: ``ids`` is a list of ids or a 1-column
+    DataFrame; they are cast to long, renamed ``id_col``, deduped
+    within the call and appended to ``{path}/tombstones``. Duplicate
+    and unknown ids are harmless — every reader anti-joins."""
+    if isinstance(ids, DataFrame):
+        ids = ids.select(F.col(ids.columns[0]).cast("long").alias(id_col))
+    else:
+        ids = spark.createDataFrame([(int(i),) for i in ids], f"{id_col} long")
+    ids.distinct().write.mode("append").parquet(f"{path}/tombstones")
+
+
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 

@@ -245,50 +245,63 @@ def streaming_dedup_docs(
 _GETS_OUTPUT_SCHEMA = "seq long, key string, val string"
 
 
-def _fold_one_key_serve_gets(
+def _serve_gets_walk(
     key: tuple[Any, ...],
     pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Stateful fold that also SERVES reads: each ``get`` op emits the
-    state at its position in the log (reference kvraft/client.go:41-59
-    — Get returns the current value, "" for a missing key; Put/Append
-    mutate and return nothing).
+    cur: str,
+    n: int,
+) -> tuple[str, int, pd.DataFrame]:
+    """The per-key Get-serving walk both stateful forms share: fold
+    one key's ops in ``seq`` order from state (cur, n) and emit the
+    state at each ``get``'s position in the log (reference
+    kvraft/client.go:41-59 — Get returns the current value, "" for a
+    missing key; Put/Append mutate and return nothing; a NULL value
+    counts as ""). Returns the new (cur, n) and the (seq, key, val)
+    rows of the gets.
 
     Row-at-a-time walk is deliberate here: a get needs the
     point-in-time state between mutations, and the loop is bounded by
     one key's slice of one micro-batch (not the stream), so there is
     no vectorization win worth the opacity.
     """
-    if state.exists:
-        cur, n = state.get
-    else:
-        cur, n = "", 0
     out_seq: list[int] = []
     out_val: list[str] = []
     for pdf in pdfs:
         pdf = pdf.sort_values("seq")
-        ops = pdf["op"].to_numpy()
-        vals = pdf["value"].fillna("").to_numpy()
-        seqs = pdf["seq"].to_numpy()
-        for o, v, s in zip(ops, vals, seqs):
+        for o, v, s in zip(
+            pdf["op"].to_numpy(),
+            pdf["value"].fillna("").to_numpy(),
+            pdf["seq"].to_numpy(),
+        ):
             if o == "put":
-                cur = v
-                n += 1
+                cur, n = v, n + 1
             elif o == "append":
-                cur = cur + v
-                n += 1
+                cur, n = cur + v, n + 1
             else:  # get: read-only observation
                 out_seq.append(int(s))
                 out_val.append(cur)
-    state.update((cur, n))
-    yield pd.DataFrame(
+    out = pd.DataFrame(
         {
             "seq": pd.array(out_seq, dtype="int64"),
             "key": [key[0]] * len(out_seq),
             "val": out_val,
         }
     )
+    return cur, n, out
+
+
+def _fold_one_key_serve_gets(
+    key: tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Stateful fold that also SERVES reads: ``_serve_gets_walk`` over
+    the key's GroupState."""
+    cur, n, out = _serve_gets_walk(
+        key, pdfs, *(state.get if state.exists else ("", 0))
+    )
+    state.update((cur, n))
+    yield out
 
 
 def streaming_get_results(oplog_stream: DataFrame) -> DataFrame:
@@ -330,40 +343,21 @@ except ImportError:  # pragma: no cover - older Spark / no protobuf
 
 class KVFoldGetsProcessor(StatefulProcessor):
     """transformWithStateInPandas twin of ``_fold_one_key_serve_gets``
-    — same fold semantics, expressed against the newer typed-state
-    handle API (ValueState instead of the single GroupState blob;
-    this is the API that also offers list/map state and timers)."""
+    — the same ``_serve_gets_walk``, expressed against the newer
+    typed-state handle API (ValueState instead of the single
+    GroupState blob; this is the API that also offers list/map state
+    and timers)."""
 
     def init(self, handle: "StatefulProcessorHandle") -> None:
         self._state = handle.getValueState("fold", _FOLD_STATE_SCHEMA)
 
     def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
         existing = self._state.get()
-        cur, n = existing if existing is not None else ("", 0)
-        out_seq: list[int] = []
-        out_val: list[str] = []
-        for pdf in rows:
-            pdf = pdf.sort_values("seq")
-            for o, v, s in zip(
-                pdf["op"].to_numpy(),
-                pdf["value"].fillna("").to_numpy(),
-                pdf["seq"].to_numpy(),
-            ):
-                if o == "put":
-                    cur, n = v, n + 1
-                elif o == "append":
-                    cur, n = cur + v, n + 1
-                else:
-                    out_seq.append(int(s))
-                    out_val.append(cur)
-        self._state.update((cur, n))
-        yield pd.DataFrame(
-            {
-                "seq": pd.array(out_seq, dtype="int64"),
-                "key": [key[0]] * len(out_seq),
-                "val": out_val,
-            }
+        cur, n, out = _serve_gets_walk(
+            key, rows, *(existing if existing is not None else ("", 0))
         )
+        self._state.update((cur, n))
+        yield out
 
     def close(self) -> None:
         pass

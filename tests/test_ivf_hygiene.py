@@ -75,6 +75,50 @@ def test_compact_cells_bounds_files_and_preserves_queries(spark, tmp_path):
     assert idx.compact_cells(max_files_per_cell=2)["compacted_cells"] == []
 
 
+def test_compact_cells_zero_row_cell(spark, tmp_path):
+    """A cell whose over-threshold files all hold zero rows comes out
+    of the rewrite with no directory: the swap drops its live dir,
+    query results are unchanged, no _compact_tmp/_compact_trash is
+    left, and reopening the index has nothing to recover."""
+    import shutil
+
+    emb = load_table(spark, SF, "embeddings")
+    path = str(tmp_path / "zr")
+    idx = similarity.IVFIndex.build(emb, path, n_cells=4)
+    queries = emb.filter(F.col("vec_id") % 100 == 0)
+    before = _query_snapshot(idx, queries)
+    cells_root = os.path.join(path, "cells")
+    empty_cell = max(_cell_file_counts(path)) + 1
+    # one zero-row part file in the at-rest cell schema, copied
+    # max_files_per_cell + 1 times into a fresh cell dir
+    empty_src = str(tmp_path / "empty_src")
+    spark.createDataFrame(
+        [], spark.read.parquet(cells_root).drop("cell_id").schema
+    ).coalesce(1).write.parquet(empty_src)
+    part = [f for f in os.listdir(empty_src) if f.endswith(".parquet")][0]
+    cell_dir = os.path.join(cells_root, f"cell_id={empty_cell}")
+    os.makedirs(cell_dir)
+    max_files = 2
+    for i in range(max_files + 1):
+        shutil.copy(
+            os.path.join(empty_src, part),
+            os.path.join(cell_dir, f"part-{i:05d}-empty.parquet"),
+        )
+    assert _cell_file_counts(path)[empty_cell] == max_files + 1
+    stats = idx.compact_cells(max_files_per_cell=max_files)
+    assert stats["compacted_cells"] == [empty_cell]
+    assert stats["files_before"] == max_files + 1
+    assert stats["files_after"] == 0
+    assert not os.path.isdir(cell_dir)
+    for leftover in ("_compact_tmp", "_compact_trash"):
+        assert not os.path.exists(os.path.join(path, leftover))
+    assert _query_snapshot(idx, queries) == before
+    listing = sorted(os.listdir(path)), sorted(os.listdir(cells_root))
+    reopened = similarity.IVFIndex(spark, path)  # runs _recover_compaction
+    assert (sorted(os.listdir(path)), sorted(os.listdir(cells_root))) == listing
+    assert _query_snapshot(reopened, queries) == before
+
+
 def test_compact_then_readd_stays_idempotent(spark, tmp_path):
     """The sidecar survives compaction (the id set is invariant), so
     a replayed batch after compaction still collapses to a no-op."""
@@ -566,27 +610,66 @@ def test_lease_release_verifies_nonce(spark, tmp_path):
     assert not os.path.exists(lease)
 
 
+def _jobs_in_group(sc, group: str, at_least: int = 0) -> list[int]:
+    """Job ids Spark's status tracker lists for ``group``, polled until
+    at least ``at_least`` are visible (job starts reach the tracker
+    through the asynchronous listener bus)."""
+    import time
+
+    deadline = time.time() + 30
+    while True:
+        ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+        if len(ids) >= at_least or time.time() > deadline:
+            return ids
+        time.sleep(0.05)
+
+
 def test_corrupt_tombstones_propagate(spark, tmp_path):
-    """ADVICE r12 (low): a tombstones dir that EXISTS but cannot be
-    read must raise, not silently serve deleted vectors. Only the
-    no-dir state means 'no deletes'."""
+    """A tombstones dir that EXISTS but cannot be read must raise, not
+    silently serve deleted rows — for both at-rest indexes, which
+    share one tombstone store. Only the no-dir state means 'no
+    deletes', and deciding it launches no Spark job."""
+    from mrgo_spark.operators import retrieval
+
     emb = load_table(spark, SF, "embeddings")
-    path = str(tmp_path / "ct")
-    idx = similarity.IVFIndex.build(
-        emb.filter(F.col("vec_id") % 4 == 0), path, n_cells=2
-    )
-    assert idx._tombstones() is None  # no dir → genuinely no deletes
-    tdir = os.path.join(path, "tombstones")
-    os.makedirs(tdir)
-    with open(os.path.join(tdir, "part-00000.parquet"), "wb") as f:
-        f.write(b"this is not parquet")
-    raised = False
-    try:
-        t = idx._tombstones()
-        assert t is not None, "corrupt tombstones misread as 'no deletes'"
-        t.collect()
-    except AssertionError:
-        raise
-    except Exception:
-        raised = True
-    assert raised, "corrupt tombstones must raise, not serve deletes"
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    built = [
+        similarity.IVFIndex.build(
+            emb.filter(F.col("vec_id") % 4 == 0),
+            str(tmp_path / "ct"),
+            n_cells=2,
+        ),
+        retrieval.BM25Index.build(
+            docs.filter(F.col("doc_id") % 4 == 0),
+            str(tmp_path / "cb"),
+            n_buckets=4,
+        ),
+    ]
+    sc = spark.sparkContext
+    for idx in built:
+        group = f"tombstone-probe-{os.path.basename(idx.path)}"
+        sc.setJobGroup(group, "no-delete tombstone read")
+        try:
+            # no dir → genuinely no deletes, decided without a job
+            assert idx._tombstones() is None
+            # a job in the same group after the read: once the tracker
+            # shows it, any job the read launched would show too
+            spark.range(1).collect()
+            jobs = _jobs_in_group(sc, group, at_least=1)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert len(jobs) == 1, jobs
+        tdir = os.path.join(idx.path, "tombstones")
+        os.makedirs(tdir)
+        with open(os.path.join(tdir, "part-00000.parquet"), "wb") as f:
+            f.write(b"this is not parquet")
+        raised = False
+        try:
+            t = idx._tombstones()
+            assert t is not None, "corrupt tombstones misread as 'no deletes'"
+            t.collect()
+        except AssertionError:
+            raise
+        except Exception:
+            raised = True
+        assert raised, "corrupt tombstones must raise, not serve deletes"

@@ -1020,11 +1020,11 @@ def _counted_frame(spark, rows, schema):
 
 
 def test_serve_paths_evaluate_query_frame_once(spark, tmp_path):
-    """BM25Index.query, BM25SegmentSet.query and IVFIndex.query pin the
-    caller's query frame once per call: the prune or probe collect and
-    the broadcast join read the same pinned rows, so the frame's
-    lineage runs exactly once — the accumulator reads the row count,
-    not a multiple of it."""
+    """BM25Index.query, BM25Index.query_champions, BM25SegmentSet.query
+    and IVFIndex.query pin the caller's query frame once per call: the
+    prune or probe collect and the broadcast join read the same pinned
+    rows, so the frame's lineage runs exactly once — the accumulator
+    reads the row count, not a multiple of it."""
     from mrgo_spark.operators.similarity import IVFIndex
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
@@ -1036,9 +1036,9 @@ def test_serve_paths_evaluate_query_frame_once(spark, tmp_path):
         for i in range(2)
     ])
     terms = [(1, "the"), (1, "data"), (2, "of"), (2, None)]
-    for served in (idx, sset):
+    for serve in (idx.query, idx.query_champions, sset.query):
         qt, acc = _counted_frame(spark, terms, "query_id long, term string")
-        assert served.query(qt, k=5).collect()
+        assert serve(qt, k=5).collect()
         assert acc.value == len(terms)
 
     emb = load_table(spark, SF, "embeddings")
@@ -1050,3 +1050,24 @@ def test_serve_paths_evaluate_query_frame_once(spark, tmp_path):
     qv, acc = _counted_frame(spark, qrows, "vec_id long, embedding array<double>")
     got = ivf.query(qv, k=5, n_probe=3).collect()
     assert got and acc.value == len(qrows)
+
+
+def test_index_sources_carry_no_round_history():
+    """The at-rest index modules state contracts, not review history:
+    no VERDICT_rN / ADVICE rN / "rNN review finding" / "rNN
+    optimization round" token may appear in their source."""
+    import pathlib
+
+    from mrgo_spark.operators import similarity
+
+    pat = re.compile(
+        r"VERDICT_r\d|ADVICE[ _]r\d|\br\d+\s+review\s+finding"
+        r"|\br\d+\s+optimization\s+round"
+    )
+    for mod in (retrieval, similarity):
+        src = pathlib.Path(mod.__file__).read_text()
+        hits = [
+            (mod.__name__, src.count("\n", 0, m.start()) + 1, m.group())
+            for m in pat.finditer(src)
+        ]
+        assert not hits, hits

@@ -152,6 +152,46 @@ def test_streaming_gets_match_batch_get_results(spark, tmp_path):
     assert len(got) > 0
 
 
+def test_serve_gets_walk_semantics():
+    """The per-key Get-serving walk both stateful forms share, without
+    Spark: a Get on a missing key reads "", Append before any Put
+    appends to "", a Put after an Append replaces, a NULL Append value
+    appends nothing, and (cur, n) carries across calls."""
+    import pandas as pd
+
+    def ops(rows):
+        return pd.DataFrame(rows, columns=["seq", "op", "value"])
+
+    # chunks out of seq order: the walk sorts each chunk by seq
+    cur, n, out = stream_ops._serve_gets_walk(
+        ("k",),
+        iter([
+            ops([(3, "append", "b"), (1, "get", None), (2, "append", "a")]),
+            ops([(4, "get", None), (5, "put", "x"), (6, "append", None),
+                 (7, "get", None)]),
+        ]),
+        "",
+        0,
+    )
+    assert (cur, n) == ("x", 4)
+    assert list(out["seq"]) == [1, 4, 7]
+    assert list(out["key"]) == ["k", "k", "k"]
+    assert list(out["val"]) == ["", "ab", "x"]
+    assert str(out["seq"].dtype) == "int64"
+    # state from the first call carries into the second
+    cur, n, out = stream_ops._serve_gets_walk(
+        ("k",), iter([ops([(8, "get", None), (9, "append", "y"),
+                           (10, "get", None)])]), cur, n
+    )
+    assert (cur, n) == ("xy", 5)
+    assert list(out["val"]) == ["x", "xy"]
+    # a batch with no gets emits an empty frame with the output columns
+    _, _, out = stream_ops._serve_gets_walk(
+        ("k",), iter([ops([(11, "put", "z")])]), cur, n
+    )
+    assert list(out.columns) == ["seq", "key", "val"] and out.empty
+
+
 def test_transform_with_state_gets_match_batch(spark, tmp_path):
     """The transformWithStateInPandas fold (typed ValueState API)
     serves the same get results as the batch path — API-equivalence
