@@ -1,14 +1,13 @@
-"""Load-independent resource metrics (VERDICT_r12 #1 — the
+"""Load-independent resource metrics (the
 TestRPCBytes2B/TestCount2B analog, reference raft/test_test.go:128-157
 and :455): per-query shuffle bytes read/written, spilled bytes and
 input bytes, read from the JVM AppStatusStore after each query runs.
 
-Wall-clock on a shared box needed judge-side adjudication three rounds
-running; BYTES are deterministic for a fixed plan over fixed data, so
-a recorded byte budget catches plan regressions (extra corpus passes,
-a lost broadcast, an unpushed filter) mechanically — the r11 IVF
-lazy-centroid-chain recompute would have tripped a 1.5× shuffle-byte
-gate long before any timing did.
+Wall-clock on a shared box is noisy; BYTES are deterministic for a
+fixed plan over fixed data, so a recorded byte budget catches plan
+regressions (extra corpus passes, a lost broadcast, an unpushed
+filter) mechanically — an IVF lazy-centroid-chain recompute trips a
+1.5× shuffle-byte gate long before any timing does.
 
 Usage:
     marker = stage_marker(spark)
@@ -124,8 +123,8 @@ def run_with_metrics(spark, df_or_thunk) -> dict[str, int]:
     ``rows``. Pass a zero-arg callable to put DataFrame CONSTRUCTION
     inside the metric window too — driver-tiny collects during
     construction (Lloyd centroids, IVF seeds, fixed query sets) are
-    real jobs the budget should see (the r11 lazy-centroid-chain
-    recompute lived exactly there). The caller is responsible for
+    real jobs the budget should see (a lazy-centroid-chain
+    recompute lives exactly there). The caller is responsible for
     fresh-process / fixed-order discipline: session caches
     (IVF/PQ/BPE/BM25) train inside whichever query touches them
     first, so budgets are only comparable when recorder and checker

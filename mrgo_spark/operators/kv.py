@@ -69,7 +69,7 @@ def synth_oplog(events: DataFrame, n_keys: int = 50, dup_every: int = 17) -> Dat
 def dedup_at_most_once(oplog: DataFrame) -> DataFrame:
     """Keep only the first delivery of each (client, reqid).
 
-    Formulation note (measured, round 3): the hash-aggregate
+    Formulation note (measured): the hash-aggregate
     alternative — groupBy(client, reqid).agg(min_by(struct(*), seq))
     — would suppress retransmissions map-side before the shuffle, but
     A/B at sf0.1 ran 2.06 s vs 1.17 s for this window form: with a
@@ -244,10 +244,10 @@ def ring_points(n_servers: int = CH_SERVERS) -> list[tuple[int, int]]:
 def ring_owner_exprs(n_servers: int = CH_SERVERS):
     """(key_pos, owner) Column pair for the consistent-hash ring —
     THE one source of the md5 key position and the literal-array
-    successor lookup (r13 review: the streaming router had a verbatim
-    copy; a vnode/hash change edited in one place would desync the
-    twins). ``owner`` references the ``key_pos`` column, so callers
-    must materialize key_pos first."""
+    successor lookup (the streaming router uses it too, so a vnode/hash
+    change edited in one place cannot desync two copies). ``owner``
+    references the ``key_pos`` column, so callers must materialize
+    key_pos first."""
     pts = ring_points(n_servers)
     pos_arr = "array(" + ",".join(f"{p}L" for p, _ in pts) + ")"
     srv_arr = "array(" + ",".join(str(s) for _, s in pts) + ")"
@@ -266,7 +266,7 @@ def ring_owner_exprs(n_servers: int = CH_SERVERS):
 def consistent_ring_stats(
     oplog: DataFrame, n_servers: int = CH_SERVERS
 ) -> DataFrame:
-    """Consistent-hashing key placement (r13) — the ring-based
+    """Consistent-hashing key placement — the ring-based
     alternative to the reference's fixed first-byte-mod-10 routing
     (key2shard): key → first ring point clockwise (md5_48 of the key
     vs the sorted virtual-node positions, wrapping to the minimum).
@@ -295,7 +295,7 @@ SG_HOP = 250     # replica reassignment stride (clients hop replicas)
 
 
 def session_guarantee_audit(oplog: DataFrame) -> DataFrame:
-    """Client-session consistency audit (r13) — the Terry et al. 1994
+    """Client-session consistency audit — the Terry et al. 1994
     session guarantees (read-your-writes, monotonic reads) checked
     against a deterministic lagged-replica serving model. The
     linearizability checker (operators/linearize.py) answers "is this
@@ -320,9 +320,9 @@ def session_guarantee_audit(oplog: DataFrame) -> DataFrame:
     (client, key). Both guarantees are PER-ITEM (Terry et al. define
     them over a data item's writes): a session interleaving two keys
     must not flag a cross-key version drop — the audit windows
-    partition by (client, key), not client alone (r13 review
-    finding; the synthetic oplog maps each client to one key, so the
-    fixture could not see the difference).
+    partition by (client, key), not client alone (the synthetic
+    oplog maps each client to one key, so the fixture cannot see the
+    difference; a test pins it).
 
     Shape: one key shuffle for the visibility window, one client
     shuffle for own-writes + monotonic — both windows domain-ordered,
@@ -337,8 +337,8 @@ def session_guarantee_audit(oplog: DataFrame) -> DataFrame:
     # the ops frame (dedup window + own-writes window) feeds BOTH the
     # puts and gets branches of the visibility union — without a
     # checkpoint each branch re-runs the oplog dedup + client window
-    # (the no-exchange-reuse class; the r13 plan record showed the
-    # scan + two windows doubled). One oplog pass at any scale.
+    # (the no-exchange-reuse class; the plan shows the scan + two
+    # windows doubled without it). One oplog pass at any scale.
     ops = ops.withColumn(
         "own_last_put_seq",
         F.last(
@@ -456,7 +456,7 @@ TRANSFER_STRIDE = 80  # shard s arrives at its new owner at offset (s+1)*80
 
 def transfer_serving(oplog: DataFrame) -> DataFrame:
     """O24 completion: serving DURING an in-flight handoff
-    (VERDICT_r10 #3; reference shardkv/test_test.go:817
+    (reference shardkv/test_test.go:817
     ``TestChallenge2Unaffected`` / :887 ``TestChallenge2Partial``).
     ``epoch_serving`` models instantaneous epoch flips; the reference
     additionally requires (a) shards NOT moving in a reconfiguration
@@ -484,7 +484,7 @@ def transfer_serving(oplog: DataFrame) -> DataFrame:
     Output per (epoch, contacted gid): the three counts plus the
     unaffected-shard observables n_unaffected_req /
     n_unaffected_served (correctly-routed requests to non-moving
-    shards, and how many served). NOTE (ADVICE_r11): in THIS model
+    shards, and how many served). NOTE: in THIS model
     the two are equal BY CONSTRUCTION, not by measurement —
     unaffected = routed & ~moving implies served = routed &
     (~moving | ~in_window), so the equality is the model stating
@@ -553,7 +553,7 @@ CATCHUP_STRIDE = 100  # log entries to apply ONE missed config in order
 
 
 def config_catchup_serving(oplog: DataFrame) -> DataFrame:
-    """Missed-config catch-up audit (VERDICT_r11 #2; reference
+    """Missed-config catch-up audit (reference
     shardkv/test_test.go:211 ``TestMissChange``): a group that is
     offline across several config changes must, on return, apply the
     missed configs STRICTLY IN ORDER and only serve once caught up —
@@ -659,7 +659,7 @@ def config_catchup_counts(deduped: DataFrame) -> DataFrame:
 
 
 def handoff_gc_obligations(oplog: DataFrame) -> DataFrame:
-    """Shard-handoff GC audit (VERDICT_r10 #2; reference
+    """Shard-handoff GC audit (reference
     shardkv/test_test.go:663 ``TestChallenge1Delete``): after a config
     change the SOURCE group must stop storing the shards it handed
     off — the reference enforces it through snapshot-size budgets.
@@ -999,7 +999,7 @@ def rebalance_config_history(spark, schedule=None) -> DataFrame:
     plus the migration observable (reference shardmaster/common.go:6-17
     RPC spec; test_test.go:35-52 balance invariant).
 
-    Implementation (r13 optimization round): the fold is pure
+    Implementation: the fold is pure
     METADATA — NSHARDS rows × |schedule| configs from a constant
     schedule; no sf_dir table feeds it — so it runs the module's own
     Python fold (:func:`rebalance`, the function the three-way test
@@ -1054,8 +1054,8 @@ def rebalance_config_history_df(spark, schedule=None) -> DataFrame:
             nxt = rebalance_step_df(prev, live)
         # Each step references `prev` three ways (held/marked/keepers);
         # chained 7 deep that lineage explodes Catalyst's
-        # DeduplicateRelations (the round-2 connected-components
-        # lesson). Sever it per step — configs are NSHARDS rows, and
+        # DeduplicateRelations (as connected_components' rounds do).
+        # Sever it per step — configs are NSHARDS rows, and
         # coalesce(1) keeps each checkpoint job at one task instead
         # of shuffle-partitions many (7.4 → ~5 s; the remainder is
         # 7 sequential checkpoint jobs' fixed scheduling/broadcast

@@ -62,15 +62,21 @@ class KVStore:
     def get(self, key: str) -> str:
         """Current value; "" for missing key (kvraft/client.go:30-33).
 
-        Driver-side single-key read — filter pushes the key down so
-        only matching log rows fold.
+        Driver-side single-key read. The key filter is pushed below the
+        per-key fold but stops above the ``(client, reqid)``
+        ``row_number`` window of ``kv.dedup_at_most_once`` (a window
+        passes only filters on its partition columns), so every read
+        ships the whole log and shuffles it by ``(client, reqid)``;
+        only the deduped rows are cut to the key before the fold.
         """
         rows = self.state().filter(F.col("key") == key).collect()
         return rows[0].state if rows else ""
 
     def get_many(self, keys: list[str]) -> dict[str, str]:
         """Batch read: one fold job for N keys (N ``get`` calls would
-        launch N jobs). Missing keys read as ""."""
+        launch N jobs). Missing keys read as "". As in ``get``, the
+        key filter stops above the dedup window, so each call still
+        shuffles every log row once."""
         rows = self.state().filter(F.col("key").isin(list(keys))).collect()
         found = {r.key: r.state for r in rows}
         return {k: found.get(k, "") for k in keys}

@@ -112,7 +112,7 @@ def file_metadata(documents: DataFrame) -> DataFrame:
 
 def file_scan_stats(frames: list[tuple[DataFrame, str]]) -> DataFrame:
     """Per-input-file scan metadata — the O1 whole-file scan as a
-    declared, closure-free DataFrame row (VERDICT_r8 #1).
+    declared, closure-free DataFrame row.
 
     The reference schedules one map task per input FILE and the map
     UDF receives the filename as its key (mr/worker.go:68-78,

@@ -660,7 +660,7 @@ def near_pairs_cosine_lsh(
     ``n_planes/bands`` hyperplanes — per-band signatures instead of
     slicing one full signature, so projection collapse cannot
     duplicate the plane-projection subtree across the band fan
-    (CLAUDE.md round-2 lesson). Candidates = pairs sharing ≥1 cell
+    (a CLAUDE.md gotcha). Candidates = pairs sharing ≥1 cell
     (equi-join on (band, bucket), id_a < id_b, distinct — hash-only
     shuffle, no vectors). Vectors join back once per side for the
     exact ``cosine_fx`` verify, so every emitted pair is exactly

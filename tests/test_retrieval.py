@@ -1052,22 +1052,40 @@ def test_serve_paths_evaluate_query_frame_once(spark, tmp_path):
     assert got and acc.value == len(qrows)
 
 
-def test_index_sources_carry_no_round_history():
-    """The at-rest index modules state contracts, not review history:
-    no VERDICT_rN / ADVICE rN / "rNN review finding" / "rNN
-    optimization round" token may appear in their source."""
+# Round-history tokens: VERDICT_rN, ADVICE rN, "rNN review ...",
+# "rNN optimization round", bare "(rNN)" and "round N"/"round-N".
+_ROUND_HISTORY = re.compile(
+    r"VERDICT_r\d|ADVICE[ _]r\d|\br\d+\s+review\b"
+    r"|\br\d+\s+optimization\s+round|\(r\d+\)|\bround[- ]\d"
+)
+
+
+def _round_history_hits(*mods):
     import pathlib
 
+    hits = []
+    for mod in mods:
+        src = pathlib.Path(mod.__file__).read_text()
+        hits += [
+            (mod.__name__, src.count("\n", 0, m.start()) + 1, m.group())
+            for m in _ROUND_HISTORY.finditer(src)
+        ]
+    return hits
+
+
+def test_index_sources_carry_no_round_history():
+    """The at-rest index modules state contracts, not review history."""
     from mrgo_spark.operators import similarity
 
-    pat = re.compile(
-        r"VERDICT_r\d|ADVICE[ _]r\d|\br\d+\s+review\s+finding"
-        r"|\br\d+\s+optimization\s+round"
-    )
-    for mod in (retrieval, similarity):
-        src = pathlib.Path(mod.__file__).read_text()
-        hits = [
-            (mod.__name__, src.count("\n", 0, m.start()) + 1, m.group())
-            for m in pat.finditer(src)
-        ]
-        assert not hits, hits
+    hits = _round_history_hits(retrieval, similarity)
+    assert not hits, hits
+
+
+def test_engine_sources_carry_no_round_history():
+    """Same rule for the metrics, KV, MR-app, session and worker-daemon
+    modules."""
+    from mrgo_spark import metrics, session, worker_daemon
+    from mrgo_spark.operators import kv, mrapps
+
+    hits = _round_history_hits(metrics, kv, mrapps, session, worker_daemon)
+    assert not hits, hits
