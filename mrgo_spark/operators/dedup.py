@@ -23,6 +23,8 @@ tested rather than oracle-declared (SURVEY §2.4).
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -121,7 +123,7 @@ def minhash_lsh_pairs(
     Columns: (id_a, id_b, n_bands) — verify candidates with
     ``ngram_jaccard_pairs`` downstream.
 
-    Plan note (measured, round 3): the a⋈b self-join duplicates the
+    Plan note (measured): the a⋈b self-join duplicates the
     signature subtree (Spark plans one side broadcast, so there is no
     identical-exchange reuse). Both remedies LOST to recompute at
     sf0.1 warm: shuffle_hash hint 1.50 s, eager localCheckpoint of
@@ -182,7 +184,7 @@ def incremental_dedup_audit(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Incremental-ingestion dedup (r5): classify each INCOMING doc
+    """Incremental-ingestion dedup: classify each INCOMING doc
     against the EXISTING corpus without re-deduping the lake —
     (doc_id, verdict, match_id) with verdict in {dup_of_existing,
     dup_within_batch, new}. match_id = the smallest existing doc id
@@ -222,7 +224,7 @@ def incremental_dedup_audit(
     )
 
 
-# ---------------------------------------- md5-portable MinHash (r5)
+# ---------------------------------------- md5-portable MinHash
 #
 # The xxhash64 MinHash above is the cheap flagship but can never be
 # oracle-checked (no xxhash64 in DuckDB, seed-dependent by design).
@@ -266,8 +268,8 @@ def _minhash_md5_sig(
 ) -> DataFrame:
     """Wide portable-signature frame (out_id, h0..h{n-1}) — the ONE
     copy of the base-hash + affine-min math both declared entries
-    consume (r5 review finding: the pairs entry had hand-copied it;
-    the oracle side was already factored into _mh_mins_sql).
+    consume, so the pairs entry cannot drift from it (the oracle side
+    is factored the same way, into _mh_mins_sql).
 
     Explode-once shape as minhash_signatures: one (doc, shingle)
     explode, ONE aggregate with num_hashes partial mins — one row
@@ -323,10 +325,10 @@ def _mh_band_cand(
     max_bucket: int,
 ) -> DataFrame:
     """Banded-LSH candidate pairs (id_a, id_b, n_bands) — the ONE
-    copy of the band-key build + bucket cap + band self-join (r11
-    refactor: minhash_md5_pairs' candidate stage, now also consumed
-    by lsh_recall_eval which must measure the candidate set BEFORE
-    the verify)."""
+    copy of the band-key build + bucket cap + band self-join:
+    minhash_md5_pairs' candidate stage, also consumed by
+    lsh_recall_eval, which must measure the candidate set BEFORE the
+    verify."""
     rows_per_band = num_hashes // bands
     # localCheckpoint: the band self-join duplicates the signature
     # subtree (no exchange reuse across the a/b aliases) and the md5
@@ -447,11 +449,7 @@ def ngram_jaccard_pairs(
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 10,
-    converge: bool = False,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Connected components over an undirected edge list by min-label
     propagation: (id, component) where component = min reachable node
@@ -460,28 +458,27 @@ def connected_components(
 
     Each round is one equi-join + one partial-min aggregate (both
     shuffle on the same key, so the exchange is reused); labels move
-    one hop per round, so ``max_iter`` must be ≥ the graph diameter.
+    one hop per round, and the loop runs to the fixpoint: it
+    localCheckpoint()s every round to truncate lineage and stops at
+    the first round that changes no label (one action per round).
     Dup-graphs in practice are near-stars (copies of one original), so
-    a handful of rounds converges; ``converge=True`` iterates to a
-    fixpoint instead, checking changed-label count per round (one
-    action per round) and localCheckpoint()-ing every 3 rounds to
-    truncate lineage. At 1000-executor scale the same loop holds;
-    the O(log n)-round alternating large-star/small-star variant
-    (Kiveris et al., "Connected Components in MapReduce and Beyond")
-    is the upgrade path if diameters ever grow.
+    a handful of rounds converges. At 1000-executor scale the same
+    loop holds; the O(log n)-round alternating large-star/small-star
+    variant (Kiveris et al., "Connected Components in MapReduce and
+    Beyond") is the upgrade path if diameters ever grow.
     """
     und = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     )
     und = und.unionAll(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    # Materialize the edge list ONCE (r13 optimization round): every
-    # round's join — and, in converge mode, every round's checkpoint
-    # action — re-executed the whole ``pairs`` lineage (for the
-    # declared dedup pipeline that is the full corpus tokenize + both
-    # star-edge windows, once per round). Eager localCheckpoint here
-    # pins edge generation to exactly one pass; rounds then join the
-    # materialized blocks. (Eager, not lazy: und is a UNION lineage —
-    # the r7 UnionBase.rewriteConstraints precedent.)
+    # Materialize the edge list ONCE: otherwise every round's join and
+    # checkpoint action re-executes the whole ``pairs`` lineage (for
+    # the declared dedup pipeline that is the full corpus tokenize +
+    # both star-edge windows, once per round). Eager localCheckpoint
+    # here pins edge generation to exactly one pass; rounds then join
+    # the materialized blocks. (Eager, not lazy: und is a UNION
+    # lineage, and once derived self-joins enter its plan Spark can
+    # throw "key not found" in UnionBase.rewriteConstraints.)
     und = und.filter(F.col("a") != F.col("b")).distinct().localCheckpoint(
         eager=True
     )
@@ -490,64 +487,43 @@ def connected_components(
         .distinct()
         .select("id", F.col("id").alias("component"))
     )
-    rounds = max_iter if not converge else 1_000_000
-    for i in range(rounds):
+    for i in itertools.count():
         prop = und.join(labels, und["a"] == labels["id"]).select(
             F.col("b").alias("id"), "component"
         )
         # Lineage truncation: without it the plan nests one join+agg
         # deeper per round and Catalyst analysis time grows
-        # superlinearly long before the data does. In converge mode
-        # checkpoint EVERY round, and carry the PREVIOUS label through
-        # the aggregate (labels has exactly one row per id, so
-        # max(_old) ignoring prop's NULLs recovers it): the changed
-        # count is then a filter over the just-materialized blocks —
-        # no per-round join against the previous labels frame (r13
-        # optimization round; the join was one extra shuffle per
-        # round).
-        if converge:
-            new_labels = (
-                labels.select(
-                    "id", "component", F.col("component").alias("_old")
+        # superlinearly long before the data does. Checkpoint EVERY
+        # round, and carry the PREVIOUS label through the aggregate
+        # (labels has exactly one row per id, so max(_old) ignoring
+        # prop's NULLs recovers it): the changed count is then a
+        # filter over the just-materialized blocks — no per-round
+        # join (and shuffle) against the previous labels frame.
+        new_labels = (
+            labels.select("id", "component", F.col("component").alias("_old"))
+            .unionAll(
+                prop.select(
+                    "id", "component", F.lit(None).cast("long").alias("_old")
                 )
-                .unionAll(
-                    prop.select(
-                        "id",
-                        "component",
-                        F.lit(None).cast("long").alias("_old"),
-                    )
-                )
-                .groupBy("id")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.max("_old").alias("_old"),
-                )
-            ).localCheckpoint(eager=True)
-            labels = new_labels.select("id", "component")
-            # Round 0 never needs the convergence check (r13
-            # optimization round, batch 7): any edge (a≠b) lowers its
-            # larger endpoint's label in the first propagation, so
-            # changed > 0 whenever edges exist — and on an edgeless
-            # graph labels is EMPTY, so the one extra (empty) round
-            # the skipped check costs is sub-0.1 s. Later rounds
-            # check as before; the loop still runs to the identical
-            # fixpoint, so outputs are unchanged.
-            if i == 0:
-                continue
-            changed = new_labels.filter(
-                F.col("component") != F.col("_old")
-            ).count()
-            if changed == 0:
-                break
-        else:
-            new_labels = (
-                labels.unionAll(prop)
-                .groupBy("id")
-                .agg(F.min("component").alias("component"))
             )
-            if i % 3 == 2:
-                new_labels = new_labels.localCheckpoint(eager=True)
-            labels = new_labels
+            .groupBy("id")
+            .agg(
+                F.min("component").alias("component"),
+                F.max("_old").alias("_old"),
+            )
+        ).localCheckpoint(eager=True)
+        labels = new_labels.select("id", "component")
+        # Round 0 never needs the convergence check: any edge (a≠b)
+        # lowers its larger endpoint's label in the first propagation,
+        # so changed > 0 whenever edges exist — and on an edgeless
+        # graph labels is EMPTY, so the one extra (empty) round the
+        # skipped check costs is sub-0.1 s. Later rounds check; the
+        # loop runs to the same fixpoint either way.
+        if i == 0:
+            continue
+        changed = new_labels.filter(F.col("component") != F.col("_old")).count()
+        if changed == 0:
+            break
     return labels
 
 
@@ -619,7 +595,7 @@ def edit_distance_pairs_symdelete(
     INSIDE the leading chars — the complement of
     ``edit_distance_pairs``'s prefix-equality blocking (which, by
     construction, misses any edit in the first ``block_prefix``
-    chars; self-noted gap, CLAUDE.md round-2 candidates).
+    chars).
 
     Blocking key = the first ``key_len`` chars. Each doc emits that
     key plus every single-deletion variant of it (``key_len + 1``
@@ -716,8 +692,6 @@ def dup_clusters(
     id_col: str = "doc_id",
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 10,
-    converge: bool = False,
 ) -> DataFrame:
     """End-to-end cluster assignment: candidate pairs → connected
     components → canonical id (= min cluster member) for EVERY input
@@ -730,9 +704,7 @@ def dup_clusters(
     back is corpus-sized but its right side is broadcastable at real
     dup rates; the cluster_size window shuffles on canonical_id once.
     """
-    comp = connected_components(
-        pairs, src=src, dst=dst, max_iter=max_iter, converge=converge
-    )
+    comp = connected_components(pairs, src=src, dst=dst)
     joined = df.select(F.col(id_col)).join(
         comp, F.col(id_col) == F.col("id"), "left"
     )
@@ -755,16 +727,12 @@ def canonical_dedup(
     id_col: str = "doc_id",
     src: str = "id_a",
     dst: str = "id_b",
-    max_iter: int = 10,
-    converge: bool = False,
 ) -> DataFrame:
     """Final dedup: drop every non-canonical cluster member, keep the
     full original rows (no wide window over the corpus — just a
     left-anti join against the small non-canonical id set)."""
     non_canon = (
-        connected_components(
-            pairs, src=src, dst=dst, max_iter=max_iter, converge=converge
-        )
+        connected_components(pairs, src=src, dst=dst)
         .filter(F.col("id") != F.col("component"))
         .select(F.col("id").alias(id_col))
     )
@@ -821,82 +789,6 @@ def line_dedup(
             ),
             256,
         ).alias("kept_fingerprint"),
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — O(log n) rounds regardless of graph diameter,
-    vs one hop per round for ``connected_components``. The upgrade
-    path when dup-graphs stop being near-stars (chains of partial
-    copies, web-crawl link graphs).
-
-    large-star: every node links its larger neighbors to the min of
-    its neighborhood (incl. itself); small-star: every node links its
-    smaller neighbors (and itself) to that min. Each round is a
-    groupBy-min + join — same shuffle key, exchange reused. Converges
-    when the edge multiset fingerprint (count + xor of xxhash64) is
-    stable; the fixpoint is a forest of stars rooted at component
-    minima. Returns (id, component) for every node.
-    """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    def fingerprint(df: DataFrame):
-        r = df.select(
-            F.count("*").alias("n"),
-            F.bit_xor(F.xxhash64("a", "b")).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
-
-    def large_star(df: DataFrame) -> DataFrame:
-        und = df.unionAll(df.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        m = (
-            und.groupBy("a")
-            .agg(F.min("b").alias("mb"))
-            .select("a", F.least("mb", "a").alias("m"))
-        )
-        return (
-            und.join(m, "a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .distinct()
-        )
-
-    def small_star(df: DataFrame) -> DataFrame:
-        directed = df.select(
-            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-        ).distinct()
-        m = directed.groupBy("u").agg(F.min("v").alias("m"))
-        to_min = directed.join(m, "u")
-        self_edge = m.select(F.col("u").alias("a"), F.col("m").alias("b"))
-        nbr_edges = to_min.filter(F.col("v") != F.col("m")).select(
-            F.col("v").alias("a"), F.col("m").alias("b")
-        )
-        return self_edge.unionAll(nbr_edges).distinct()
-
-    prev = None
-    for i in range(max_iter):
-        e = small_star(large_star(e)).localCheckpoint(eager=True)
-        fp = fingerprint(e)
-        if fp == prev:
-            break
-        prev = fp
-    members = e.select(F.col("a").alias("id"), F.col("b").alias("component"))
-    centers = e.select(F.col("b").alias("id"), F.col("b").alias("component")).distinct()
-    return members.unionAll(centers).groupBy("id").agg(
-        F.min("component").alias("component")
     )
 
 
@@ -988,11 +880,11 @@ SIMHASH_MD5_BITS = 48  # md5 12-hex base hash width
 def simhash_md5_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Engine-portable SimHash (r5): 48-bit sign-sum over the md5
+    """Engine-portable SimHash: 48-bit sign-sum over the md5
     base hash of each token — same plan shape as simhash_table
     (explode once, ONE aggregate with 48 map-side partial sums, pack
     after the agg) but every vote replays in DuckDB, completing the
-    LSH-family portability set (SRP r4b, MinHash r5). Docs with zero
+    LSH-family portability set (SRP, MinHash). Docs with zero
     tokens have no rows (excluded). Columns: (id, sh)."""
     bits = SIMHASH_MD5_BITS
     ex = df.select(
@@ -1387,7 +1279,7 @@ def canonical_by_score(
     id_col: str = "doc_id",
     score_col: str = "score",
 ) -> DataFrame:
-    """Quality-aware canonicalization (r7): re-pick each dup
+    """Quality-aware canonicalization: re-pick each dup
     cluster's representative as its HIGHEST-``score_col`` member
     (ties → smallest id) instead of dup_clusters' min-id rule — the
     production dedup policy (keep the best copy, not the oldest).
@@ -1401,9 +1293,9 @@ def canonical_by_score(
     broadcastable; the window shuffles the corpus once by cluster,
     which the keep decision needs anyway).
 
-    ``scored`` need not cover every cluster member (ADVICE r7: the
-    old inner join silently DROPPED unscored members, shifting the
-    rep with no signal): unscored members survive the LEFT join with
+    ``scored`` need not cover every cluster member (an inner join
+    would silently DROP unscored members, shifting the rep with no
+    signal): unscored members survive the LEFT join with
     a NULL score, sort last in the rep order, and surface in the
     output — a partial scored frame is visible, never silent."""
     j = clusters.select(
@@ -1546,8 +1438,8 @@ def prefix_filter_jaccard_pairs(
     inverted-index literature processes terms rarest-first). Tokens
     ride as lpad(freq,19,'0')||'|'||token sort keys — string order ==
     (freq, token) order in both engines for ANY int64 frequency (19
-    digits covers 2^63; ADVICE_r10 — a 10-digit pad silently degraded
-    the rarity order above 10^10 occurrences), and the key joins as
+    digits covers 2^63; a 10-digit pad would silently degrade the
+    rarity order above 10^10 occurrences), and the key joins as
     the token identity (freq is a function of the token).
 
     Threshold is the exact rational num/den (default 4/5): prefix

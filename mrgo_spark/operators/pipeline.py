@@ -603,10 +603,8 @@ def leakage_safe_split(
     dst: str = "dst",
     train_pct: int = 80,
     val_pct: int = 10,
-    max_iter: int = 10,
-    converge: bool = False,
 ) -> DataFrame:
-    """Cluster-atomic train/val/test split (r6): every member of a
+    """Cluster-atomic train/val/test split: every member of a
     near-dup cluster gets the split of the cluster's CANONICAL member
     (min id), so no near-duplicate pair ever straddles train/test.
     ``dataset_split`` alone is stable but leakage-blind — a mutated
@@ -626,10 +624,7 @@ def leakage_safe_split(
     """
     from .dedup import dup_clusters
 
-    clusters = dup_clusters(
-        df, pairs, id_col=id_col, src=src, dst=dst,
-        max_iter=max_iter, converge=converge,
-    )
+    clusters = dup_clusters(df, pairs, id_col=id_col, src=src, dst=dst)
 
     def split_of(bucket):
         return (

@@ -802,8 +802,8 @@ def q_dup_cluster_components(spark, sf_dir):
     pairs → clusters, cluster id = min member id (then "keep min id
     per cluster" finishes dedup). The declared graph is a 4-node chain
     per every-10th doc (d — d+100000 — d+200000 — d+300000), diameter
-    3, so label propagation needs 3 rounds (max_iter=4 for margin);
-    the oracle walks the same graph with a recursive CTE."""
+    3, so label propagation reaches its fixpoint in 3 rounds; the
+    oracle walks the same graph with a recursive CTE."""
     base = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 0)
@@ -815,7 +815,7 @@ def q_dup_cluster_components(spark, sf_dir):
         .unionAll(base.select((d + 100000).alias("src"), (d + 200000).alias("dst")))
         .unionAll(base.select((d + 200000).alias("src"), (d + 300000).alias("dst")))
     )
-    return dedup.connected_components(edges, max_iter=4).select(
+    return dedup.connected_components(edges).select(
         F.col("id").alias("node_id"), "component"
     )
 
@@ -910,7 +910,6 @@ def q_dedup_pipeline_canonical(spark, sf_dir):
         id_col="doc_id",
         src="src",
         dst="dst",
-        converge=True,
     )
 
 
@@ -997,9 +996,7 @@ def q_leakage_safe_split(spark, sf_dir):
     through). Oracle walks the same recursive-CTE graph, then applies
     the same md5-bucket rule to the canonical id."""
     corpus = _planted_dup_corpus(spark, sf_dir)
-    return pipeline.leakage_safe_split(
-        corpus, _dup_blocking_pairs(corpus), converge=True
-    )
+    return pipeline.leakage_safe_split(corpus, _dup_blocking_pairs(corpus))
 
 
 @declare(
@@ -1116,7 +1113,7 @@ def q_dedup_pipeline_minhash(spark, sf_dir):
     corpus = _dup_corpus(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(corpus)
     return dedup.dup_clusters(
-        corpus, pairs, id_col="doc_id", src="id_a", dst="id_b", converge=True
+        corpus, pairs, id_col="doc_id", src="id_a", dst="id_b"
     )
 
 
@@ -4062,8 +4059,7 @@ def q_media_dedup_canonical(spark, sf_dir):
     )
     media = corpus.select(F.col("doc_id").alias("media_id"))
     return dedup.dup_clusters(
-        media, pairs, id_col="media_id", src="id_a", dst="id_b",
-        converge=True,
+        media, pairs, id_col="media_id", src="id_a", dst="id_b"
     )
 
 
@@ -4686,7 +4682,6 @@ def q_canonical_dedup_by_quality(spark, sf_dir):
         id_col="doc_id",
         src="src",
         dst="dst",
-        converge=True,
     )
     scored = corpus.select(
         "doc_id", textstats.classifier_score_col("text").alias("score")

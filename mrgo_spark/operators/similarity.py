@@ -2706,106 +2706,6 @@ def pq_topk_imi(
     return _pq_topk_window(scored, topk)
 
 
-def pq_topk_adc_join(
-    emb: DataFrame,
-    queries: DataFrame | None = None,
-    n_queries: int = 8,
-    topk: int = 10,
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents=None,
-    assigned=None,
-) -> DataFrame:
-    """Join-form ADC twin for TABLE-sized query sets: the literal form (`pq_topk_adc`) bakes one LUT
-    struct per query into the plan, so plan size grows linearly with
-    n_queries — fine for the 8-query serving demo, wrong for a batch
-    ANN over a query *table*. Here the LUT is DATA, not plan:
-
-      codes long form (vec_id, sub, cid)   — posexplode of the codes
-      × broadcast lut_df (query_id, sub, cid, d)  — built by joining
-        the query subvectors against the 128-row literal centroid
-        grid (the SRP broadcast-grid idiom), exact integer zip_with
-        fold per (query, sub, cid)
-      → groupBy (query_id, vec_id) Σd      — map-side partial agg
-      → top-k window.
-
-    ``queries`` defaults to the n_queries smallest-id vectors of
-    ``emb`` so the result is row-identical to the literal form
-    (parity-pinned in tests); pass any (id_col, vec_col) DataFrame
-    for a real batch. Plan size is constant in n_queries; the
-    shuffle is the (query_id, vec_id) partial-aggregated sum —
-    inherent to unpruned ADC. Columns: (query_id, neighbor_id,
-    adc_dist2, rank)."""
-    # quantize lazily: with cents+assigned+queries supplied (the
-    # session-cache idiom the pq_* family supports), emb may be None
-    q = None
-    if cents is None or assigned is None or queries is None:
-        q = _pq_quantized(emb, id_col, vec_col)
-    if cents is None:
-        cents = _pq_train(q, m, subdim, k, iters)
-    if assigned is None:
-        assigned = _pq_assign(q, cents, m, subdim)
-    k_eff = len(cents[0])
-    spark = assigned.sparkSession
-    # codes long form: m rows per vector
-    codes = assigned.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"_b{s}.cid") for s in range(m)])
-        ).alias("sub", "cid"),
-    )
-    # literal centroid grid: m*k rows of (sub, cid, cv) — 128 here
-    cents_df = spark.createDataFrame(
-        [
-            (s, c, [int(v) for v in cents[s][c]])
-            for s in range(m)
-            for c in range(k_eff)
-        ],
-        "sub int, cid int, cv array<bigint>",
-    )
-    qq = (
-        _pq_quantized(queries, id_col, vec_col)
-        if queries is not None
-        else q.orderBy("vec_id").limit(n_queries)
-    )
-    # query subvectors long form: (query_id, sub, qsv)
-    qsub = qq.select(
-        F.col("vec_id").alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("sub"),
-                        F.slice("qv", s * subdim + 1, subdim).alias("qsv"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("_e"),
-    ).select("query_id", F.col("_e.sub").alias("sub"), F.col("_e.qsv").alias("qsv"))
-    lut_df = qsub.join(F.broadcast(cents_df), "sub").select(
-        "query_id",
-        "sub",
-        "cid",
-        F.aggregate(
-            F.zip_with("qsv", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("d"),
-    )
-    scored = (
-        codes.join(F.broadcast(lut_df), ["sub", "cid"])
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").cast("long").alias("adc_dist2"))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    return _pq_topk_window(scored, topk)
-
-
 def margin_bitext_mine(
     src_queries: DataFrame,
     src_corpus: DataFrame,

@@ -71,7 +71,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS,2]`` — the ``,2``
     allows task retry in local mode so fault-tolerance behavior
     (reference: straggler re-execution, mr/master.go:116-134) is
-    testable. On a real cluster, pass master=None via spark-submit.
+    testable. The default applies under spark-submit too: the
+    builder's ``spark.master`` overrides the submitted one, so to run
+    on a cluster pass its URL as ``master`` explicitly.
     """
     _ensure_worker_pythonpath()
     cpus = _DEF_CPUS

@@ -98,6 +98,52 @@ def session_windows(events: DataFrame, gap: str = "30 minutes",
 
 _FOLD_OUTPUT_SCHEMA = "key string, state string, n_ops long"
 _FOLD_STATE_SCHEMA = "state string, n_ops long"
+_GETS_OUTPUT_SCHEMA = "seq long, key string, val string"
+
+
+def _serve_gets_walk(
+    key: tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    cur: str,
+    n: int,
+) -> tuple[str, int, pd.DataFrame]:
+    """The one per-key Put/Append walk, shared by ``streaming_fold``
+    and ``streaming_get_results``: fold one key's ops in ``seq`` order from state (cur, n) and emit the
+    state at each ``get``'s position in the log (reference
+    kvraft/client.go:41-59 — Get returns the current value, "" for a
+    missing key; Put/Append mutate and return nothing; a NULL value
+    counts as ""). Returns the new (cur, n) and the (seq, key, val)
+    rows of the gets.
+
+    Row-at-a-time walk is deliberate here: a get needs the
+    point-in-time state between mutations, and the loop is bounded by
+    one key's slice of one micro-batch (not the stream), so there is
+    no vectorization win worth the opacity.
+    """
+    out_seq: list[int] = []
+    out_val: list[str] = []
+    for pdf in pdfs:
+        pdf = pdf.sort_values("seq")
+        for o, v, s in zip(
+            pdf["op"].to_numpy(),
+            pdf["value"].fillna("").to_numpy(),
+            pdf["seq"].to_numpy(),
+        ):
+            if o == "put":
+                cur, n = v, n + 1
+            elif o == "append":
+                cur, n = cur + v, n + 1
+            else:  # get: read-only observation
+                out_seq.append(int(s))
+                out_val.append(cur)
+    out = pd.DataFrame(
+        {
+            "seq": pd.array(out_seq, dtype="int64"),
+            "key": [key[0]] * len(out_seq),
+            "val": out_val,
+        }
+    )
+    return cur, n, out
 
 
 def _fold_one_key(
@@ -105,32 +151,14 @@ def _fold_one_key(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
-    """applyInPandasWithState fold: Put=replace, Append=concat.
-
-    Within a micro-batch, ops are applied in ``seq`` order; state
-    carries across batches via the state store. (At-most-once dedup
-    is done upstream — cheaply as a batch window or idempotent
-    producer; keeping the keyed state minimal matters at scale.)
-    """
-    if state.exists:
-        cur, n = state.get
-    else:
-        cur, n = "", 0
-    for pdf in pdfs:
-        pdf = pdf.sort_values("seq")
-        n += len(pdf)
-        ops = pdf["op"].to_numpy()
-        vals = pdf["value"].fillna("").to_numpy()
-        # vectorized fold: state = (value of last put in batch, else
-        # carried state) + all appends after that put
-        put_positions = (ops == "put").nonzero()[0]
-        if len(put_positions):
-            last_put = put_positions[-1]
-            cur = vals[last_put]
-            tail = vals[last_put + 1 :][ops[last_put + 1 :] == "append"]
-        else:
-            tail = vals[ops == "append"]
-        cur = cur + "".join(tail)
+    """applyInPandasWithState fold: ``_serve_gets_walk`` over the key's
+    GroupState, emitting (key, state, n_ops). ``streaming_fold`` feeds
+    it put/append ops only, so the walk serves no gets here. (At-most-once
+    dedup is done upstream — cheaply as a batch window or idempotent
+    producer; keeping the keyed state minimal matters at scale.)"""
+    cur, n, _ = _serve_gets_walk(
+        key, pdfs, *(state.get if state.exists else ("", 0))
+    )
     state.update((cur, n))
     yield pd.DataFrame({"key": [key[0]], "state": [cur], "n_ops": [n]})
 
@@ -147,6 +175,36 @@ def streaming_fold(oplog_stream: DataFrame) -> DataFrame:
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
+    )
+
+
+def _fold_one_key_serve_gets(
+    key: tuple[Any, ...],
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    """Stateful fold that also SERVES reads: ``_serve_gets_walk`` over
+    the key's GroupState."""
+    cur, n, out = _serve_gets_walk(
+        key, pdfs, *(state.get if state.exists else ("", 0))
+    )
+    state.update((cur, n))
+    yield out
+
+
+def streaming_get_results(oplog_stream: DataFrame) -> DataFrame:
+    """O18 streaming: the read path. Consumes the full op-log stream
+    (put/append/get) and emits one row per get — (seq, key, val) —
+    the same surface as the batch ``kv.get_results``. State per key
+    lives in the executor state store; gets observe the fold state at
+    their log position (batch/stream agreement tested across ≥3
+    micro-batches in tests/test_streaming.py)."""
+    return oplog_stream.groupBy("key").applyInPandasWithState(
+        _fold_one_key_serve_gets,
+        outputStructType=_GETS_OUTPUT_SCHEMA,
+        stateStructType=_FOLD_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -242,139 +300,6 @@ def streaming_dedup_docs(
     return hashed.dropDuplicates(["content_hash"])
 
 
-_GETS_OUTPUT_SCHEMA = "seq long, key string, val string"
-
-
-def _serve_gets_walk(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    cur: str,
-    n: int,
-) -> tuple[str, int, pd.DataFrame]:
-    """The per-key Get-serving walk both stateful forms share: fold
-    one key's ops in ``seq`` order from state (cur, n) and emit the
-    state at each ``get``'s position in the log (reference
-    kvraft/client.go:41-59 — Get returns the current value, "" for a
-    missing key; Put/Append mutate and return nothing; a NULL value
-    counts as ""). Returns the new (cur, n) and the (seq, key, val)
-    rows of the gets.
-
-    Row-at-a-time walk is deliberate here: a get needs the
-    point-in-time state between mutations, and the loop is bounded by
-    one key's slice of one micro-batch (not the stream), so there is
-    no vectorization win worth the opacity.
-    """
-    out_seq: list[int] = []
-    out_val: list[str] = []
-    for pdf in pdfs:
-        pdf = pdf.sort_values("seq")
-        for o, v, s in zip(
-            pdf["op"].to_numpy(),
-            pdf["value"].fillna("").to_numpy(),
-            pdf["seq"].to_numpy(),
-        ):
-            if o == "put":
-                cur, n = v, n + 1
-            elif o == "append":
-                cur, n = cur + v, n + 1
-            else:  # get: read-only observation
-                out_seq.append(int(s))
-                out_val.append(cur)
-    out = pd.DataFrame(
-        {
-            "seq": pd.array(out_seq, dtype="int64"),
-            "key": [key[0]] * len(out_seq),
-            "val": out_val,
-        }
-    )
-    return cur, n, out
-
-
-def _fold_one_key_serve_gets(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Stateful fold that also SERVES reads: ``_serve_gets_walk`` over
-    the key's GroupState."""
-    cur, n, out = _serve_gets_walk(
-        key, pdfs, *(state.get if state.exists else ("", 0))
-    )
-    state.update((cur, n))
-    yield out
-
-
-def streaming_get_results(oplog_stream: DataFrame) -> DataFrame:
-    """O18 streaming: the read path. Consumes the full op-log stream
-    (put/append/get) and emits one row per get — (seq, key, val) —
-    the same surface as the batch ``kv.get_results``. State per key
-    lives in the executor state store; gets observe the fold state at
-    their log position (batch/stream agreement tested across ≥3
-    micro-batches in tests/test_streaming.py)."""
-    return oplog_stream.groupBy("key").applyInPandasWithState(
-        _fold_one_key_serve_gets,
-        outputStructType=_GETS_OUTPUT_SCHEMA,
-        stateStructType=_FOLD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---- transformWithState variant (the arbitrary-state API successor) ------
-
-try:  # Spark >= 4.0, and protobuf present: the transformWithState
-    # Python worker talks to the JVM state server over a protobuf
-    # wire protocol imported lazily at EXECUTION time — without
-    # google.protobuf the worker dies mid-query ("driver worker
-    # exited unexpectedly"), so gate on both up front.
-    import google.protobuf  # noqa: F401
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    HAS_TRANSFORM_WITH_STATE = True
-except ImportError:  # pragma: no cover - older Spark / no protobuf
-    StatefulProcessor = object  # type: ignore[assignment,misc]
-    StatefulProcessorHandle = None  # type: ignore[assignment,misc]
-    HAS_TRANSFORM_WITH_STATE = False
-
-
-class KVFoldGetsProcessor(StatefulProcessor):
-    """transformWithStateInPandas twin of ``_fold_one_key_serve_gets``
-    — the same ``_serve_gets_walk``, expressed against the newer
-    typed-state handle API (ValueState instead of the single
-    GroupState blob; this is the API that also offers list/map state
-    and timers)."""
-
-    def init(self, handle: "StatefulProcessorHandle") -> None:
-        self._state = handle.getValueState("fold", _FOLD_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-        existing = self._state.get()
-        cur, n, out = _serve_gets_walk(
-            key, rows, *(existing if existing is not None else ("", 0))
-        )
-        self._state.update((cur, n))
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-def streaming_get_results_tws(oplog_stream: DataFrame) -> DataFrame:
-    """``streaming_get_results`` on the transformWithStateInPandas
-    API. Result-identical (agreement tested); prefer this form when
-    an operator needs several typed state variables or timers."""
-    return oplog_stream.groupBy("key").transformWithStateInPandas(
-        KVFoldGetsProcessor(),
-        outputStructType=_GETS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def streaming_trending_terms(
     doc_stream: DataFrame,
     text_col: str = "text",
@@ -406,7 +331,7 @@ def streaming_cms_counters(
     d: int | None = None,
     w: int | None = None,
 ) -> DataFrame:
-    """Streaming Count-Min counters (r5, sketch-family streaming
+    """Streaming Count-Min counters (sketch-family streaming
     twin): a plain streaming groupBy on (lane, pos) — which means the
     state store holds AT MOST d*w rows no matter how many distinct
     values flow through. That bound is the whole point: an unbounded
@@ -418,7 +343,7 @@ def streaming_cms_counters(
     from ..operators import sketch
 
     # the batch builder is a plain groupBy/agg, which streams as-is —
-    # ONE copy of the lane/pos derivation (r5 review finding)
+    # ONE copy of the lane/pos derivation, so the twins cannot drift
     return sketch.cms_counters(
         value_stream,
         value_col,
@@ -450,7 +375,7 @@ def streaming_quantile_cells(
 def streaming_hll_registers(
     value_stream: DataFrame, group_col: str, value_col: str
 ) -> DataFrame:
-    """Streaming HyperLogLog registers (r6, sketch-family streaming
+    """Streaming HyperLogLog registers (sketch-family streaming
     twin, same shape as streaming_cms_counters): the batch register
     builder is a plain groupBy max on (grp, j), which streams as-is
     with state bounded by |groups| × HLL_M rows — a running distinct
@@ -465,7 +390,7 @@ def streaming_hll_registers(
 def streaming_classifier_scores(
     doc_stream: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Streaming twin of classifier_quality_scores (r6): the scorer
+    """Streaming twin of classifier_quality_scores: the scorer
     is a stateless map-only projection (hashed-feature integer dot
     product against literal weights), so it streams UNCHANGED in
     append mode with zero state — the ingest-time quality gate a
@@ -521,7 +446,7 @@ def streaming_incremental_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Streaming twin of ``dedup.incremental_dedup_audit`` (r6): the
+    """Streaming twin of ``dedup.incremental_dedup_audit``: the
     production ingest-time shape — classify each ARRIVING document
     against the at-rest lake fingerprint index without re-deduping
     the lake, and against the stream's own history.
@@ -630,69 +555,6 @@ def streaming_corpus_prep(
 # ---- streaming ANN serve over a persisted IVF index ----------------------
 
 
-def streaming_ann_topk(
-    index,
-    query_stream: DataFrame,
-    k: int = 5,
-    n_probe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """X3 streaming: serve ANN queries from an unbounded query stream
-    against a persisted ``IVFIndex`` — index once, answer forever.
-
-    Shape: probe-cell assignment is the map-side expression
-    ``IVFIndex.query`` uses (``similarity._probe_cells_column``) over
-    the collected centroids (K ≈ √n rows — driver-tiny by construction);
-    the only join is stream-STATIC on cell_id (no stream-stream state);
-    per-query top-k is a streaming groupBy whose candidates all arrive
-    in the query's own micro-batch, folded to one sorted array (window
-    functions are illegal on streams). Output one row per query:
-    (query_id, topk: array<struct<neighbor_id, score>>), update mode.
-
-    Each neighbor lives in exactly one index cell, so (query,
-    neighbor) candidate pairs are already unique — no distinct needed.
-    For per-batch partition pruning of the static side, use
-    ``serve_ann_foreach_batch`` instead.
-    """
-    from ..operators.similarity import _probe_cells_column, cosine_fx
-
-    qc = query_stream.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec_"),
-        _probe_cells_column(
-            index._centroid_rows(), F.col(vec_col), n_probe
-        ).alias("_cells"),
-    ).select("query_id", "qvec_", F.explode("_cells").alias("cell_id"))
-    corpus = index.spark.read.parquet(f"{index.path}/cells")
-    scored = (
-        qc.join(corpus, "cell_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_fx(F.col("qvec_"), F.col("cvec_")).alias("score"),
-        )
-    )
-    by_rank = lambda l, r: (  # noqa: E731 — desc score, asc neighbor
-        F.when(l["score"] > r["score"], -1)
-        .when(l["score"] < r["score"], 1)
-        .when(l["neighbor_id"] < r["neighbor_id"], -1)
-        .when(l["neighbor_id"] > r["neighbor_id"], 1)
-        .otherwise(0)
-    )
-    agg = scored.groupBy("query_id").agg(
-        F.collect_list(F.struct("score", "neighbor_id")).alias("_cands")
-    )
-    topk = F.transform(
-        F.slice(F.array_sort("_cands", by_rank), 1, k),
-        lambda s: F.struct(
-            s["neighbor_id"].alias("neighbor_id"), s["score"].alias("score")
-        ),
-    )
-    return agg.select("query_id", topk.alias("topk"))
-
-
 def serve_ann_foreach_batch(
     index,
     query_stream: DataFrame,
@@ -704,13 +566,12 @@ def serve_ann_foreach_batch(
     of queries runs through ``IVFIndex.query``, which assigns probe
     cells map-only, pins the assigned rows once, collects the batch's
     probe set from the pinned blocks and filters the cell-partitioned
-    parquet on it. The static side therefore gets REAL partition
-    pruning per batch (the stream-static join in
-    ``streaming_ann_topk`` cannot prune — it reads whichever cells the
-    join touches), and the query side is read once for the emptiness
-    check and once for the pin. ``sink(result_df, batch_id)`` receives
-    the ranked (query_id, neighbor_id, score, rank) rows per batch.
-    Returns the started-query builder (caller starts/awaits)."""
+    parquet on it, so the static side gets partition pruning per
+    batch and tombstoned ids never reach the sink. The query side is
+    read once for the emptiness check and once for the pin.
+    ``sink(result_df, batch_id)`` receives the ranked (query_id,
+    neighbor_id, score, rank) rows per batch. Returns the
+    started-query builder (caller starts/awaits)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -723,51 +584,15 @@ def serve_ann_foreach_batch(
 # ---- streaming BM25 serve over a persisted postings index ----------------
 
 
-def streaming_bm25_scores(index, query_stream: DataFrame) -> DataFrame:
-    """X4 streaming: serve BM25 from an unbounded stream of
-    (query_id, term) rows against a persisted
-    ``retrieval.BM25Index`` — the streaming_ann_topk story for
-    lexical retrieval. Corpus statistics are FROZEN at build time:
-    n/tt ride as literals (collected once from the 1-row scalars
-    table), df and dl join stream-static, postings join stream-static
-    on term. One update-mode aggregate per (query, doc) sums the
-    exact per-term integer scores — identical values to
-    ``retrieval._bm25_rank`` (batch-agreement tested); final RANKING
-    happens in the consumer (a second streaming agg would be illegal;
-    for ranked per-batch output use ``serve_bm25_foreach_batch``).
-    Columns: (query_id, doc_id, n_terms, score_fp)."""
-    from ..operators.retrieval import term_score_fp_expr
-
-    sc = index.spark.read.parquet(f"{index.path}/scalars").collect()[0]
-    post = index.spark.read.parquet(f"{index.path}/postings").select(
-        "term", "doc_id", "tf"
-    )
-    dfreq = index.spark.read.parquet(f"{index.path}/df").select("term", "df")
-    dl = index.spark.read.parquet(f"{index.path}/dl")
-    qt = query_stream.select("query_id", "term")
-    scored = (
-        qt.join(post, "term")
-        .join(dfreq, "term")
-        .join(dl, "doc_id")
-        .withColumn("n", F.lit(int(sc.n)).cast("long"))
-        .withColumn("tt", F.lit(int(sc.tt)).cast("long"))
-    )
-    return scored.groupBy("query_id", "doc_id").agg(
-        F.count("*").cast("long").alias("n_terms"),
-        F.sum(term_score_fp_expr()).cast("long").alias("score_fp"),
-    )
-
-
 def serve_bm25_foreach_batch(index, query_stream: DataFrame, sink, k: int = 10):
     """X4 streaming, foreachBatch form: every micro-batch of query
     terms runs through ``BM25Index.query`` — which collects the
-    batch's term-bucket set and partition-prunes the postings scan
-    (the stream-static join in ``streaming_bm25_scores`` cannot
-    prune). ``sink(result_df, batch_id)`` receives the fully RANKED
-    (query_id, doc_id, n_terms, score_fp, rank) rows per batch.
-    Returns the writeStream builder (caller starts/awaits) — the
+    batch's term-bucket set, partition-prunes the postings scan and
+    drops tombstoned docs. ``sink(result_df, batch_id)`` receives
+    the fully RANKED (query_id, doc_id, n_terms, score_fp, rank) rows
+    per batch. Returns the writeStream builder (caller starts/awaits) — the
     serve_ann_foreach_batch idiom. ``index`` may be a ``BM25Index``
-    OR a ``BM25SegmentSet`` (r10 tiered ingestion's live set — same
+    OR a ``BM25SegmentSet`` (tiered ingestion's live set — same
     ``query`` contract, rankings identical to the merged index), so a
     server can point directly at ``holder["index"]`` while ingestion
     runs."""
@@ -787,32 +612,32 @@ def ingest_ann_foreach_batch(
     compact_max_files: int | None = 8,
     holder: dict | None = None,
 ):
-    """Streaming ANN INGESTION (r9): the maintenance twin of the
+    """Streaming ANN INGESTION: the maintenance twin of the
     serve paths — each micro-batch of new (vec_id, embedding) rows is
     appended to the at-rest ``IVFIndex`` against its frozen centroids
     (``IVFIndex.add``): one broadcast-assign pass per batch, appends
     only the batch's cell partitions, idempotent under batch replay
     (the bloom-BOUNDED anti-join + within-batch dedupe — a batch of
-    genuinely new ids skips the at-rest id scan entirely, VERDICT_r10
-    #1), and loud on the same id arriving with different vectors
-    WITHIN a batch (the r9 conflict guard). ACROSS batches the index
-    wins: an id already at rest is anti-joined out even if its vector
-    changed — re-embedding an existing id requires a rebuild, by the
-    same existing-beats-batch priority incremental_dedup_audit uses
-    (r9 review: the guard cannot see cross-batch conflicts because
-    the anti-join removes them first). Grown index == same-centroid
-    assignment of the union corpus (add's parity pin).
+    genuinely new ids skips the at-rest id scan entirely), and loud on
+    the same id arriving with different vectors WITHIN a batch (the
+    conflict guard). ACROSS batches the index wins: an id already at
+    rest is anti-joined out even if its vector changed — re-embedding
+    an existing id requires a rebuild, by the same
+    existing-beats-batch priority incremental_dedup_audit uses (the
+    guard cannot see cross-batch conflicts because the anti-join
+    removes them first). Grown index == same-centroid assignment of
+    the union corpus (add's parity pin).
 
-    Cell-file hygiene (VERDICT_r10 #1, the tiered-BM25 lesson on the
-    ANN side): after every add, cells whose parquet file count
-    exceeds ``compact_max_files`` are rewritten to one file
+    Cell-file hygiene (the tiered-BM25 lesson on the ANN side): after
+    every add, cells whose parquet file count exceeds
+    ``compact_max_files`` are rewritten to one file
     (``IVFIndex.compact_cells`` — threshold-triggered, self-nooping,
     query-parity-pinned), so live file count per cell stays bounded
     at any batch count instead of growing one file per touched cell
-    per micro-batch. ``compact_max_files=None`` disables (the
-    append-only r9 behavior). Each performed compaction is recorded
-    in ``holder["compactions"]`` as (batch_id, stats) when a holder
-    dict is passed. Returns the writeStream builder."""
+    per micro-batch. ``compact_max_files=None`` disables (append
+    only). Each performed compaction is recorded in
+    ``holder["compactions"]`` as (batch_id, stats) when a holder dict
+    is passed. Returns the writeStream builder."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -834,7 +659,7 @@ def ingest_ann_cdc_foreach_batch(
     compact_max_files: int | None = 8,
     holder: dict | None = None,
 ):
-    """CDC ingestion for the ANN index (r12): the full
+    """CDC ingestion for the ANN index: the full
     change-data-capture contract on top of ``ingest_ann_foreach_
     batch``'s append-only story. Input rows are
     (seq long, op ∈ {'add','delete'}, vec_id, embedding) — seq is
@@ -887,7 +712,7 @@ def ingest_ann_cdc_foreach_batch(
             "vec_id", "embedding"
         )
         # normalize to the at-rest vector width BEFORE the conflict
-        # audit (the add() r12 mixed-type rule): a double-sent replay
+        # audit (add()'s mixed-type rule): a double-sent replay
         # of a float32-stored vector would otherwise round-trip as a
         # spurious conflicting_drop and trigger a needless rewrite
         at_rest_t = index.spark.read.parquet(
@@ -953,15 +778,15 @@ def _bm25_tier(n_docs: int) -> int:
 
 
 def ingest_bm25_foreach_batch(index, doc_stream: DataFrame, workdir: str):
-    """Streaming BM25 INGESTION with TIERED segment merging
-    (VERDICT_r9 #1): each micro-batch of NEW documents builds a
+    """Streaming BM25 INGESTION with TIERED segment merging: each
+    micro-batch of NEW documents builds a
     per-batch segment index (the only pass over that batch's TEXT —
     tokenize happens once per document, ever) and enters it into a
     geometric tier structure: at most one live segment per size tier
     (tier = bit_length of doc count); whenever two live segments
     share a tier, the two smallest merge (``BM25Index.merge``) and
     the survivor cascades upward. Total merge I/O over B batches is
-    O(index·log B) — the r9 per-batch 2-way chain rewrote the whole
+    O(index·log B) — a per-batch 2-way chain would rewrite the whole
     accumulated index every batch, O(index·B), a scale-killer at
     minute-level batch cadence on a 100 TB corpus.
 
@@ -978,13 +803,13 @@ def ingest_bm25_foreach_batch(index, doc_stream: DataFrame, workdir: str):
     the stale base ``index``. A batch redelivered after a crash
     between the LATEST flip and Spark's offset commit is detected via
     the at-rest doc_ids (ALL already present) and skipped — the skip
-    is OBSERVABLE (ADVICE r9): logged and recorded in
+    is OBSERVABLE: logged and recorded in
     ``holder["skipped"]``, since a genuinely re-sent already-ingested
     corpus takes the same path; a PARTIAL overlap still fails loudly
     inside merge.
 
-    Generation GC (the r9 disk leak — one full index copy per batch,
-    unbounded): segments consumed by a merge are deleted ONE
+    Generation GC (without it, one full index copy per batch would
+    leak, unbounded): segments consumed by a merge are deleted ONE
     FLIP LATER (after the NEXT successful LATEST flip), so the
     previous generation stays on disk through the crash window and
     any in-flight queries against the last-served set; on builder
@@ -1044,8 +869,8 @@ def ingest_bm25_foreach_batch(index, doc_stream: DataFrame, workdir: str):
             return
         cur: BM25SegmentSet = holder["index"]
         sizes: dict = holder["_sizes"]
-        # replay guard, now checked against the WHOLE live set (r10:
-        # the r9 chain's merge(cur, seg) implicitly checked every
+        # replay guard, checked against the WHOLE live set (a 2-way
+        # chain's merge(cur, seg) would implicitly check every
         # batch against the full accumulation; tiered merges only
         # check the PAIR being merged, so a partial overlap with a
         # non-merged live segment would double-count silently — the
@@ -1132,7 +957,7 @@ def ingest_corpus_foreach_batch(
     lake_fp_path: str,
     compact_max_files: int | None = 8,
 ):
-    """End-to-end corpus ingestion (r13, VERDICT_r12 #7): ONE
+    """End-to-end corpus ingestion: ONE
     micro-batch pipeline composing the individually-tested legs —
     incremental dedup against the at-rest fingerprint lake →
     surviving docs into the TIERED BM25 ingest → surviving vectors
@@ -1226,7 +1051,7 @@ def serve_hybrid_foreach_batch(
     k: int = 10,
     n_probe: int = 6,
 ):
-    """Streaming twin of the index-served HYBRID (VERDICT_r8 #3): a
+    """Streaming twin of the index-served HYBRID: a
     stream of queries served against BOTH at-rest indexes per
     micro-batch — the lexical leg through ``BM25Index.query`` (the
     batch's term buckets partition-prune the postings scan), the
@@ -1284,7 +1109,7 @@ def state_rows_total(q) -> int | None:
     """Total rows in the query's state store(s), from the LAST
     progress event's ``stateOperators`` (numRowsTotal summed across
     operators) — the streaming state-size budget observable
-    (VERDICT_r12 #2, the TestSnapshotSize3B analog: every stateful
+    (the TestSnapshotSize3B analog: every stateful
     twin documents a domain bound for its state; this reads the
     ACTUAL metric so tests can pin it instead of trusting the
     docstring). None when the query produced no progress or holds no
@@ -1299,7 +1124,7 @@ def state_rows_total(q) -> int | None:
 
 
 def streaming_transfer_serving(oplog_stream: DataFrame) -> DataFrame:
-    """O24 streaming twin (r11): live per-(epoch, gid) transfer-
+    """O24 streaming twin: live per-(epoch, gid) transfer-
     window serving counters — the dashboard a reconfiguring
     deployment watches for the Challenge2 invariants (unaffected
     availability 100%, in-transfer gap bounded by arrival offsets).
@@ -1320,7 +1145,7 @@ def streaming_min_k_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Streaming twin of min_k_prob_audit (r12): the memorization /
+    """Streaming twin of min_k_prob_audit: the memorization /
     membership monitor scored LIVE against a FROZEN bigram LM
     trained on the static lake — arriving documents whose k% most
     surprising bigrams are still predictable score low and flag as
@@ -1371,7 +1196,7 @@ def streaming_min_k_scores(
 
 
 def streaming_catchup_serving(oplog_stream: DataFrame) -> DataFrame:
-    """r12 streaming twin of kv.config_catchup_serving: live
+    """Streaming twin of kv.config_catchup_serving: live
     per-(epoch, gid) missed-config catch-up counters (configs
     behind, dropped/stale/served, in-order application witness) —
     the dashboard TestMissChange's operator watches. Same one-copy
@@ -1388,7 +1213,7 @@ def streaming_phrase_matches(
     phrase_arrays: DataFrame,
     phrase_len: int = 3,
 ) -> DataFrame:
-    """Live phrase monitor (r11): exact consecutive-token phrase
+    """Live phrase monitor: exact consecutive-token phrase
     matches over a document stream — the compliance/blocklist watch
     (which incoming docs contain any watched phrase, how often).
     Stateless append: the array-local matcher scans each self-
@@ -1414,11 +1239,9 @@ def streaming_reward_clip(
     lo: int = -2048,
     hi: int = 2047,
 ) -> DataFrame:
-    """Streaming twin of reward_winsorize's CLIP half (the
-    frozen-stats pattern of streaming_bm25_scores): the quantile
+    """Streaming twin of reward_winsorize's CLIP half: the quantile
     cutoffs are corpus statistics a batch sketch froze (a second
-    streaming agg over them would be illegal anyway — the
-    streaming_bm25 lesson), and the clip itself is a stateless
+    streaming agg over them would be illegal), and the clip itself is a stateless
     map-only projection that streams unchanged in append mode. A
     pipeline re-freezes cutoffs per model/corpus generation, exactly
     like the BM25 scalars. ``reward`` is any integer Column over the
@@ -1460,7 +1283,7 @@ def maintain_matview_foreach_batch(
     sum_cols,
     workdir: str,
 ):
-    """Streaming incremental view maintenance (r13) — the
+    """Streaming incremental view maintenance — the
     matview.maintain_groupby fold driven by a CDC stream, with the
     BM25-ingestion durability recipe applied to an AGGREGATE instead
     of an index: the maintained view lives at rest as parquet
@@ -1503,10 +1326,9 @@ def maintain_matview_foreach_batch(
 
     if os.path.exists(marker):
         holder["_cur"], holder["_last_bid"] = _read_marker()
-        # construction sweep (r13 review finding — the BM25 recipe's
-        # missing half here): _pending_gc is memory-only, so a
-        # restart between flips strands the superseded generation
-        # forever; any gen_* dir the marker doesn't name is
+        # construction sweep (the BM25 recipe's other half):
+        # _pending_gc is memory-only, so a restart between flips
+        # strands the superseded generation forever; any gen_* dir the marker doesn't name is
         # unreachable (LATEST never points backwards) and swept now
         live = os.path.realpath(holder["_cur"])
         for e in sorted(os.listdir(workdir)):
@@ -1571,7 +1393,7 @@ def maintain_matview_foreach_batch(
 
 
 def streaming_ring_router(oplog_stream: DataFrame) -> DataFrame:
-    """Consistent-hash routing on a live op stream (r13): the
+    """Consistent-hash routing on a live op stream: the
     kv.consistent_ring_stats placement applied per op — a STATELESS
     map (the ring rides as a literal array; no state store at any
     stream length, the streaming_phrase_matches class). Emits

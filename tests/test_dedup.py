@@ -112,20 +112,21 @@ def test_connected_components_vs_union_find(spark):
         df = spark.createDataFrame(edges, "src long, dst long")
         got = {
             r.id: r.component
-            for r in dedup.connected_components(df, converge=True).collect()
+            for r in dedup.connected_components(df).collect()
         }
         touched = {v for e in edges for v in e}
         assert got == {v: expected[v] for v in touched}, f"seed {seed}"
 
 
 def test_connected_components_converge_long_chain(spark):
-    """converge=True must reach the fixpoint on a path graph whose
-    diameter exceeds any small fixed round count."""
-    chain = [(i, i + 1) for i in range(8)]
+    """With no arguments, CC must reach the fixpoint on a 13-node path,
+    whose diameter (12) exceeds the 10 rounds a fixed round budget
+    once defaulted to."""
+    chain = [(i, i + 1) for i in range(12)]
     df = spark.createDataFrame(chain, "src long, dst long")
-    got = dedup.connected_components(df, converge=True).collect()
+    got = dedup.connected_components(df).collect()
     assert {r.component for r in got} == {0}
-    assert len(got) == 9
+    assert len(got) == 13
 
 
 def test_dup_clusters_singletons_and_sizes(spark):
@@ -133,7 +134,7 @@ def test_dup_clusters_singletons_and_sizes(spark):
     themselves; cluster_size is consistent with the assignment."""
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
     pairs = spark.createDataFrame([(0, 3), (3, 7), (5, 6)], "id_a long, id_b long")
-    rows = dedup.dup_clusters(docs, pairs, converge=True).collect()
+    rows = dedup.dup_clusters(docs, pairs).collect()
     assert sorted(r.doc_id for r in rows) == list(range(10))
     by_id = {r.doc_id: r for r in rows}
     assert by_id[7].canonical_id == 0 and by_id[3].canonical_id == 0
@@ -149,7 +150,7 @@ def test_canonical_dedup_keeps_full_rows(spark):
         [(i, f"t{i}") for i in range(6)], "doc_id long, text string"
     )
     pairs = spark.createDataFrame([(1, 4), (4, 2)], "id_a long, id_b long")
-    kept = dedup.canonical_dedup(docs, pairs, converge=True).collect()
+    kept = dedup.canonical_dedup(docs, pairs).collect()
     assert sorted(r.doc_id for r in kept) == [0, 1, 3, 5]
     assert all(r.text == f"t{r.doc_id}" for r in kept)
 
@@ -198,36 +199,6 @@ def test_edit_distance_pairs_blocking_semantics(spark):
         for r in dedup.edit_distance_pairs(docs, max_dist=5).collect()
     }
     assert pairs == {(1, 2): 3}
-
-
-def test_star_cc_vs_union_find(spark):
-    """Large-star/small-star CC must agree with driver-side union-find
-    on seeded random graphs (same contract as min-label CC)."""
-    import random
-
-    for seed in (7, 99):
-        rng = random.Random(seed)
-        n = 30
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(32)]
-        edges = [(a, b) for a, b in edges if a != b]
-        expected = _uf_components(n, edges)
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = {
-            r.id: r.component
-            for r in dedup.connected_components_star(df).collect()
-        }
-        touched = {v for e in edges for v in e}
-        assert got == {v: expected[v] for v in touched}, f"seed {seed}"
-
-
-def test_star_cc_long_chain_few_rounds(spark):
-    """A 64-node path (diameter 63) must converge in O(log n) star
-    rounds — the property min-label propagation lacks."""
-    chain = [(i, i + 1) for i in range(63)]
-    df = spark.createDataFrame(chain, "src long, dst long")
-    got = dedup.connected_components_star(df, max_iter=10).collect()
-    assert {r.component for r in got} == {0}
-    assert len(got) == 64
 
 
 def test_line_dedup_drops_copied_lines(spark):
@@ -503,7 +474,7 @@ def test_canonical_by_score_picks_best_member(spark):
     corpus = _planted_dup_corpus(spark, "/root/testdata/sf0.001")
     clusters = dedup.dup_clusters(
         corpus, _dup_blocking_pairs(corpus), id_col="doc_id",
-        src="src", dst="dst", converge=True,
+        src="src", dst="dst",
     )
     scored = corpus.select(
         "doc_id", textstats.classifier_score_col("text").alias("score")

@@ -399,7 +399,7 @@ def test_leakage_safe_split_cluster_atomic(spark):
     )
     # clusters: {1,2,3}, {50,51}, plus singletons
     pairs = _star_pairs(spark, [(1, 2), (2, 3), (50, 51)])
-    out = pipeline.leakage_safe_split(docs, pairs, converge=True).collect()
+    out = pipeline.leakage_safe_split(docs, pairs).collect()
     by_id = {r.doc_id: r for r in out}
     assert len(out) == 200
     assert {by_id[i].split for i in (1, 2, 3)} == {by_id[1].split}
@@ -430,11 +430,11 @@ def test_leakage_safe_split_incremental_stability(spark):
     pairs = _star_pairs(spark, [(7, 8), (7, 9)])
     before = {
         r.doc_id: (r.canonical_id, r.split)
-        for r in pipeline.leakage_safe_split(docs, pairs, converge=True).collect()
+        for r in pipeline.leakage_safe_split(docs, pairs).collect()
     }
     after = {
         r.doc_id: (r.canonical_id, r.split)
-        for r in pipeline.leakage_safe_split(grown, pairs, converge=True).collect()
+        for r in pipeline.leakage_safe_split(grown, pairs).collect()
     }
     assert before == {k: v for k, v in after.items() if k < 100}
 

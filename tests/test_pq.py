@@ -172,26 +172,3 @@ def test_pq_imi_prunes_and_recalls(spark):
     # probing 4/16 cells keeps most of the unpruned top-10
     recall = len(fullset & imiset) / len(fullset)
     assert recall >= 0.5, recall
-
-
-def test_pq_adc_join_form_matches_literal(spark):
-    # join-form twin (LUT as broadcast data, plan size constant in
-    # n_queries) must be row-identical to the literal serving form
-    emb = load_table(spark, SF, "embeddings")
-    lit_rows = similarity.pq_topk_adc(emb, n_queries=8, topk=10).collect()
-    join_rows = similarity.pq_topk_adc_join(
-        emb, n_queries=8, topk=10
-    ).collect()
-    key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.adc_dist2)  # noqa: E731
-    assert sorted(map(key, join_rows)) == sorted(map(key, lit_rows))
-
-
-def test_pq_adc_join_form_query_table(spark):
-    # explicit query-table path: passing the same 8 vectors as a
-    # standalone DataFrame reproduces the default selection
-    emb = load_table(spark, SF, "embeddings")
-    qdf = emb.orderBy("vec_id").limit(8)
-    a = similarity.pq_topk_adc_join(emb, queries=qdf, topk=5).collect()
-    b = similarity.pq_topk_adc_join(emb, n_queries=8, topk=5).collect()
-    key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.adc_dist2)  # noqa: E731
-    assert sorted(map(key, a)) == sorted(map(key, b))

@@ -1082,10 +1082,13 @@ def test_index_sources_carry_no_round_history():
 
 
 def test_engine_sources_carry_no_round_history():
-    """Same rule for the metrics, KV, MR-app, session and worker-daemon
-    modules."""
+    """Same rule for the metrics, KV, MR-app, session, worker-daemon,
+    dedup and streaming modules."""
     from mrgo_spark import metrics, session, worker_daemon
-    from mrgo_spark.operators import kv, mrapps
+    from mrgo_spark.operators import dedup, kv, mrapps
+    from mrgo_spark.streaming import stream_ops
 
-    hits = _round_history_hits(metrics, kv, mrapps, session, worker_daemon)
+    hits = _round_history_hits(
+        metrics, kv, mrapps, session, worker_daemon, dedup, stream_ops
+    )
     assert not hits, hits

@@ -192,42 +192,6 @@ def test_serve_gets_walk_semantics():
     assert list(out.columns) == ["seq", "key", "val"] and out.empty
 
 
-def test_transform_with_state_gets_match_batch(spark, tmp_path):
-    """The transformWithStateInPandas fold (typed ValueState API)
-    serves the same get results as the batch path — API-equivalence
-    with the applyInPandasWithState form."""
-    import pytest
-
-    if not stream_ops.HAS_TRANSFORM_WITH_STATE:
-        pytest.skip("transformWithState needs Spark >= 4.0 + protobuf")
-    events = load_table(spark, SF, "events")
-    oplog = kv.dedup_at_most_once(kv.synth_oplog(events, dup_every=10**9))
-    # transformWithState requires the RocksDB state store provider
-    conf = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf, None)
-    spark.conf.set(
-        conf,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        _run_chunked(
-            spark, tmp_path, oplog, stream_ops.streaming_get_results_tws,
-            "tws_gets_out",
-        )
-    finally:
-        if prev is None:
-            spark.conf.unset(conf)
-        else:
-            spark.conf.set(conf, prev)
-    got = {
-        (r.seq, r.key): r.val
-        for r in spark.sql("SELECT * FROM tws_gets_out").collect()
-    }
-    want = {(r.seq, r.key): r.val for r in kv.get_results(oplog).collect()}
-    assert got == want and len(got) > 0
-
-
 def test_streaming_dedup_then_gets_match_batch(spark, tmp_path):
     """At-least-once delivery end-to-end: a log WITH retransmissions,
     streaming-deduped on (client, reqid) then folded, serves the same
@@ -483,29 +447,54 @@ def _build_query_dir(spark, tmp_path):
     return emb, str(d)
 
 
-def test_streaming_ann_topk_matches_index_query(spark, tmp_path):
-    """The stream-static ANN serve must return the same neighbor sets
-    and scores as the batch IVFIndex.query for the same query set."""
+def test_streaming_serve_honours_deletes(spark, tmp_path):
+    """Ids deleted from an IVFIndex and a BM25Index before the stream
+    starts never reach the sink of ``serve_ann_foreach_batch`` or
+    ``serve_bm25_foreach_batch``, and each serve emits exactly the
+    rows of its index's ``query`` on the same queries."""
     from mrgo_spark.operators.similarity import IVFIndex
 
-    emb, qdir = _build_query_dir(spark, tmp_path)
-    idx = IVFIndex.build(emb, str(tmp_path / "ivf"))
-    qstream = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).parquet(qdir)
-    out = stream_ops.streaming_ann_topk(idx, qstream, k=5)
-    stream_ops.run_to_memory(out, "ann_serve")
-    got = {
-        r.query_id: {(n.neighbor_id, round(n.score, 9)) for n in r.topk}
-        for r in spark.sql("SELECT * FROM ann_serve").collect()
-    }
+    emb, ann_dir = _build_query_dir(spark, tmp_path)
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    expected = {}
-    for r in idx.query(queries, k=5).collect():
-        expected.setdefault(r.query_id, set()).add(
-            (r.neighbor_id, round(r.score, 9))
+    ivf = IVFIndex.build(emb, str(tmp_path / "ivf_del"))
+    gone_vecs = sorted(
+        {r.neighbor_id for r in ivf.query(queries, k=5).collect() if r.rank <= 2}
+    )
+    ivf.delete(gone_vecs)
+    docs, bm25, qterms, bm25_dir = _build_bm25_fixture(spark, tmp_path)
+    gone_docs = sorted(
+        {r.doc_id for r in bm25.query(qterms, k=10).collect() if r.rank == 1}
+    )
+    bm25.delete(gone_docs)
+    assert gone_vecs and gone_docs
+
+    def serve(serve_fn, index, schema, qdir, k):
+        got = []
+        q = (
+            serve_fn(
+                index,
+                spark.readStream.schema(schema).parquet(qdir),
+                lambda df, batch_id: got.extend(df.collect()),
+                k=k,
+            )
+            .trigger(availableNow=True)
+            .start()
         )
-    assert got == expected
+        q.awaitTermination(120)
+        return got
+
+    ann = serve(
+        stream_ops.serve_ann_foreach_batch, ivf,
+        "vec_id long, embedding array<float>", ann_dir, 5,
+    )
+    assert ann and not {r.neighbor_id for r in ann} & set(gone_vecs)
+    assert sorted(ann) == sorted(ivf.query(queries, k=5).collect())
+    lex = serve(
+        stream_ops.serve_bm25_foreach_batch, bm25,
+        "query_id long, term string", bm25_dir, 10,
+    )
+    assert lex and not {r.doc_id for r in lex} & set(gone_docs)
+    assert sorted(lex) == sorted(bm25.query(qterms, k=10).collect())
 
 
 def test_serve_ann_foreach_batch_matches_batch(spark, tmp_path):
@@ -902,28 +891,6 @@ def _build_bm25_fixture(spark, tmp_path):
     qdir = tmp_path / "bm25_queries"
     qterms.write.parquet(str(qdir))
     return docs, idx, qterms, str(qdir)
-
-
-def test_streaming_bm25_scores_match_batch(spark, tmp_path):
-    """Stream-static BM25 scoring against the frozen index must emit
-    the exact per-(query, doc) integer scores of the batch ranker
-    (pre-ranking — ranking needs a second agg, illegal on streams)."""
-    from mrgo_spark.operators import retrieval
-
-    docs, idx, qterms, qdir = _build_bm25_fixture(spark, tmp_path)
-    qstream = spark.readStream.schema("query_id long, term string").parquet(qdir)
-    out = stream_ops.streaming_bm25_scores(idx, qstream)
-    stream_ops.run_to_memory(out, "bm25_serve")
-    got = {
-        (r.query_id, r.doc_id): (r.n_terms, r.score_fp)
-        for r in spark.sql("SELECT * FROM bm25_serve").collect()
-    }
-    # batch twin WITHOUT the top-k cut: every scored (query, doc) pair
-    expected = {
-        (r.query_id, r.doc_id): (r.n_terms, r.score_fp)
-        for r in retrieval.bm25_topk(docs, qterms, k=10**9).collect()
-    }
-    assert got == expected
 
 
 def test_serve_bm25_foreach_batch_matches_batch(spark, tmp_path):
