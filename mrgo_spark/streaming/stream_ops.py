@@ -108,8 +108,9 @@ def _serve_gets_walk(
     n: int,
 ) -> tuple[str, int, pd.DataFrame]:
     """The one per-key Put/Append walk, shared by ``streaming_fold``
-    and ``streaming_get_results``: fold one key's ops in ``seq`` order from state (cur, n) and emit the
-    state at each ``get``'s position in the log (reference
+    and ``streaming_get_results``: fold one key's ops in ``seq`` order
+    from state (cur, n) and emit the state at each ``get``'s position
+    in the log (reference
     kvraft/client.go:41-59 — Get returns the current value, "" for a
     missing key; Put/Append mutate and return nothing; a NULL value
     counts as ""). Returns the new (cur, n) and the (seq, key, val)

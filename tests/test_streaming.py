@@ -461,7 +461,7 @@ def test_streaming_serve_honours_deletes(spark, tmp_path):
         {r.neighbor_id for r in ivf.query(queries, k=5).collect() if r.rank <= 2}
     )
     ivf.delete(gone_vecs)
-    docs, bm25, qterms, bm25_dir = _build_bm25_fixture(spark, tmp_path)
+    _, bm25, qterms, bm25_dir = _build_bm25_fixture(spark, tmp_path)
     gone_docs = sorted(
         {r.doc_id for r in bm25.query(qterms, k=10).collect() if r.rank == 1}
     )
