@@ -67,7 +67,7 @@ def word_ngrams(text: Column | str, n: int) -> Column:
     one space); empty array below n tokens. The ONE gram builder —
     pipeline decontamination, textstats n-gram counts, and bigram
     novelty all call this so a tokenizer-edge fix lands everywhere
-    at once (r5 review finding: three hand-maintained copies)."""
+    at once."""
     return ngrams_from_tokens(ascii_tokens(text, lowercase=True), n)
 
 
@@ -75,8 +75,8 @@ def ngrams_from_tokens(toks: Column, n: int) -> Column:
     """The gram-assembly half of word_ngrams for an ALREADY-tokenized
     array column — for call sites that tokenize once into a
     checkpointed frame and build grams from the stored array
-    (ngram_precision_eval; r8 review finding folded its private
-    copy). Same space-joined encoding, same empty-below-n rule."""
+    (ngram_precision_eval). Same space-joined encoding, same
+    empty-below-n rule."""
     idx = F.sequence(F.lit(0), F.size(toks) - n)
     return F.when(
         F.size(toks) >= n,

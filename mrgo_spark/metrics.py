@@ -117,8 +117,8 @@ def stages_since(
 
 
 def run_with_metrics(spark, df_or_thunk) -> dict[str, int]:
-    """Execute a query with the bench idiom (count for the row
-    total, noop write for the unpruned full plan) and return the
+    """Execute a query as two actions (count for the row total, noop
+    write for the unpruned full plan) and return the
     summed stage metrics of construction + BOTH actions, plus
     ``rows``. Pass a zero-arg callable to put DataFrame CONSTRUCTION
     inside the metric window too — driver-tiny collects during

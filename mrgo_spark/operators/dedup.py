@@ -119,7 +119,7 @@ def minhash_lsh_pairs(
     equi-join on (band, bucket-hash) — never a cross join. With
     r=4, b=8 the S-curve threshold is ~ (1/8)^(1/4) ≈ 0.6 Jaccard
     (32 hashes halve signature cost vs 64/16 at nearly the same
-    threshold — the hash evaluation dominates bench time).
+    threshold — the hash evaluation dominates the run time).
     Columns: (id_a, id_b, n_bands) — verify candidates with
     ``ngram_jaccard_pairs`` downstream.
 

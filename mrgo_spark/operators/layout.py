@@ -33,7 +33,7 @@ def zorder_key(c1, c2, bits: int = Z_BITS) -> F.Column:
 
     def _checked(c):
         # shiftright SIGN-EXTENDS: a negative key would set every
-        # odd/even bit and silently destroy locality (ADVICE r4) —
+        # odd/even bit and silently destroy locality —
         # raise per-row instead, then mask to the declared bit width
         # (high bits ignored by documented construction).
         raw = (F.col(c) if isinstance(c, str) else c).cast("long")

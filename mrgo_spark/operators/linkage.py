@@ -1,5 +1,5 @@
 """Probabilistic record linkage: sorted-neighborhood blocking +
-Fellegi-Sunter match weights (r13) — the entity-resolution family.
+Fellegi-Sunter match weights — the entity-resolution family.
 
 Reference capability: the reference's data-processing surface stops at
 exact keys; a training-data pipeline deduplicating *entities* (user

@@ -1,4 +1,4 @@
-"""Incremental materialized-view maintenance (r13) — the IVM family.
+"""Incremental materialized-view maintenance — the IVM family.
 
 A 100 TB warehouse does not recompute its rollups when a CDC batch
 lands; it folds the delta into the stored aggregate. For the
@@ -63,11 +63,11 @@ def maintain_groupby(
     the base (CDC discipline); a group over-deleted below zero
     SURFACES as a negative count in the output (the != 0 filter
     keeps it visible) — callers wanting loud failure assert n >= 0
-    downstream. The merge keys join NULL-SAFELY (r13 review
-    finding): a nullable group key (NULL lang, NULL priority) must
-    merge its base and delta rows like the recompute's GROUP BY
-    does, not split into two rows because NULL != NULL — the
-    eqNullSafe + coalesce shape kv.state_diff uses."""
+    downstream. The merge keys join NULL-SAFELY: a nullable group
+    key (NULL lang, NULL priority) must merge its base and delta
+    rows like the recompute's GROUP BY does, not split into two rows
+    because NULL != NULL — the eqNullSafe + coalesce shape
+    kv.state_diff uses."""
     keys = list(keys)
     d = delta_contributions(delta, keys, count_col, sum_cols)
     b = base_agg

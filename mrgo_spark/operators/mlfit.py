@@ -1,4 +1,4 @@
-"""Closed-form model fitting as aggregates (r5).
+"""Closed-form model fitting as aggregates.
 
 Distributed ML beyond clustering: ordinary least squares solved with
 EXACT integer normal equations — one partially-aggregated pass
@@ -10,10 +10,10 @@ result replays bit-for-bit in a second engine (the fixed-point
 recipe applied to model fitting; gradient-descent fits need exp/log
 and are NOT hash-portable — this is the form that is).
 
-Caller contract (r6): the OUTPUT Cramer terms must fit a signed
+Caller contract: the OUTPUT Cramer terms must fit a signed
 64-bit integer — n·σx·σy·n in magnitude. INTERMEDIATES (n·Σx²,
-Σx·Σy, 10⁶·num) are computed in DECIMAL(38,0) since r6, so a large
-n·Σx² no longer overflows before the subtraction that cancels it
+Σx·Σy, 10⁶·num) are computed in DECIMAL(38,0), so a large
+n·Σx² does not overflow before the subtraction that cancels it
 (the 10× scale probe caught exactly this on degree assortativity:
 n·Σx² = 9.227e18 > 2^63 while the true varx was 3.45e17 — the
 intermediate was the only overflow). DuckDB oracles get this for
@@ -123,7 +123,7 @@ def corr_pairs_exact(
     pair_structs = []
     for i, a in enumerate(names):
         for b in names[i + 1 :]:
-            # decimal(38,0) intermediates (r6): n·Σx² alone can pass
+            # decimal(38,0) intermediates: n·Σx² alone can pass
             # 2^63 while the subtracted Cramer value fits — the
             # overflow the 10× assortativity probe caught
             nn = _dec(F.col("n"))
@@ -219,7 +219,7 @@ def auc_exact(df: DataFrame, group_col: str, score, label) -> DataFrame:
         num.alias("auc_num"),
         den.alias("auc_den"),
     )
-    # decimal intermediate (r6): 10^6·auc_num passes 2^63 once
+    # decimal intermediate: 10^6·auc_num passes 2^63 once
     # np·nn > ~9·10^12 (a few million rows/group) though auc_micro
     # itself is ≤ 10^6
     micro = F.when(

@@ -96,7 +96,7 @@ class PilCodec:
 
 
 class BmpCodec:
-    """Dependency-free REAL pixel codec (VERDICT_r7 #2): decodes
+    """Dependency-free REAL pixel codec: decodes
     uncompressed 24-bit BMP (BITMAPINFOHEADER, BI_RGB) with stdlib
     ``struct`` only — so the mapInPandas codec seam runs on REAL
     pixels in this container (which has neither PIL nor ffmpeg).
@@ -207,7 +207,7 @@ def encode_bmp(gray_rows: list[list[int]]) -> bytes:
 
 
 def synth_bmp_media(embeddings: DataFrame, w: int = 8, h: int = 8) -> DataFrame:
-    """Media fixture with REAL BMP blobs (VERDICT_r7 #2): one w×h
+    """Media fixture with REAL BMP blobs: one w×h
     24-bit BMP per embedding row, grayscale pixels derived
     deterministically from sha256(vec_id) — test fuel that exercises
     an actual pixel decode through the codec seam, no external
@@ -594,7 +594,7 @@ def frame_sample(media: DataFrame, every_ms: int = 1000, codec=None) -> DataFram
     ordinal × every_ms) — on the real path ``frame_idx`` REPEATS when
     every_ms is shorter than the frame period (timeline samples of
     the same container frame), so (media_id, t_ms) is the unique row
-    key, not (media_id, frame_idx) (ADVICE r8)."""
+    key, not (media_id, frame_idx)."""
     codec = codec or get_codec()
     out_schema = "media_id long, t_ms int, frame_idx int, frame binary"
     real_video = hasattr(codec, "frame_samples")
@@ -673,7 +673,7 @@ def synth_media(spark, embeddings: DataFrame) -> DataFrame:
 # 1 << 63 is the documented overflow trap (CLAUDE.md); 60 bits keep
 # every intermediate positive with 4 bits of headroom. The MEAN is
 # still taken over the full 8x8 tile (all 64 pixels — textbook
-# aHash, ADVICE r4); only the packing drops the last 4 pixels.
+# aHash); only the packing drops the last 4 pixels.
 
 PHASH_BITS = 60
 PHASH_PIXELS = 64

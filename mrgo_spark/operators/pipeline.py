@@ -110,9 +110,9 @@ def dsir_importance_scores(
     side at any corpus size); per-doc work is ONE tokenize+hash pass —
     the hashed-gram frame (id, target, bucket) is lazily
     localCheckpointed and feeds BOTH the bucket build and the per-doc
-    score (r13 optimization round: the former two-pass form ran the
-    tokenize + bigram + md5 chain twice over the corpus, 2.3 → 1.8 s
-    warm at sf0.1; rows parity-pinned). The materialized frame is
+    score (a two-pass form runs the tokenize + bigram + md5 chain
+    twice over the corpus: measured 2.3 → 1.8 s warm at sf0.1; rows
+    parity-pinned). The materialized frame is
     3 narrow ints per gram — the same order of bytes a corpus shuffle
     moves, stored once instead of recomputing the hash chain.
     """
@@ -542,7 +542,7 @@ def dsir_resample(
     clamp_bits: int = DSIR_RESAMPLE_CLAMP,
 ) -> DataFrame:
     """The importance-RESAMPLING step that closes the DSIR loop
-    (Xie et al. 2023 §3; VERDICT_r6 #5): ``dsir_importance_scores``
+    (Xie et al. 2023 §3): ``dsir_importance_scores``
     ranks documents by target-likeness, this allocates an exact
     ``budget`` of documents across score strata proportional to each
     stratum's total IMPORTANCE MASS and picks deterministically
@@ -971,11 +971,11 @@ def corpus_shuffle(
     SAME epoch order (change ``salt`` per epoch for fresh orders).
 
     A naive ``row_number() OVER (ORDER BY md5)`` is a single-partition
-    global window — the scale-killer class VERDICT_r1 flagged on IVF
-    seeding. This uses the distributed ranking decomposition instead:
-    rows shuffle once into 4096 buckets keyed by the first 3 hex
-    chars of the md5 (uniform by construction — no skew), rank with a
-    window PARTITIONED by bucket, and add each bucket's global offset
+    global window: every row passes through one task. This uses the
+    distributed ranking decomposition instead: rows shuffle once into
+    4096 buckets keyed by the first 3 hex chars of the md5 (uniform
+    by construction — no skew), rank with a window PARTITIONED by
+    bucket, and add each bucket's global offset
     from a 4096-row prefix-sum that is computed on the tiny per-bucket
     count aggregate and broadcast back. Bucket-prefix order composes
     with in-bucket key order, so positions equal the naive global
@@ -1022,7 +1022,7 @@ def token_balanced_shards(
     shard of its last token, bounding every shard at
     cap + max_doc_tokens. The cap floors at 1 so an all-empty corpus
     (total = 0) lands every row in shard 0 instead of dividing by
-    zero (ADVICE r7).
+    zero.
 
     Scale shape: the weighted extension of corpus_shuffle's
     distributed-ranking trick — one shuffle into 4096 md5 buckets,
@@ -1136,12 +1136,12 @@ BLOOM_WORDS = 2048  # x 32 bits = 65536 positions
 # 1/16th of the filter — a measured ~14x false-positive inflation
 # (review finding). Probe and build BOTH derive from this tuple; the
 # oracle SQL interpolates it too, so the three legs cannot desync.
-# r5 (ADVICE r4): the four probe lanes are DISJOINT 16-bit slices of
-# the md5 hex string (chars 4i+1..4i+4, i < 4 — the first 64 bits).
-# The r4 lanes were overlapping windows of one 48-bit prefix, so
-# probe positions were correlated and the effective FP rate was
-# worse than 4 independent hashes; disjoint slices are independent
-# by construction and interpolate identically in the oracle.
+# The four probe lanes are DISJOINT 16-bit slices of the md5 hex
+# string (chars 4i+1..4i+4, i < 4 — the first 64 bits). Overlapping
+# windows of one 48-bit prefix would correlate probe positions and
+# make the effective FP rate worse than 4 independent hashes;
+# disjoint slices are independent by construction and interpolate
+# identically in the oracle.
 BLOOM_K = 4
 
 
@@ -1326,7 +1326,7 @@ def excess_bits_domain_weights(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Loss-based domain mixture reweighting (r13) — the DoReMi idea
+    """Loss-based domain mixture reweighting — the DoReMi idea
     (Xie et al. 2023: upweight domains where the model's loss runs
     ABOVE the reference) reduced to the repo's exact-integer kernels:
     the reference model is the corpus-global add-one bigram LM
@@ -1478,7 +1478,7 @@ def span_corruption(
     # < 2^53, and /2^k is exact in binary floating point).
     # ValueError, not assert: stripped under -O, and the failure mode
     # (NULL starts / modulo-by-zero in `% (block - span + 1)`) would
-    # surface far from the misuse site (ADVICE r8).
+    # surface far from the misuse site.
     if rate_mod <= 0 or rate_mod & (rate_mod - 1) != 0:
         raise ValueError(f"rate_mod must be a power of two, got {rate_mod}")
     if span <= 0 or span > block:
@@ -1564,7 +1564,7 @@ def curriculum_order(
     id_col: str = "doc_id",
     salt: str = "",
 ) -> DataFrame:
-    """Deterministic CURRICULUM schedule (r9): global training-order
+    """Deterministic CURRICULUM schedule: global training-order
     positions ordered by (level asc, md5(salt‖id)) — easy examples
     first, an md5 shuffle WITHIN each difficulty level, and the whole
     order a pure function of (ids, levels, salt) so resumed or re-run
@@ -1585,7 +1585,7 @@ def curriculum_order(
     md5, id)`` exactly (the oracle). Columns: original columns +
     level (int) + curriculum_pos (0-based bigint)."""
     key = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
-    # Loud-on-misuse (ADVICE r9): a NULL level (or a level that casts
+    # Loud-on-misuse: a NULL level (or a level that casts
     # to NULL) would silently vanish from the schedule — null _lv/_bkt
     # keys never match the offsets equi-join. Same for a NULL id.
     # assert_true rides in a filter (the dcg_eval idiom) so pruning
@@ -1849,8 +1849,8 @@ DISC_HORIZON = 16    # n-step truncation bounds the denominator 4^15
 def disc_coefs(horizon: int = DISC_HORIZON) -> list[int]:
     """The γ=3/4 n-step coefficient ladder 3^k·4^(horizon−1−k) — THE
     one source for the Spark fold and the oracle's literal array
-    (r13 review: the oracle rebuilt the comprehension AND hardcoded
-    the window frame; a horizon change would desync them)."""
+    (an oracle that rebuilt the comprehension AND hardcoded the
+    window frame would desync on a horizon change)."""
     return [
         (DISC_GAMMA_NUM ** k) * (DISC_GAMMA_DEN ** (horizon - 1 - k))
         for k in range(horizon)
@@ -1866,7 +1866,7 @@ def discounted_returns(
     gap_us: int = 1_800_000_000,
     horizon: int = DISC_HORIZON,
 ) -> DataFrame:
-    """Discounted n-step return-to-go (r13): trajectory_returns' γ=1
+    """Discounted n-step return-to-go: trajectory_returns' γ=1
     suffix sum generalized to γ = 3/4, EXACT — the value-regression /
     TD(n) target of offline RL over interaction logs. γ with a
     power-of-two-times-small denominator keeps every term rational
@@ -1984,7 +1984,7 @@ def weighted_sample(
     m: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Weight-proportional sample without replacement (r13) —
+    """Weight-proportional sample without replacement —
     priority sampling in the Duffield-Lund-Thorup / bottom-k style:
     every record gets key = h / w (h = 48-bit md5 of its id, w its
     weight) and the sample is the m SMALLEST keys, so inclusion

@@ -1,4 +1,4 @@
-"""Data profiling: per-column summary statistics in one pass (r5).
+"""Data profiling: per-column summary statistics in one pass.
 
 The ubiquitous engine utility a pipeline runs before trusting a new
 table: null counts, exact distinct counts, min/max per column —
@@ -66,7 +66,7 @@ def profile_columns(df: DataFrame, cols: dict) -> DataFrame:
 def corpus_datacard(
     documents: DataFrame, text_col: str = "text", lang_col: str = "lang"
 ) -> DataFrame:
-    """Per-language corpus datacard (r6) — the one-table summary a
+    """Per-language corpus datacard — the one-table summary a
     training-data release ships: document and token volume, heuristic
     and classifier keep rates, and duplication, all from ONE pass.
 

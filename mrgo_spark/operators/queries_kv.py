@@ -449,8 +449,8 @@ def q_kv_state_at_seq(spark, sf_dir):
     )
     cut = oplog.agg(
         # integer `div` matches the oracle's truncating `//` for ANY
-        # int64 seq range; the old float-floor form was exact only
-        # below 2^53 (ADVICE_r10)
+        # int64 seq range; a float-floor form is exact only below
+        # 2^53
         F.expr("(min(seq) + max(seq)) div 2").alias("_s")
     )
     snap = (
@@ -520,7 +520,7 @@ def q_kv_put_history_scd2(spark, sf_dir):
     """,
 )
 def q_kv_state_diff(spark, sf_dir):
-    """Snapshot diff (r10): the dataset-versioning audit between two
+    """Snapshot diff: the dataset-versioning audit between two
     point-in-time reads of the same store — state at the log midpoint
     (the kv_state_at_seq snapshot) vs state at the head — with a
     per-key verdict added/removed/changed/unchanged and the value
@@ -546,7 +546,7 @@ def q_kv_state_diff(spark, sf_dir):
         kv.synth_oplog(load_table(spark, sf_dir, "events"))
     ).localCheckpoint(eager=False)
     cut = oplog.agg(
-        # integer `div` == oracle `//` unconditionally (ADVICE_r10)
+        # integer `div` == oracle `//` unconditionally
         F.expr("(min(seq) + max(seq)) div 2").alias("_s")
     )
     snap = (

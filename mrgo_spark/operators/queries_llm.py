@@ -114,7 +114,7 @@ _FX_NORMS_SQL = """
 # Multiply-read form of the norms CTE (self-joined oracles): derived
 # from the ONE source of truth above, with a loud import-time check —
 # a silent str.replace no-op would inline the CTE per consumer, the
-# multiply-read-CTE blowup class (r9 review finding).
+# multiply-read-CTE blowup class.
 _FX_NORMS_SQL_MAT = _FX_NORMS_SQL.replace(
     "norms AS", "norms AS MATERIALIZED"
 )
@@ -610,7 +610,7 @@ def q_lang_id(spark, sf_dir):
     """,
 )
 def q_lang_id_confusion(spark, sf_dir):
-    """X4 extension (r5): confusion matrix of the marker-stopword
+    """X4 extension: confusion matrix of the marker-stopword
     language ID against the fixture's labeled ``lang`` column — the
     classifier-eval rollup a corpus pipeline reports before trusting
     a heuristic filter at 100 TB (label join + one partial-agg
@@ -1144,7 +1144,7 @@ def q_dedup_pipeline_minhash(spark, sf_dir):
     """,
 )
 def q_bigram_novelty_stats(spark, sf_dir):
-    """X4 extension (r5): corpus-frequency bigram familiarity — the
+    """X4 extension: corpus-frequency bigram familiarity — the
     integer-exact stand-in for LM-perplexity quality filtering (docs
     heavy in corpus-unique bigrams are garbled/noisy; familiar-bigram
     mass marks natural text). ln()-based perplexity is not
@@ -1533,7 +1533,7 @@ _FP_CANON_SQL = (
     """,
 )
 def q_incremental_dedup_audit(spark, sf_dir):
-    """X2 extension (r5): incremental-ingestion dedup — classify an
+    """X2 extension: incremental-ingestion dedup — classify an
     incoming batch (exact copies, token-reversed copies, genuinely
     new docs, and within-batch duplicates of the new docs) against
     the existing corpus' fingerprint index. The daily-crawl op at
@@ -1608,15 +1608,15 @@ def q_incremental_dedup_audit(spark, sf_dir):
     """,
 )
 def q_simhash_md5_pairs(spark, sf_dir):
-    """X2 (r5): engine-portable SimHash near-dup pairs — 48-bit
+    """X2: engine-portable SimHash near-dup pairs — 48-bit
     sign-sum over md5 token hashes, 4×12-bit banded pigeonhole,
     exact bit_count verify. With this, EVERY LSH family in the
-    engine (SRP r4b, MinHash r5, SimHash here) has a fully
+    engine (SRP, MinHash, SimHash here) has a fully
     oracle-checked deterministic twin beside its seeded flagship."""
     return dedup.simhash_md5_pairs(_dup_corpus(spark, sf_dir))
 
 
-# md5-portable MinHash oracle fragments (r5): shingle → 48-bit md5
+# md5-portable MinHash oracle fragments: shingle → 48-bit md5
 # base hash mod 2^31-1 → 32 affine permutation mins. The constants
 # VALUES table and the Spark expressions share one generator
 # (dedup.minhash_md5_consts).
@@ -2432,11 +2432,11 @@ def q_doc_fp(spark, sf_dir):
 
 # One IVFIndex per (session, sf_dir): the declared ANN entry serves
 # from a built index instead of re-running centroid seeding + corpus
-# assignment per call (round-2 bench: 19.0 s one-shot vs 1.2 s
-# served at sf0.1). The build is an explicit, separately-benched op
-# (IVFIndex.build / bench's ivf_index_build); this cache is the
-# session-lifetime analog of pointing queries at a persisted index
-# path, which is how the operator deploys at 100 TB.
+# assignment per call (measured: 19.0 s one-shot vs 1.2 s served at
+# sf0.1). The build is an explicit, separately-timed op
+# (IVFIndex.build); this cache is the session-lifetime analog of
+# pointing queries at a persisted index path, which is how the
+# operator deploys at 100 TB.
 _IVF_CACHE: dict[str, "similarity.IVFIndex"] = {}
 
 
@@ -2458,7 +2458,7 @@ def q_topk_ivf(spark, sf_dir):
             # drop the stale entry and rebuild below instead of
             # failing the declared entry with no recovery path.
             # Only dead-path errors earn the rebuild; anything else
-            # is a genuine query-path bug and propagates (ADVICE r7).
+            # is a genuine query-path bug and propagates.
             if not _dead_index_path(e, idx.path):
                 raise
             import sys
@@ -2477,9 +2477,9 @@ def q_topk_ivf(spark, sf_dir):
 def _dead_index_path(e: Exception, path: str | None = None) -> bool:
     """True iff ``e`` looks like a reaped/missing served-index path —
     the ONLY failure the cached-index recovery paths should mask with
-    a rebuild (ADVICE r7: a bare except here hid genuine query-path
+    a rebuild (a bare except here would hide genuine query-path
     bugs behind an expensive rebuild-and-retry whose second failure
-    surfaced far from the root cause). Matches FileNotFound /
+    surfaces far from the root cause). Matches FileNotFound /
     path-not-exist shapes from both the JVM (AnalysisException,
     Py4JJavaError wrapping FileNotFoundException) and the OS."""
     if isinstance(e, FileNotFoundError):
@@ -2492,20 +2492,19 @@ def _dead_index_path(e: Exception, path: str | None = None) -> bool:
         # the legacy Spark dead-path form, kept SPECIFIC: a bare
         # "does not exist" also matches catalog errors ("Table or
         # view ... does not exist") and would re-mask genuine bugs
-        # behind a rebuild (r8 review finding)
+        # behind a rebuild
         "Path does not exist",
     )
     if any(n in msg for n in needles):
         return True
     # "Unable to infer schema" also fires when a genuine bug writes an
-    # EMPTY index dir (ADVICE r8). Spark 4's UNABLE_TO_INFER_SCHEMA
-    # message carries NO path (r9 review finding — a substring check
-    # on the message can never match), so callers pass the path they
-    # attempted and we probe the filesystem. Granularity matters (r9
-    # review #2): a served index is a ROOT of component subdirs
-    # (cells/ postings/ df/ dl/ ...), and a reaper can empty one
-    # component while another keeps files — so the probe is
-    # per-component: dead iff the root is missing/empty or ANY
+    # EMPTY index dir. Spark 4's UNABLE_TO_INFER_SCHEMA message
+    # carries NO path (a substring check on the message can never
+    # match), so callers pass the path they attempted and we probe
+    # the filesystem. Granularity matters: a served index is a ROOT
+    # of component subdirs (cells/ postings/ df/ dl/ ...), and a
+    # reaper can empty one component while another keeps files — so
+    # the probe is per-component: dead iff the root is missing/empty or ANY
     # component subdir holds no parquet file. A successful parquet
     # write — even of a 0-row frame — always leaves a schema-bearing
     # part file, so "no parquet anywhere in a component" is a reaper
@@ -2526,8 +2525,8 @@ def _dead_index_path(e: Exception, path: str | None = None) -> bool:
                     return True
             return False
 
-        # Probe only the KNOWN component subdirs for the index type
-        # (ADVICE r9): a root-level walk over ALL subdirs let a
+        # Probe only the KNOWN component subdirs for the index type:
+        # a root-level walk over ALL subdirs let a
         # crashed/partial write of a SIBLING artifact (eval_truth
         # lives under the BM25 root) classify a healthy index as dead
         # — silently rebuilding and masking a genuine query-path bug.
@@ -2556,7 +2555,7 @@ def _dead_index_path(e: Exception, path: str | None = None) -> bool:
 # _ivf_tmpdir prefix that names each index type). A successful
 # parquet write — even 0 rows — always leaves a schema-bearing part
 # file in each of these; extraneous sibling dirs (eval_truth, scratch)
-# are deliberately NOT probed (ADVICE r9).
+# are deliberately NOT probed.
 _INDEX_COMPONENTS: dict[str, tuple[str, ...]] = {
     "mrgo_bm25_idx_": ("postings", "df", "dl", "scalars", "meta"),
     "mrgo_ivf_idx_": ("cells", "centroids"),
@@ -2782,10 +2781,10 @@ def q_embedding_quantize(spark, sf_dir):
 
     Declared in LONG form (vec_id, pos, qval, scale, max_err_fx) —
     scalar cells only, sortable by the driver's pandas canonicalizer
-    (the r3 red rows were array columns). The array-returning form
+    (array columns fail its sort). The array-returning form
     stays the library API (similarity.quantize_embeddings).
 
-    Plan note (r4): per-vector scale and max_err_fx are materialized
+    Plan note: per-vector scale and max_err_fx are materialized
     as columns BEFORE the explode and the per-dim qval is computed on
     scalars AFTER it — exploding quantize_embeddings' qvec array put
     the transform into the Generate's pushed-down predicates (same
@@ -3249,8 +3248,8 @@ def _pq_cte(k: int = 16, m: int = 8, subdim: int = 8, iters: int = 2) -> str:
 # One PQ training AND assignment per (session, sf_dir): the three
 # declared PQ entries (codes / ADC / IMI) share trained codebooks AND
 # the localCheckpointed assigned-codes frame — the interpreted
-# 8×16-centroid HOF fold is the heaviest stage in the family (r4
-# bench: 6-8 s warm PER entry when each re-assigned from scratch),
+# 8×16-centroid HOF fold is the heaviest stage in the family
+# (measured 6-8 s warm PER entry when each re-assigned from scratch),
 # and in a real deployment codes are materialized at rest exactly
 # once (SCALE.md); the session cache mirrors that. The _IVF_CACHE
 # "declared ANN serves from a session cache" idiom.
@@ -3258,7 +3257,7 @@ def _pq_cte(k: int = 16, m: int = 8, subdim: int = 8, iters: int = 2) -> str:
 # key can collide after a session is GC'd and the address recycled
 # (review finding); holding the session and comparing identity cannot.
 # A stale entry (stopped session) is DELETED on miss so its JVM-backed
-# checkpointed frame is released promptly (ADVICE r4).
+# checkpointed frame is released promptly.
 _PQ_CACHE: dict[str, tuple] = {}
 
 
@@ -3439,8 +3438,8 @@ def q_pq_topk_imi(spark, sf_dir):
     """,
 )
 def q_imi_cell_skew_audit(spark, sf_dir):
-    """ANN index STALENESS audit (VERDICT_r9 #5,
-    similarity.imi_cell_skew_audit): per-coarse-cell population,
+    """ANN index STALENESS audit
+    (similarity.imi_cell_skew_audit): per-coarse-cell population,
     quantization-error mass, assignment-margin mass, and the global
     max/median cell-count skew ratio — the re-train trigger signal
     for an index grown by incremental adds against frozen centroids.
@@ -3486,8 +3485,8 @@ def q_imi_cell_skew_audit(spark, sf_dir):
     """,
 )
 def q_ann_ingest_conflict_audit(spark, sf_dir):
-    """Ingestion re-embed CONFLICT audit (VERDICT_r9 #4,
-    similarity.IVFIndex.ingest_conflict_audit): IVFIndex.add drops a
+    """Ingestion re-embed CONFLICT audit
+    (similarity.IVFIndex.ingest_conflict_audit): IVFIndex.add drops a
     changed vector for an already-indexed id lake-wins, undetectably
     (the anti-join removes it before the conflict guard can see it) —
     this is the detection pass, run against the at-rest cell vectors.
@@ -3593,7 +3592,7 @@ def _bpe_learned(spark, sf_dir, rounds):
         return hit[1]
     if hit is not None:
         # stale stopped-session entry: drop it so its JVM-backed
-        # checkpointed words frame is released promptly (ADVICE r4)
+        # checkpointed words frame is released promptly
         del _BPE_CACHE[key]
     docs = widen_scan(load_table(spark, sf_dir, "documents"))
     got = textstats.bpe_learn(docs, rounds)
@@ -3666,7 +3665,7 @@ def q_bpe_vocab_tokens(spark, sf_dir):
 )
 def q_bpe_doc_token_counts(spark, sf_dir):
     """X4 extension: per-document token counts under the trained BPE
-    merges (r5) — tokenizer application at corpus scale, the length
+    merges — tokenizer application at corpus scale, the length
     accounting a mixture/packing pipeline needs before sampling.
     Serves from the session BPE cache (one 6-round training per
     session feeds all three bpe_* entries); the oracle replays
@@ -3676,7 +3675,7 @@ def q_bpe_doc_token_counts(spark, sf_dir):
     return textstats.bpe_doc_token_counts(docs, words)
 
 
-# ---- unigram-LM tokenizer (r13, VERDICT_r12 #6) --------------------
+# ---- unigram-LM tokenizer ------------------------------------------
 
 
 def _unigram_sql(rounds: int = 2) -> str:
@@ -3809,7 +3808,7 @@ def _uni_learned(spark, sf_dir):
 )
 def q_unigram_train_vocab(spark, sf_dir):
     """X4: unigram-LM tokenizer training (Kudo 2018, SentencePiece's
-    second paradigm next to BPE — VERDICT_r12 #6): substring seeding,
+    second paradigm next to BPE): substring seeding,
     two EM prune rounds with exact enumerated-Viterbi segmentation
     and half-bit bit_length log-likelihoods (no libm anywhere). The
     oracle replays the WHOLE training loop — seeding, both rounds'
@@ -3829,10 +3828,10 @@ def _uni_apply_sql() -> str:
     (exhaustive path enumeration over the distinct-word table) +
     ubestf (the total-order argmax: sc desc, np asc, path asc — the
     tie-break that makes the Viterbi argmax engine-identical).
-    Factored (r13 review): unigram_doc_token_counts and
-    unigram_fertility_by_lang embedded verbatim copies; an edit to
-    the committed tie-break in one copy would leave one oracle green
-    and the other red looking like fixture drift (the
+    Factored so unigram_doc_token_counts and
+    unigram_fertility_by_lang share one copy: an edit to the
+    committed tie-break in one of two copies would leave one oracle
+    green and the other red looking like fixture drift (the
     _bm25_tscore_sql precedent)."""
     return f""",
     usegf AS (
@@ -3964,7 +3963,7 @@ def q_unigram_fertility_by_lang(spark, sf_dir):
 def q_media_phash_pairs(spark, sf_dir):
     """X5 extension: perceptual-hash (aHash) media near-dup pairs —
     60-bit pixel-vs-full-tile-mean hash (mean over all 64 thumbnail
-    pixels, textbook aHash; pack drops the last 4 — ADVICE r4),
+    pixels, textbook aHash; pack drops the last 4),
     4x15-bit banded pigeonhole lookup
     (any pair within hamming 3 shares an exact band), bit_count
     verify at hamming <= 2. Declared through the closure-free
@@ -4033,7 +4032,7 @@ def q_media_phash_pairs(spark, sf_dir):
     """,
 )
 def q_media_dedup_canonical(spark, sf_dir):
-    """X5 end-to-end media dedup (r7): perceptual aHash → 4×15-bit
+    """X5 end-to-end media dedup: perceptual aHash → 4×15-bit
     banded Hamming pairs (≤2) → connected components → canonical
     keep/drop for EVERY media item — the full media near-dup pipeline
     next to the text pipeline (dedup_pipeline_canonical), declared
@@ -4259,7 +4258,7 @@ def q_stratified_sample_docs(spark, sf_dir):
     """,
 )
 def q_zipf_fit_tokens(spark, sf_dir):
-    """Zipf power-law audit (r5): per-language OLS of log₂(freq) on
+    """Zipf power-law audit: per-language OLS of log₂(freq) on
     log₂(rank) over the token rank-frequency table — the corpus-
     health check that catches template/boilerplate floods (natural
     text slopes near −1; spam flattens it). The log₂ is EXACT integer
@@ -4341,7 +4340,7 @@ def _clf_sql_fragments():
     """,
 )
 def q_classifier_quality_scores(spark, sf_dir):
-    """Classifier-based quality scoring (r6, VERDICT_r5 #5): the
+    """Classifier-based quality scoring: the
     fasttext-style linear-filter step between the heuristic filters
     (quality_score, gopher_rules_audit) and a learned model — hashed
     bag-of-words integer dot product against a literal weight vector,
@@ -4370,7 +4369,7 @@ def q_classifier_quality_scores(spark, sf_dir):
     """,
 )
 def q_classifier_quality_audit(spark, sf_dir):
-    """Threshold audit of the classifier filter (r6): the bounded
+    """Threshold audit of the classifier filter: the bounded
     per-label corpus view (counts, token mass, score extrema) a
     pipeline dashboards before committing to a keep threshold — one
     partial-agg shuffle over the map-only scores."""
@@ -4869,8 +4868,8 @@ def q_dsir_importance_scores(spark, sf_dir):
     """,
 )
 def q_dsir_resample_docs(spark, sf_dir):
-    """The DSIR RESAMPLING step (VERDICT_r6 #5,
-    pipeline.dsir_resample): a 500-document budget apportioned across
+    """The DSIR RESAMPLING step
+    (pipeline.dsir_resample): a 500-document budget apportioned across
     dsir_score_bits strata (clamped to ±8) proportional to each
     stratum's total importance mass n_s·2^(stratum+8) — the
     largest-remainder machinery shared with stratified/temperature
@@ -4906,10 +4905,9 @@ def _bm25_tscore_sql(ind: str) -> str:
 def _bm25_leg_sql(k: int, qt_name: str, sfx: str = "") -> str:
     """One BM25 scoring LEG over an arbitrary (query_id, term) CTE —
     CTEs cand{sfx}/tf{sfx}/dfq{sfx}/bm{sfx} reading the shared
-    tok/dl/sc/ex base. Factored (r12) so prf_bm25_fixed can rank
+    tok/dl/sc/ex base. Factored so prf_bm25_fixed can rank
     twice (original terms, then the expanded set) in one statement;
-    _bm25_sql is the single-leg instance, byte-compatible with the
-    pre-refactor fragment."""
+    _bm25_sql is the single-leg instance."""
     return f"""
     cand{sfx} AS MATERIALIZED (
         SELECT q.query_id, e.doc_id, e.term
@@ -4945,10 +4943,9 @@ def _bm25_leg_sql(k: int, qt_name: str, sfx: str = "") -> str:
 
 def _bm25_base_sql(query_pred: str = "doc_id % 100 = 0") -> str:
     """The query-independent BM25 base CTEs — tok/dl/sc/qt/ex — with
-    no scoring leg. Factored (r13) so the champion-list oracle can
+    no scoring leg. Factored so the champion-list oracle can
     reuse the tokenize/stats base without the per-query leg;
-    ``_bm25_sql`` = base + one leg, byte-compatible with the
-    pre-refactor fragment."""
+    ``_bm25_sql`` = base + one leg."""
     return f"""
     tok AS MATERIALIZED (
         SELECT doc_id,
@@ -4985,7 +4982,7 @@ def _bm25_sql(k: int, query_pred: str = "doc_id % 100 = 0") -> str:
 
 
 # One BM25Index per (session, sf_dir) — the _IVF_CACHE idiom applied
-# to retrieval (VERDICT_r6 #3): the declared BM25 entries serve from
+# to retrieval: the declared BM25 entries serve from
 # an at-rest postings/df/dl index (built once, term-bucket-partitioned
 # parquet) instead of re-tokenizing the corpus per call. Output is
 # bit-identical to the two-pass retrieval.bm25_topk (the serve path
@@ -5031,7 +5028,7 @@ def _qterms_cached(spark, sf_dir, tag, build):
 
 
 def _fixed_qterms(spark, sf_dir):
-    """The fixed-8-query (query_id, term) frame (VERDICT_r9 #2 idiom),
+    """The fixed-8-query (query_id, term) frame (the _fixed_qids idiom),
     cached per (session, sf_dir) — shared by bm25_topk_fixed,
     bm25_champion_topk_fixed and dcg_eval_fixed."""
     def build():
@@ -5074,7 +5071,7 @@ def _bm25_served_terms(spark, sf_dir, qterms, k: int):
         return idx.query(qterms, k=k)
     except Exception as e:
         # only a dead index PATH earns a rebuild; genuine query-path
-        # bugs propagate on first occurrence (ADVICE r7)
+        # bugs propagate on first occurrence
         if not _dead_index_path(e, idx.path):
             raise
         import sys
@@ -5102,19 +5099,19 @@ def q_bm25_topk_docs(spark, sf_dir):
     and an exact integer sum, so the full RANKING is oracle-checked
     (not just the row set). Queries are fixture-derived: the first 5
     distinct tokens of every doc_id % 100 == 0 document. Serves from
-    the session-cached at-rest BM25Index (r7): postings/df scans
+    the session-cached at-rest BM25Index: postings/df scans
     prune to the query terms' hash buckets; zero corpus passes after
     the one-time build."""
     return _bm25_served(spark, sf_dir, k=10)
 
 
 def _fixed_qids(spark, sf_dir, n: int = 8) -> list[int]:
-    """The FIXED serving query set (VERDICT_r9 #2): the n smallest
+    """The FIXED serving query set: the n smallest
     distinct vec_ids — the same 8-query idiom the PQ LUT set uses, so
     serving entries built on it are corpus-LINEAR. The %100-doc
     fixture sets grow with the corpus AND duplicate K× under the
     verbatim-copy scale probe (the K²-by-fixture law), which made
-    every probe/bench row built on them mis-grade the serve. 8-row
+    every scale-probe row built on them mis-grade the serve. 8-row
     collect = driver-tiny (the IVF-seed precedent)."""
     emb = load_table(spark, sf_dir, "embeddings")
     return sorted(
@@ -5141,7 +5138,7 @@ _FIXED_QIDS_SQL = """
     """,
 )
 def q_bm25_topk_fixed(spark, sf_dir):
-    """Fixed-query-set BM25 serve (VERDICT_r9 #2): the same
+    """Fixed-query-set BM25 serve: the same
     index-served exact-integer ranking as bm25_topk_docs, but over
     the FIXED 8-query set (smallest vec_ids — the PQ-LUT idiom), so
     the entry measures the SERVE and scales corpus-linearly: the
@@ -5149,7 +5146,7 @@ def q_bm25_topk_fixed(spark, sf_dir):
     law under the verbatim-copy probe (query count grows with the
     corpus and every copied query hits K× duplicated candidates).
     bm25_topk_docs stays declared — its oracle row pins the ranking
-    math over a corpus-sized query set — but bench/probe rows live
+    math over a corpus-sized query set — but scale-probe rows live
     here."""
     qterms = _fixed_qterms(spark, sf_dir)
     return _bm25_served_terms(spark, sf_dir, qterms, k=10)
@@ -5416,7 +5413,7 @@ def q_rrf_hybrid_retrieval(spark, sf_dir):
     """,
 )
 def q_rrf_hybrid_served(spark, sf_dir):
-    """FULLY index-served hybrid retrieval (VERDICT_r7 #1): RRF
+    """FULLY index-served hybrid retrieval: RRF
     fusion where BOTH legs serve from at-rest artifacts — the lexical
     leg from the session-cached BM25Index (postings scan pruned to
     the query terms' buckets) and the semantic leg from the
@@ -5493,7 +5490,7 @@ def q_retrieval_eval(spark, sf_dir):
     semantic agreement (the trec_eval step of a retrieval pipeline,
     restricted to hash-portable metrics; nDCG's log2 discount is
     deliberately absent). Inputs are both top-k-bounded, so the whole
-    eval is queries×k-sized. r8 (VERDICT_r7 #3): the truth set is
+    eval is queries×k-sized. The truth set is
     computed ONCE per (session, sf_dir) and persisted next to the
     BM25Index artifacts — repeated eval runs are index-reads (a
     queries×k parquet scan), never a fresh corpus×queries cosine."""
@@ -5502,7 +5499,7 @@ def q_retrieval_eval(spark, sf_dir):
 
 
 def _eval_truth(spark, sf_dir):
-    """The eval ground-truth cache (VERDICT_r7 #3): exact-cosine
+    """The eval ground-truth cache: exact-cosine
     top-10 for the fixture query set, computed once per (session,
     sf_dir), written as parquet NEXT TO the session BM25Index
     (``{index}/eval_truth``), and served from that parquet on every
@@ -5529,7 +5526,7 @@ def _eval_truth(spark, sf_dir):
         (F.col("vec_id") == F.col("doc_id")) & (F.col("vec_id") % 100 == 0),
         "left_semi",
     )
-    # rank is kept at rest (r9): graded-relevance eval (dcg_eval)
+    # rank is kept at rest: graded-relevance eval (dcg_eval)
     # derives gains from the truth rank; consumers that only need the
     # set (retrieval_eval) project it away.
     truth = similarity.topk_cosine_exact(emb, sem_q, k=10).select(
@@ -5597,8 +5594,8 @@ _EVAL_TRUTH_CACHE: dict[str, tuple] = {}
     """,
 )
 def q_dcg_eval(spark, sf_dir):
-    """Graded-relevance retrieval eval (r9, retrieval.dcg_eval —
-    VERDICT_r8 #2): the served BM25 top-10 run scored against the
+    """Graded-relevance retrieval eval (retrieval.dcg_eval): the
+    served BM25 top-10 run scored against the
     exact-cosine truth with gains rel = 11 − truth_rank and the
     DYADIC discount floor_log2(rank + 1) via length(bin(x)) − 1 —
     true nDCG's log2 is not hash-portable, but the bit_length
@@ -5616,8 +5613,8 @@ def q_dcg_eval(spark, sf_dir):
 
 
 def _eval_truth_fixed(spark, sf_dir):
-    """The _eval_truth idiom over the FIXED 8-query set (VERDICT_r9
-    #2): exact-cosine top-10 truth for the smallest-8 vec_ids,
+    """The _eval_truth idiom over the FIXED 8-query set:
+    exact-cosine top-10 truth for the smallest-8 vec_ids,
     computed once per (session, sf_dir), persisted NEXT TO the
     session BM25Index (``{index}/eval_truth_fixed``) and served from
     that parquet afterwards. The truth build is corpus×8 — one linear
@@ -5696,11 +5693,11 @@ def _eval_truth_fixed(spark, sf_dir):
     """,
 )
 def q_dcg_eval_fixed(spark, sf_dir):
-    """Fixed-query-set graded eval (VERDICT_r9 #2): dcg_eval's exact
+    """Fixed-query-set graded eval: dcg_eval's exact
     dyadic-discount nDCG over the FIXED 8-query set — run = the
     index-served BM25 top-10 for those queries, truth = exact-cosine
     top-10 persisted at rest (eval_truth_fixed). This is the entry
-    probe/bench rows measure: its cost is the SERVE (bucket-pruned
+    scale-probe rows measure: its cost is the SERVE (bucket-pruned
     postings + an 8-query truth read), corpus-linear by construction,
     where dcg_eval_bm25_vs_cosine's %100 query set inherits the
     K²-by-fixture law (its 10× probe row read 7.85× when the serve
@@ -5777,7 +5774,7 @@ def q_dcg_eval_fixed(spark, sf_dir):
     """,
 )
 def q_kendall_tau_rankers(spark, sf_dir):
-    """Eval family (r13): Kendall-τ rank correlation between a
+    """Eval family: Kendall-τ rank correlation between a
     ranker and a variant of itself — BM25 top-10 vs the PRF-expanded
     BM25 top-10 over the same fixed query set (the expansion-impact
     diagnostic: did query expansion actually REORDER results, or
@@ -6059,8 +6056,8 @@ def q_knn_label_eval(spark, sf_dir):
     """,
 )
 def q_knn_label_eval_imi(spark, sf_dir):
-    """IMI-SERVED k-NN eval (r9, similarity.knn_label_eval_imi —
-    VERDICT_r8 #4): the exact-scorer eval's pruned twin. Neighbors
+    """IMI-SERVED k-NN eval (similarity.knn_label_eval_imi): the
+    exact-scorer eval's pruned twin. Neighbors
     come from each query's 4 best of 16 coarse PQ cells with the
     exact fixed-point cosine only on survivors (the
     hard_negatives_imi kernel minus the label filter), then the same
@@ -6156,8 +6153,8 @@ def q_hard_negatives_topk(spark, sf_dir):
     """,
 )
 def q_hard_negatives_imi(spark, sf_dir):
-    """IMI-PRUNED hard-negative mining (VERDICT_r6 #2,
-    similarity.hard_negatives_imi): candidates from each query's 4
+    """IMI-PRUNED hard-negative mining
+    (similarity.hard_negatives_imi): candidates from each query's 4
     best of 16 coarse cells (subspace-0 PQ codes, the pq_topk_imi
     prune), label-inequality filter on the candidate join, exact
     fixed-point cosine verify on survivors only — so negative mining
@@ -6878,7 +6875,7 @@ def q_ngram_containment(spark, sf_dir):
     # Only the %10 docs (id_b side) and their truncated copies (id_a
     # side) can match the candidate list — shingling the other 90% of
     # the corpus is work the join immediately discards (the PRF
-    # prune-before-explode class, VERDICT_r12 #4). Pre-filtering the
+    # prune-before-explode class). Pre-filtering the
     # corpus fed to the verifier leaves the join result identical.
     corpus = docs.filter(F.col("doc_id") % 10 == 0).unionAll(trunc)
     cands = docs.filter(F.col("doc_id") % 10 == 0).select(

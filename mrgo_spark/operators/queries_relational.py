@@ -740,7 +740,7 @@ def q_kmv_distinct(spark, sf_dir):
     """,
 )
 def q_hll_distinct(spark, sf_dir):
-    """HyperLogLog, verifiably (r6) — completes the portable-sketch
+    """HyperLogLog, verifiably — completes the portable-sketch
     trio (KMV cardinality, CMS frequency, bucketed quantiles) with
     THE canonical cardinality sketch: 64 registers off the 48-bit md5
     hash, rho as exact integer bit-length (length(bin(w)) — the zipf
@@ -946,8 +946,8 @@ def q_triangle_copurchase_top(spark, sf_dir):
     """Triangle counting — the third member of the graph family
     (PageRank ranks, CC clusters, triangles measure cohesion):
     per-part triangle participation in the co-purchase graph, served
-    by the DEGREE-ORDERED wedge join (r6, VERDICT_r5 #1:
-    graph.triangle_counts_degree_ordered — each edge oriented
+    by the DEGREE-ORDERED wedge join
+    (graph.triangle_counts_degree_ordered — each edge oriented
     lower-degree → higher-degree endpoint, bounding wedge fan-out by
     O(sqrt|E|) under skew; output identical to the canonical a<b<c
     form it is parity-tested against, so the oracle is unchanged).
@@ -2139,7 +2139,7 @@ def q_profile_customer(spark, sf_dir):
     """,
 )
 def q_degree_assortativity_copurchase(spark, sf_dir):
-    """Degree assortativity of the co-purchase graph (r5): Pearson
+    """Degree assortativity of the co-purchase graph: Pearson
     correlation of endpoint degrees over the symmetrized edge list —
     Newman's r as an exact integer fraction (corr_num /
     sqrt(varx·vary) derived outside the hash surface), composing the

@@ -1039,66 +1039,6 @@ def ivf_centroids(embeddings: DataFrame, k: int = 16,
     return cents
 
 
-def topk_cosine_numpy(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine via Arrow-batched numpy — the vectorized
-    Pandas-UDF performance path next to the expression-based
-    ``topk_cosine_exact`` (bench records both).
-
-    The query set (small by contract) is collected to one normalized
-    float64 matrix and shipped in the closure; each Arrow batch of
-    the corpus becomes a B×d matrix, one BLAS gemm scores Q×B pairs,
-    and only the per-batch top-k rows leave the worker — the shuffle
-    carries Q × n_batches × k rows, never the corpus. Closure-based,
-    so it stays OFF the declared surface (CLAUDE.md: the driver's
-    session has no repo on executor PYTHONPATH); parity with the
-    expression path is pinned in tests/test_similarity.py.
-    """
-    import numpy as np
-    import pandas as pd
-
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.stack([np.asarray(r[1], dtype=np.float64) for r in qrows])
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-
-    def batches(it):
-        for pdf in it:
-            cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            cm /= np.linalg.norm(cm, axis=1, keepdims=True)
-            scores = qm @ cm.T  # Q×B
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            # mask self-matches BEFORE pruning, or the query's own
-            # vector (score 1.0) eats a top-k slot it never keeps
-            scores[q_ids[:, None] == c_ids[None, :]] = -np.inf
-            kk = min(k, scores.shape[1])
-            # per-batch prune: top-k columns per query row
-            idx = np.argpartition(-scores, kth=kk - 1, axis=1)[:, :kk]
-            out = {
-                "query_id": np.repeat(q_ids, kk),
-                "neighbor_id": c_ids[idx].ravel(),
-                "score": np.take_along_axis(scores, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(out)
-
-    partial = embeddings.select(id_col, vec_col).mapInPandas(
-        batches, schema="query_id long, neighbor_id long, score double"
-    ).filter(~F.col("score").eqNullSafe(float("-inf")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
 def quantize_embeddings(
     embeddings: DataFrame,
     id_col: str = "vec_id",

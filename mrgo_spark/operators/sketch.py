@@ -249,7 +249,7 @@ def cms_heavy_hitters(
     )
     # orderBy+limit → TakeOrderedAndProject: per-partition bounded
     # top-k + driver merge, never a single-task global sort of the
-    # distinct-value frame (r5 review finding; same result, same
+    # distinct-value frame (same result, same
     # (cnt DESC, value) determinism as the oracle's row_number)
     top = exact.orderBy(F.desc("exact_cnt"), F.asc("value")).limit(k)
     counters = cms_counters(df, value_col, d, w)

@@ -720,7 +720,7 @@ def _bpe_word_tokens(
     return ex.join(F.broadcast(per_word), "w")
 
 
-# ---- unigram-LM tokenizer training (r13, VERDICT_r12 #6) ----------
+# ---- unigram-LM tokenizer training ---------------------------------
 #
 # SentencePiece-style unigram-LM training (Kudo 2018) as the SECOND
 # tokenizer-training paradigm next to BPE, reformulated so the whole
@@ -1168,7 +1168,7 @@ def classifier_quality_audit(
     )
 
 
-# ---- portable bigram-LM perplexity (r7) -----------------------------------
+# ---- portable bigram-LM perplexity ----------------------------------------
 
 LM_FP_BITS = 40  # fixed-point bits for p(b|a); p ≥ 2^-40 before clamp
 
@@ -1406,10 +1406,11 @@ def compression_ratio_stats(
     text is noise; natural prose sits in a band): per-document zlib
     deflate ratio over Arrow batches.
 
-    CLOSURE-BASED (zlib inside mapInPandas) → never declared (the
-    topk_cosine_numpy rule: the grading driver's executors lack the
-    repo on PYTHONPATH); runs under mrgo_spark.session.get_spark and
-    is differential-tested against in-process zlib. Columns:
+    Never declared: closure-based operators (this one runs zlib
+    inside mapInPandas) are never declared, because the grading
+    driver's executors lack the repo on PYTHONPATH. It runs under
+    mrgo_spark.session.get_spark and is differential-tested against
+    in-process zlib. Columns:
     (id_col, n_bytes, n_deflate, ratio_milli = (1000·n_deflate) div
     n_bytes; empty docs get ratio_milli NULL). Map-only — the shape
     is one Arrow-batched pass, no shuffle."""
@@ -1658,8 +1659,7 @@ def ngram_diversity(
     transforms over the SAME array feeding an explode, and without
     the lineage cut the inline tokenize expression is cloned into
     every transform and the Generate's pushed-down predicates,
-    re-running the regexp split per gram element (r9 review
-    finding)."""
+    re-running the regexp split per gram element."""
     tokd = documents.select(
         F.col(group_col),
         ascii_tokens(text_col, lowercase=True).alias("_t"),
@@ -1770,7 +1770,7 @@ def classifier_calibration_bins(
 def brier_calibration_bins(
     documents: DataFrame, text_col: str = "text"
 ) -> DataFrame:
-    """Proper-scoring-rule calibration (r13): the Brier score and the
+    """Proper-scoring-rule calibration: the Brier score and the
     Murphy-decomposition reliability term of the learned classifier
     against the heuristic keep label, all in exact integers — the
     calibration leg classifier_calibration_bins' keep-rate dashboard
@@ -1885,7 +1885,7 @@ def frequent_span_audit(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Memorization-risk audit (r11): the corpus's ``top_k`` most
+    """Memorization-risk audit: the corpus's ``top_k`` most
     frequent word ``n``-grams with occurrence AND document-coverage
     counts — the reporting surface behind exact-substring dedup
     (Lee et al. 2021 motivate substring dedup exactly because models

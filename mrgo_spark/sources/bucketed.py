@@ -8,18 +8,13 @@ on the bucket key needs no exchange either (SCALE.md; plan pinned in
 tests/test_plans.py::test_bucketed_join_avoids_shuffle and
 test_bucketed_variants_match_declared).
 
-``bench.py`` materializes these and times bucketed q3/q17 variants
-next to the shuffle-per-query declared forms, so the delta is recorded
-per round rather than asserted.
-
-Crossover (measured, round 3): at sf0.1 the declared q3 BEATS
-q3_bucketed — orders fits under the broadcast threshold, so the plain
-plan is a BHJ with no shuffle at all, and bucketing can't improve on
-zero exchanges. Bucketing's regime is the one where NEITHER side
-broadcasts (the 100 TB norm): with broadcast disabled, the bare
-lineitem⋈orders repeated 3x ran 2.41 s shuffled vs 1.10 s bucketed
-(bench's factjoin_nobhj_* pair) — the per-query shuffle the bucket
-write amortizes away.
+Crossover (measured at sf0.1, local[32]): the declared q3 beats q3_bucketed —
+orders fits under the broadcast threshold, so the plain plan is a BHJ
+with no shuffle at all, and bucketing can't improve on zero exchanges.
+Bucketing's regime is the one where NEITHER side broadcasts (the 100 TB
+norm): with broadcast disabled, the bare lineitem⋈orders join repeated
+3x ran 2.41 s shuffled vs 1.10 s bucketed — the per-query shuffle the
+bucket write amortizes away.
 """
 
 from __future__ import annotations
@@ -54,7 +49,7 @@ def materialize_bucketed(
     # scheduler runs concurrent jobs fine; submitting them from a
     # small thread pool lets each job's tail back-fill the others'
     # idle cores instead of serializing three shuffle+sort writes
-    # (r13 optimization round: bucket_prep 8.6 s → ~4 s at sf0.1).
+    # (bucket_prep measured 8.6 s → ~4 s at sf0.1).
     # Each write's plan/input/partitioning is unchanged, so the
     # written tables are byte-identical to the sequential form.
     from concurrent.futures import ThreadPoolExecutor

@@ -25,15 +25,13 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def ensure_events_session_confs(spark: SparkSession) -> None:
     """Runtime confs the events surface depends on, safe to set on any
     session (the grading driver's included):
 
-    - ``nanosAsLong`` so a TIMESTAMP(NANOS) fixture (the round-1/2
-      encoding) reads as bigint instead of throwing.
+    - ``nanosAsLong`` so a TIMESTAMP(NANOS) fixture (an older
+      fixture encoding) reads as bigint instead of throwing.
     - session timezone pinned to UTC so the naive-µs fixture's
       wall-clock values convert to TIMESTAMP instants with identical
       micros — tz-independent math regardless of the host session's

@@ -163,30 +163,6 @@ def test_ivf_index_persisted_matches_fresh(spark, tmp_path):
     )[1][:120]
 
 
-def test_topk_numpy_matches_expression_path(spark):
-    """The Arrow/numpy top-k must agree with the fixed-point
-    expression path on neighbor sets (scores differ only by the 1e-6
-    fixed-point rounding, so allow rank swaps within a query but not
-    set divergence)."""
-    from mrgo_spark.operators.similarity import topk_cosine_exact, topk_cosine_numpy
-    from mrgo_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    a = topk_cosine_exact(emb, queries, k=5).collect()
-    b = topk_cosine_numpy(emb, queries, k=5).collect()
-    by_q_a, by_q_b = {}, {}
-    for r in a:
-        by_q_a.setdefault(r.query_id, set()).add(r.neighbor_id)
-    for r in b:
-        by_q_b.setdefault(r.query_id, set()).add(r.neighbor_id)
-    assert set(by_q_a) == set(by_q_b)
-    overlaps = [
-        len(by_q_a[q] & by_q_b[q]) / len(by_q_a[q]) for q in by_q_a
-    ]
-    assert sum(overlaps) / len(overlaps) >= 0.95, overlaps
-
-
 def test_quantize_error_bound_and_cosine_preserved(spark):
     """Quantization error must respect the half-step bound per
     element, and cosine on dequantized vectors must stay within 2%
