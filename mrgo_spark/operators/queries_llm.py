@@ -2430,14 +2430,54 @@ def q_doc_fp(spark, sf_dir):
     return textstats.doc_fingerprint(load_table(spark, sf_dir, "documents"))
 
 
-# One IVFIndex per (session, sf_dir): the declared ANN entry serves
-# from a built index instead of re-running centroid seeding + corpus
-# assignment per call (measured: 19.0 s one-shot vs 1.2 s served at
-# sf0.1). The build is an explicit, separately-timed op
-# (IVFIndex.build); this cache is the session-lifetime analog of
-# pointing queries at a persisted index path, which is how the
-# operator deploys at 100 TB.
-_IVF_CACHE: dict[str, "similarity.IVFIndex"] = {}
+# The session cache of every artifact a declared serving entry builds
+# once and then serves from: the IVF and BM25 indexes, the eval truth
+# sets written next to the BM25 index, the PQ codebooks + checkpointed
+# codes, the BPE and unigram trainings, and the fixture query-term
+# frames. Built per call, the IVF index alone cost 19.0 s one-shot vs
+# 1.2 s served at sf0.1; in a deployment the index is a persisted path
+# built once (SCALE.md), which this cache mirrors for one session.
+# Keyed by (kind, sf_dir, ...); each value holds the session that built
+# it, compared by identity — an id()-based key can collide once a
+# stopped session is collected and its address reused, and the held
+# session cannot. An entry from any other session is replaced, which
+# releases its JVM-backed checkpointed frames.
+_SESSION_CACHE: dict[tuple, tuple] = {}
+
+
+def _cached(spark, key: tuple, build):
+    """The artifact ``build()`` made for ``key`` in this session: built
+    on the first call, served to the same session after that."""
+    hit = _SESSION_CACHE.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    _SESSION_CACHE.pop(key, None)
+    got = build()
+    _SESSION_CACHE[key] = (spark, got)
+    return got
+
+
+def _serve(spark, key: tuple, build, use):
+    """``use(artifact)`` for the cached served index (or at-rest path)
+    of ``key``. A cached path that died mid-session (e.g. /tmp reaped)
+    is the one failure that earns a rebuild: the entry is dropped,
+    rebuilt once and served again. Any other error is a genuine
+    query-path bug and propagates, with the cached entry untouched."""
+    art = _cached(spark, key, build)
+    try:
+        return use(art)
+    except Exception as e:
+        if not _dead_index_path(e, getattr(art, "path", art)):
+            raise
+        import sys
+
+        print(
+            f"{key[0]} serve: cached path dead "
+            f"({type(e).__name__}: {e}); rebuilding",
+            file=sys.stderr,
+        )
+        del _SESSION_CACHE[key]
+        return use(_cached(spark, key, build))
 
 
 @declare("topk_cosine_ivf")
@@ -2448,30 +2488,12 @@ def q_topk_ivf(spark, sf_dir):
     """
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    key = f"{id(spark)}:{sf_dir}"
-    idx = _IVF_CACHE.get(key)
-    if idx is not None:
-        try:
-            return idx.query(queries, k=5, n_probe=6)
-        except Exception as e:
-            # cached index path died (e.g. /tmp reaped mid-session):
-            # drop the stale entry and rebuild below instead of
-            # failing the declared entry with no recovery path.
-            # Only dead-path errors earn the rebuild; anything else
-            # is a genuine query-path bug and propagates.
-            if not _dead_index_path(e, idx.path):
-                raise
-            import sys
-
-            print(
-                f"topk_cosine_ivf: cached index path dead "
-                f"({type(e).__name__}: {e}); rebuilding",
-                file=sys.stderr,
-            )
-            _IVF_CACHE.pop(key, None)
-    idx = similarity.IVFIndex.build(emb, _ivf_tmpdir())
-    _IVF_CACHE[key] = idx
-    return idx.query(queries, k=5, n_probe=6)
+    return _serve(
+        spark,
+        ("ivf", sf_dir),
+        lambda: similarity.IVFIndex.build(emb, _ivf_tmpdir()),
+        lambda idx: idx.query(queries, k=5, n_probe=6),
+    )
 
 
 def _dead_index_path(e: Exception, path: str | None = None) -> bool:
@@ -3251,39 +3273,28 @@ def _pq_cte(k: int = 16, m: int = 8, subdim: int = 8, iters: int = 2) -> str:
 # 8×16-centroid HOF fold is the heaviest stage in the family
 # (measured 6-8 s warm PER entry when each re-assigned from scratch),
 # and in a real deployment codes are materialized at rest exactly
-# once (SCALE.md); the session cache mirrors that. The _IVF_CACHE
-# "declared ANN serves from a session cache" idiom.
-# Keyed by sf_dir, value holds the owning SparkSession: an id()-based
-# key can collide after a session is GC'd and the address recycled
-# (review finding); holding the session and comparing identity cannot.
-# A stale entry (stopped session) is DELETED on miss so its JVM-backed
-# checkpointed frame is released promptly.
-_PQ_CACHE: dict[str, tuple] = {}
-
-
+# once (SCALE.md); the session cache mirrors that.
 def _pq_artifacts(spark, sf_dir):
     """(cents, assigned_ckpt, luts) for the declared PQ entries —
     trained, assigned, localCheckpointed, and LUT-built once per
     (session, sf_dir)."""
-    hit = _PQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2], hit[3]
-    if hit is not None:
-        del _PQ_CACHE[sf_dir]
-    emb = widen_scan(load_table(spark, sf_dir, "embeddings"))
-    q = similarity._pq_quantized(emb, "vec_id", "embedding")
-    cents = similarity._pq_train(
-        q, similarity.PQ_M, similarity.PQ_SUBDIM,
-        similarity.PQ_K, similarity.PQ_ITERS,
-    )
-    a = similarity._pq_assign(
-        q, cents, similarity.PQ_M, similarity.PQ_SUBDIM
-    ).localCheckpoint(eager=False)
-    luts = similarity._pq_luts(
-        q, cents, 8, similarity.PQ_M, similarity.PQ_SUBDIM
-    )
-    _PQ_CACHE[sf_dir] = (spark, cents, a, luts)
-    return cents, a, luts
+
+    def build():
+        emb = widen_scan(load_table(spark, sf_dir, "embeddings"))
+        q = similarity._pq_quantized(emb, "vec_id", "embedding")
+        cents = similarity._pq_train(
+            q, similarity.PQ_M, similarity.PQ_SUBDIM,
+            similarity.PQ_K, similarity.PQ_ITERS,
+        )
+        a = similarity._pq_assign(
+            q, cents, similarity.PQ_M, similarity.PQ_SUBDIM
+        ).localCheckpoint(eager=False)
+        luts = similarity._pq_luts(
+            q, cents, 8, similarity.PQ_M, similarity.PQ_SUBDIM
+        )
+        return cents, a, luts
+
+    return _cached(spark, ("pq", sf_dir), build)
 
 
 @declare(
@@ -3508,25 +3519,12 @@ def q_ann_ingest_conflict_audit(spark, sf_dir):
             ).otherwise(x.cast("double")),
         ).alias("embedding"),
     )
-    key = f"{id(spark)}:{sf_dir}"
-    idx = _IVF_CACHE.get(key)
-    if idx is not None:
-        try:
-            return idx.ingest_conflict_audit(batch)
-        except Exception as e:
-            if not _dead_index_path(e, idx.path):
-                raise
-            import sys
-
-            print(
-                f"ann_ingest_conflict_audit: cached index path dead "
-                f"({type(e).__name__}: {e}); rebuilding",
-                file=sys.stderr,
-            )
-            _IVF_CACHE.pop(key, None)
-    idx = similarity.IVFIndex.build(emb, _ivf_tmpdir())
-    _IVF_CACHE[key] = idx
-    return idx.ingest_conflict_audit(batch)
+    return _serve(
+        spark,
+        ("ivf", sf_dir),
+        lambda: similarity.IVFIndex.build(emb, _ivf_tmpdir()),
+        lambda idx: idx.ingest_conflict_audit(batch),
+    )
 
 
 def _bpe_cte(rounds: int = 6) -> str:
@@ -3580,24 +3578,14 @@ _BPE_ROUNDS = textstats.BPE_ROUNDS
 # entries reuse the same merges + final word table (each training is
 # six sequential collect rounds — running it twice per gate pass is
 # pure waste).
-# Same held-session keying as _PQ_CACHE (the cached ``words`` frame
-# is JVM-backed — serving it to a different session would fail).
-_BPE_CACHE: dict[tuple[str, int], tuple] = {}
-
-
 def _bpe_learned(spark, sf_dir, rounds):
-    key = (sf_dir, rounds)
-    hit = _BPE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        # stale stopped-session entry: drop it so its JVM-backed
-        # checkpointed words frame is released promptly
-        del _BPE_CACHE[key]
-    docs = widen_scan(load_table(spark, sf_dir, "documents"))
-    got = textstats.bpe_learn(docs, rounds)
-    _BPE_CACHE[key] = (spark, got)
-    return got
+    return _cached(
+        spark,
+        ("bpe", sf_dir, rounds),
+        lambda: textstats.bpe_learn(
+            widen_scan(load_table(spark, sf_dir, "documents")), rounds
+        ),
+    )
 
 
 @declare(
@@ -3778,22 +3766,17 @@ def _unigram_sql(rounds: int = 2) -> str:
 _UNI_ROUNDS = len(textstats.UNI_KEEP)
 
 
-# One unigram training per (session, sf_dir) — the _BPE_CACHE idiom:
-# both declared entries (train + application) reuse the vocab/scores
-# and the checkpointed distinct-word frame.
-_UNI_CACHE: dict[str, tuple] = {}
-
-
+# One unigram training per (session, sf_dir): both declared entries
+# (train + application) reuse the vocab/scores and the checkpointed
+# distinct-word frame.
 def _uni_learned(spark, sf_dir):
-    hit = _UNI_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        del _UNI_CACHE[sf_dir]
-    docs = widen_scan(load_table(spark, sf_dir, "documents"))
-    got = textstats.unigram_learn(docs)
-    _UNI_CACHE[sf_dir] = (spark, got)
-    return got
+    return _cached(
+        spark,
+        ("unigram", sf_dir),
+        lambda: textstats.unigram_learn(
+            widen_scan(load_table(spark, sf_dir, "documents"))
+        ),
+    )
 
 
 @declare(
@@ -4981,50 +4964,40 @@ def _bm25_sql(k: int, query_pred: str = "doc_id % 100 = 0") -> str:
     return f"""{_bm25_base_sql(query_pred)},{_bm25_leg_sql(k, "qt")}"""
 
 
-# One BM25Index per (session, sf_dir) — the _IVF_CACHE idiom applied
-# to retrieval: the declared BM25 entries serve from
-# an at-rest postings/df/dl index (built once, term-bucket-partitioned
-# parquet) instead of re-tokenizing the corpus per call. Output is
-# bit-identical to the two-pass retrieval.bm25_topk (the serve path
-# reuses the exact _bm25_rank scoring tail; parity-pinned in
-# tests/test_retrieval.py), so the oracle SQL is unchanged. Keyed by
-# sf_dir with the owning session held (the _PQ_CACHE identity rule).
-_BM25_CACHE: dict[str, tuple] = {}
+# One BM25Index per (session, sf_dir): the declared BM25 entries serve
+# from an at-rest postings/df/dl index (built once, term-bucket-
+# partitioned parquet) instead of re-tokenizing the corpus per call.
+# Output is bit-identical to the two-pass retrieval.bm25_topk (the
+# serve path reuses the exact _bm25_rank scoring tail; parity-pinned in
+# tests/test_retrieval.py), so the oracle SQL is unchanged.
+def _bm25_serve(spark, sf_dir, use):
+    """``use(index)`` on the session BM25Index (see _serve)."""
+
+    def build():
+        docs = widen_scan(
+            load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        )
+        return retrieval.BM25Index.build(
+            docs, _ivf_tmpdir(prefix="mrgo_bm25_idx_")
+        )
+
+    return _serve(spark, ("bm25", sf_dir), build, use)
 
 
-def _bm25_index(spark, sf_dir):
-    hit = _BM25_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        del _BM25_CACHE[sf_dir]
-    docs = widen_scan(
-        load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    )
-    idx = retrieval.BM25Index.build(docs, _ivf_tmpdir(prefix="mrgo_bm25_idx_"))
-    _BM25_CACHE[sf_dir] = (spark, idx)
-    return idx
-
-
-# Session cache for the FIXTURE-DERIVED query-term frames (r13
-# optimization round, batch 7): every serve entry rebuilt + re-
-# checkpointed the same deterministic (query_id, term) table — a
-# pruned corpus scan + a materialization job per entry (~0.2-0.4 s
-# each). The frames are corpus-derived INPUT workloads (the
-# _fixed_qids / eval_truth class), broadcast-sized, and keyed by
-# (sf_dir, tag) with the owning session held (the _PQ_CACHE identity
-# rule). Values are identical by construction — the builder is the
-# same expression the call sites inlined before.
-_QTERMS_CACHE: dict[tuple, tuple] = {}
-
-
+# The FIXTURE-DERIVED query-term frames: every serve entry would
+# otherwise rebuild + re-checkpoint the same deterministic
+# (query_id, term) table — a pruned corpus scan + a materialization job
+# per entry (~0.2-0.4 s each). The frames are corpus-derived INPUT
+# workloads (the _fixed_qids / eval_truth class), broadcast-sized, and
+# cached per (session, sf_dir, tag).
 def _qterms_cached(spark, sf_dir, tag, build):
-    hit = _QTERMS_CACHE.get((sf_dir, tag))
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    qt = build().select("query_id", "term").localCheckpoint(eager=False)
-    _QTERMS_CACHE[(sf_dir, tag)] = (spark, qt)
-    return qt
+    return _cached(
+        spark,
+        ("qterms", sf_dir, tag),
+        lambda: build()
+        .select("query_id", "term")
+        .localCheckpoint(eager=False),
+    )
 
 
 def _fixed_qterms(spark, sf_dir):
@@ -5058,31 +5031,13 @@ def _bm25_served(spark, sf_dir, k: int):
 
 
 def _bm25_served_terms(spark, sf_dir, qterms, k: int):
-    """Served BM25 top-k for an arbitrary (query_id, term) table, with
-    the topk_cosine_ivf dead-cached-path recovery: a cached index
-    whose /tmp dir was reaped rebuilds instead of failing the entry.
+    """Served BM25 top-k for an arbitrary (query_id, term) table.
 
     No checkpoint is taken here: BM25Index.query pins the table once
     per call, so its lineage (a full corpus text decode behind every
     fixture query set's tiny row count) runs once per serve. A dead-path
     rebuild serves again and so runs it once more."""
-    idx = _bm25_index(spark, sf_dir)
-    try:
-        return idx.query(qterms, k=k)
-    except Exception as e:
-        # only a dead index PATH earns a rebuild; genuine query-path
-        # bugs propagate on first occurrence
-        if not _dead_index_path(e, idx.path):
-            raise
-        import sys
-
-        print(
-            f"bm25 serve: cached index path dead "
-            f"({type(e).__name__}: {e}); rebuilding",
-            file=sys.stderr,
-        )
-        _BM25_CACHE.pop(sf_dir, None)
-        return _bm25_index(spark, sf_dir).query(qterms, k=k)
+    return _bm25_serve(spark, sf_dir, lambda idx: idx.query(qterms, k=k))
 
 
 @declare(
@@ -5206,23 +5161,9 @@ def q_bm25_champion_topk_fixed(spark, sf_dir):
     scan, <= c rows per term); fixed 8-query set keeps the row
     corpus-linear."""
     qterms = _fixed_qterms(spark, sf_dir)
-    idx = _bm25_index(spark, sf_dir)
-    try:
-        return idx.query_champions(qterms, k=10)
-    except Exception as e:
-        # the bm25_served recovery contract: only a dead index PATH
-        # earns a rebuild; genuine query-path bugs propagate
-        if not _dead_index_path(e, idx.path):
-            raise
-        import sys
-
-        print(
-            f"champion serve: cached index path dead "
-            f"({type(e).__name__}: {e}); rebuilding",
-            file=sys.stderr,
-        )
-        _BM25_CACHE.pop(sf_dir, None)
-        return _bm25_index(spark, sf_dir).query_champions(qterms, k=10)
+    return _bm25_serve(
+        spark, sf_dir, lambda idx: idx.query_champions(qterms, k=10)
+    )
 
 
 @declare(
@@ -5271,7 +5212,7 @@ def q_prf_bm25_fixed(spark, sf_dir):
     exact integers, so a two-pass retrieval FEEDBACK pipeline
     oracle-checks end-to-end. Fixed ≤8-query set (doc_id % 100 = 0,
     < 800 — the bm25_topk_fixed idiom) keeps the probe corpus-linear.
-    Both retrieval legs serve from the session BM25Index (r13 opt):
+    Both retrieval legs serve from the session BM25Index:
     bucket-pruned postings, zero corpus candidate passes — rankings
     bit-identical to the two-pass form via the shared _bm25_rank tail
     (the bm25_topk_docs precedent), so the oracle is untouched. The
@@ -5498,47 +5439,48 @@ def q_retrieval_eval(spark, sf_dir):
     return retrieval.retrieval_eval(lex, _eval_truth(spark, sf_dir), k=10)
 
 
-def _eval_truth(spark, sf_dir):
-    """The eval ground-truth cache: exact-cosine
-    top-10 for the fixture query set, computed once per (session,
-    sf_dir), written as parquet NEXT TO the session BM25Index
-    (``{index}/eval_truth``), and served from that parquet on every
-    subsequent call — the at-rest story the serve paths already
+def _eval_truth(spark, sf_dir, fixed: bool = False):
+    """The eval ground truth: exact-cosine top-10 for the fixture query
+    set (doc_id % 100 docs, or with ``fixed`` the smallest-8 vec_ids,
+    whose truth build is one corpus×8 pass where the %100 truth is
+    corpus×(corpus/100)). Computed once per (session, sf_dir), written
+    as parquet NEXT TO the session BM25Index (``{index}/eval_truth`` or
+    ``{index}/eval_truth_fixed``), and served from that parquet on
+    every subsequent call — the at-rest story the serve paths already
     follow, applied to the eval loop. Parity with the recompute form
     is pinned in tests/test_retrieval.py (it's the same frame,
-    round-tripped). The dict is keyed by sf_dir with the owning
-    session held (the _PQ_CACHE identity rule)."""
-    hit = _EVAL_TRUTH_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        try:
-            return spark.read.parquet(hit[1])
-        except Exception as e:
-            if not _dead_index_path(e, hit[1]):
-                raise
-            del _EVAL_TRUTH_CACHE[sf_dir]
-    elif hit is not None:
-        del _EVAL_TRUTH_CACHE[sf_dir]
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = docs.filter(F.col("doc_id") % 100 == 0)
-    sem_q = emb.join(
-        F.broadcast(qids),
-        (F.col("vec_id") == F.col("doc_id")) & (F.col("vec_id") % 100 == 0),
-        "left_semi",
-    )
-    # rank is kept at rest: graded-relevance eval (dcg_eval)
-    # derives gains from the truth rank; consumers that only need the
-    # set (retrieval_eval) project it away.
-    truth = similarity.topk_cosine_exact(emb, sem_q, k=10).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
-    )
-    path = f"{_bm25_index(spark, sf_dir).path}/eval_truth"
-    truth.write.mode("overwrite").parquet(path)
-    _EVAL_TRUTH_CACHE[sf_dir] = (spark, path)
-    return spark.read.parquet(path)
+    round-tripped)."""
+    name = "eval_truth_fixed" if fixed else "eval_truth"
 
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        if fixed:
+            qids = _fixed_qids(spark, sf_dir)
+            sem_q = emb.filter(F.col("vec_id").isin(qids))
+        else:
+            qids = (
+                load_table(spark, sf_dir, "documents")
+                .select("doc_id")
+                .filter(F.col("doc_id") % 100 == 0)
+            )
+            sem_q = emb.join(
+                F.broadcast(qids),
+                (F.col("vec_id") == F.col("doc_id"))
+                & (F.col("vec_id") % 100 == 0),
+                "left_semi",
+            )
+        # rank is kept at rest: graded-relevance eval (dcg_eval)
+        # derives gains from the truth rank; consumers that only need
+        # the set (retrieval_eval) project it away.
+        truth = similarity.topk_cosine_exact(emb, sem_q, k=10).select(
+            "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
+        )
+        path = f"{_bm25_serve(spark, sf_dir, lambda idx: idx.path)}/{name}"
+        truth.write.mode("overwrite").parquet(path)
+        return path
 
-_EVAL_TRUTH_CACHE: dict[str, tuple] = {}
+    key = ("eval_truth", sf_dir, name)
+    return _serve(spark, key, build, spark.read.parquet)
 
 
 @declare(
@@ -5612,36 +5554,6 @@ def q_dcg_eval(spark, sf_dir):
     return retrieval.dcg_eval(lex, graded, k=10)
 
 
-def _eval_truth_fixed(spark, sf_dir):
-    """The _eval_truth idiom over the FIXED 8-query set:
-    exact-cosine top-10 truth for the smallest-8 vec_ids,
-    computed once per (session, sf_dir), persisted NEXT TO the
-    session BM25Index (``{index}/eval_truth_fixed``) and served from
-    that parquet afterwards. The truth build is corpus×8 — one linear
-    pass — where the %100 truth is corpus×(corpus/100)."""
-    key = f"{sf_dir}#fixed"
-    hit = _EVAL_TRUTH_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        try:
-            return spark.read.parquet(hit[1])
-        except Exception as e:
-            if not _dead_index_path(e, hit[1]):
-                raise
-            del _EVAL_TRUTH_CACHE[key]
-    elif hit is not None:
-        del _EVAL_TRUTH_CACHE[key]
-    emb = load_table(spark, sf_dir, "embeddings")
-    qids = _fixed_qids(spark, sf_dir)
-    sem_q = emb.filter(F.col("vec_id").isin(qids))
-    truth = similarity.topk_cosine_exact(emb, sem_q, k=10).select(
-        "query_id", F.col("neighbor_id").alias("doc_id"), "rank"
-    )
-    path = f"{_bm25_index(spark, sf_dir).path}/eval_truth_fixed"
-    truth.write.mode("overwrite").parquet(path)
-    _EVAL_TRUTH_CACHE[key] = (spark, path)
-    return spark.read.parquet(path)
-
-
 @declare(
     "dcg_eval_fixed",
     f"""
@@ -5705,7 +5617,7 @@ def q_dcg_eval_fixed(spark, sf_dir):
     corpus-sized-query-set oracle pin."""
     qterms = _fixed_qterms(spark, sf_dir)
     lex = _bm25_served_terms(spark, sf_dir, qterms, k=10)
-    graded = _eval_truth_fixed(spark, sf_dir).select(
+    graded = _eval_truth(spark, sf_dir, fixed=True).select(
         "query_id",
         "doc_id",
         (F.lit(11) - F.col("rank")).cast("long").alias("rel"),

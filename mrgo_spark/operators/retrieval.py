@@ -370,9 +370,13 @@ class BM25Index:
         """The cached analyzed relation for an at-rest table. Only a
         SUCCESSFUL read is cached (a missing dir raises at creation,
         before the insert), so the build-on-demand paths stay
-        correct."""
+        correct. A table dir removed after caching (a /tmp reaper) is
+        read again, so its PATH_NOT_FOUND raises here, where a served
+        caller can rebuild, not lazily at the caller's collect."""
+        import os
+
         rel = self._rels.get(name)
-        if rel is None:
+        if rel is None or not os.path.isdir(f"{self.path}/{name}"):
             rel = self.spark.read.parquet(f"{self.path}/{name}")
             self._rels[name] = rel
         return rel

@@ -2547,9 +2547,9 @@ def pq_codes(
     Pass ``cents`` (from _pq_train) to reuse trained codebooks, or
     ``assigned`` (from _pq_assign, e.g. the session-cached
     checkpointed frame) to skip assignment entirely — the declared
-    entries share ONE training+assignment per session (queries_llm
-    _PQ_CACHE, the _IVF_CACHE idiom; at rest, codes are materialized
-    once and this is the read path)."""
+    entries share ONE training+assignment per session (the
+    queries_llm session cache; at rest, codes are materialized once
+    and this is the read path)."""
     assert k <= 16, "code packing assumes 4-bit subspace codes"
     if assigned is None:
         q = _pq_quantized(emb, id_col, vec_col)

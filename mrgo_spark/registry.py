@@ -33,14 +33,25 @@ def declare(name: str, oracle: str | None = None):
     return deco
 
 
+# The declaring modules in load order. Past PRIORITY, entries follow
+# this order (declaration order within a module), whichever module the
+# process happened to import first.
+_MODULES = (
+    "queries_mrapps",
+    "queries_relational",
+    "queries_kv",
+    "queries_llm",
+    "queries_scalar",
+    "queries_timeseries",
+)
+
+
 def _load_all() -> None:
     # Import for side effects: each module declares its queries.
-    from .operators import queries_mrapps  # noqa: F401
-    from .operators import queries_relational  # noqa: F401
-    from .operators import queries_kv  # noqa: F401
-    from .operators import queries_llm  # noqa: F401
-    from .operators import queries_scalar  # noqa: F401
-    from .operators import queries_timeseries  # noqa: F401
+    import importlib
+
+    for m in _MODULES:
+        importlib.import_module(f"{__package__}.operators.{m}")
 
 
 _LOADED = False
@@ -339,7 +350,14 @@ PRIORITY = [
 
 def _reorder(d: dict) -> dict:
     head = {n: d[n] for n in PRIORITY if n in d}
-    return head | {n: v for n, v in d.items() if n not in head}
+    rank = {m: i for i, m in enumerate(_MODULES)}
+
+    def module_rank(n: str) -> int:
+        m = QUERIES[n].__module__.rpartition(".")[2]
+        return rank.get(m, len(rank))
+
+    tail = sorted((n for n in d if n not in head), key=module_rank)
+    return head | {n: d[n] for n in tail}
 
 
 def load() -> tuple[dict, dict]:

@@ -134,3 +134,35 @@ def test_window_is_mostly_oracle_checked():
 def test_oracle_names_subset_of_queries():
     q, o = load()
     assert set(o) <= set(q)
+
+
+def test_order_independent_of_import_history():
+    """Past PRIORITY, queries() and oracle_sql() follow the fixed module
+    order of registry._load_all, so a process that imported one of the
+    declaring modules before load() sees the same lists as one that did
+    not."""
+    import json
+    import pathlib
+    import subprocess
+    import sys
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+
+    def fresh(pre: str) -> list:
+        code = (
+            f"{pre}\n"
+            "import json\n"
+            "from mrgo_spark.registry import load\n"
+            "q, o = load()\n"
+            "print(json.dumps([list(q), list(o)]))\n"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=root, capture_output=True, text=True, check=True,
+        ).stdout
+        return json.loads(out.splitlines()[-1])
+
+    plain = fresh("")
+    llm_first = fresh("import mrgo_spark.operators.queries_llm")
+    assert llm_first == plain
+    assert len(plain[0]) == len(load()[0])

@@ -444,37 +444,156 @@ def test_dead_index_path_schema_probe(tmp_path):
     assert not _dead_index_path(e, str(ivf))
 
 
+def test_session_cache_builds_once_per_session():
+    """The one served-artifact cache, with sentinel objects standing in
+    for sessions: the same session never builds twice, another session
+    replaces the entry (one entry per key, not two), and _serve rebuilds
+    once on a dead-path error and on nothing else."""
+    import pytest
+
+    from mrgo_spark.operators import queries_llm as ql
+
+    a, b = object(), object()
+    key = ("probe", "/no/such/sf")
+    builds = []
+
+    def build():
+        builds.append(len(builds))
+        return f"/no/such/artifact{len(builds)}"
+
+    n = len(ql._SESSION_CACHE)
+    try:
+        assert ql._cached(a, key, build) == "/no/such/artifact1"
+        assert ql._cached(a, key, build) == "/no/such/artifact1"
+        assert ql._cached(b, key, build) == "/no/such/artifact2"
+        assert ql._cached(b, key, build) == "/no/such/artifact2"
+        assert len(builds) == 2
+        assert len(ql._SESSION_CACHE) == n + 1
+        assert ql._SESSION_CACHE[key] == (b, "/no/such/artifact2")
+
+        def dead_once(art):
+            if art == "/no/such/artifact2":
+                raise FileNotFoundError(art)
+            return art
+
+        assert ql._serve(b, key, build, dead_once) == "/no/such/artifact3"
+        assert ql._SESSION_CACHE[key] == (b, "/no/such/artifact3")
+
+        def bug(art):
+            raise ValueError("bad k")
+
+        with pytest.raises(ValueError):
+            ql._serve(b, key, build, bug)
+        assert ql._SESSION_CACHE[key] == (b, "/no/such/artifact3")
+        assert len(builds) == 3
+    finally:
+        ql._SESSION_CACHE.pop(key, None)
+
+
+def test_declared_entries_rebuild_a_reaped_index(spark, capsys):
+    """End to end: reap a component directory of a served index, then
+    call the declared entry. It returns the rows it returned before the
+    reap, and the BM25, IVF and eval-truth reaps are served from a new
+    path after one stderr line. A reaped champion table is rebuilt in
+    place by query_champions itself. A non-dead error from the served
+    call propagates and leaves the cached index where it was."""
+    import os
+    import shutil
+
+    import pytest
+
+    from mrgo_spark.operators import queries_llm as ql
+
+    sf = SF
+    cache = ql._SESSION_CACHE
+
+    def rows(entry):
+        return sorted(map(tuple, entry(spark, sf).collect()))
+
+    def path(key):
+        art = cache[key][1]
+        return getattr(art, "path", art)
+
+    dcg = rows(ql.q_dcg_eval_fixed)
+    bm25 = rows(ql.q_bm25_topk_fixed)
+    champ = rows(ql.q_bm25_champion_topk_fixed)
+    ivf = rows(ql.q_topk_ivf)
+    assert dcg and bm25 and champ and ivf
+    capsys.readouterr()
+
+    # the champion table is the one component the healthy index
+    # rebuilds in place itself (query_champions' _SUCCESS check), so
+    # the cached index and its path stay
+    idx = cache[("bm25", sf)][1]
+    shutil.rmtree(f"{idx.path}/champions_c32")
+    assert rows(ql.q_bm25_champion_topk_fixed) == champ
+    assert cache[("bm25", sf)][1] is idx
+    assert os.path.isfile(f"{idx.path}/champions_c32/_SUCCESS")
+
+    # eval truth lives under the BM25 root, so once the first reap has
+    # rebuilt the BM25 index, the eval-truth rebuild lands on a new path
+    reaps = [
+        (("bm25", sf), "postings", ql.q_bm25_topk_fixed, bm25),
+        (("ivf", sf), "cells", ql.q_topk_ivf, ivf),
+        (("eval_truth", sf, "eval_truth_fixed"), "", ql.q_dcg_eval_fixed, dcg),
+    ]
+    for key, comp, entry, before in reaps:
+        old = path(key)
+        shutil.rmtree(os.path.join(old, comp))
+        assert rows(entry) == before, key
+        assert path(key) != old, key
+        assert capsys.readouterr().err.count("rebuilding") == 1, key
+
+    idx = cache[("bm25", sf)][1]
+
+    def bug(self, *args, **kwargs):
+        raise RuntimeError("query-path bug")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(retrieval.BM25Index, "query", bug)
+        with pytest.raises(RuntimeError, match="query-path bug"):
+            ql.q_bm25_topk_fixed(spark, sf)
+    assert cache[("bm25", sf)][1] is idx
+    assert "rebuilding" not in capsys.readouterr().err
+
+
 def test_eval_truth_cache_parity_and_at_rest(spark):
-    """VERDICT_r7 #3: the cached eval truth set must equal the fresh
+    """For both fixture query sets (doc_id % 100 docs and the fixed
+    smallest-8 vec_ids), the cached eval truth set must equal the fresh
     exact-cosine recompute, and the second call must serve from the
     persisted parquet (no embeddings scan in its plan)."""
     from mrgo_spark.operators import queries_llm, similarity
-    from mrgo_spark.operators.queries_llm import _eval_truth
+    from mrgo_spark.operators.queries_llm import _eval_truth, _fixed_qids
 
     sf = SF
-    queries_llm._EVAL_TRUTH_CACHE.pop(sf, None)
-    first = _eval_truth(spark, sf)
     docs = load_table(spark, sf, "documents").select("doc_id")
     emb = load_table(spark, sf, "embeddings")
     qids = docs.filter(F.col("doc_id") % 100 == 0)
-    sem_q = emb.join(
+    mod100 = emb.join(
         F.broadcast(qids),
         (F.col("vec_id") == F.col("doc_id")) & (F.col("vec_id") % 100 == 0),
         "left_semi",
     )
-    fresh = similarity.topk_cosine_exact(emb, sem_q, k=10).select(
-        "query_id", F.col("neighbor_id").alias("doc_id")
-    )
+    fixed8 = emb.filter(F.col("vec_id").isin(_fixed_qids(spark, sf)))
     key = lambda r: (r.query_id, r.doc_id)  # noqa: E731
-    assert sorted(map(key, first.collect())) == sorted(
-        map(key, fresh.collect())
-    )
-    second = _eval_truth(spark, sf)
-    plan = second._jdf.queryExecution().executedPlan().toString()
-    assert "eval_truth" in plan and "embeddings" not in plan
-    assert sorted(map(key, second.collect())) == sorted(
-        map(key, first.collect())
-    )
+    for fixed, sem_q, name in (
+        (False, mod100, "eval_truth"),
+        (True, fixed8, "eval_truth_fixed"),
+    ):
+        queries_llm._SESSION_CACHE.pop(("eval_truth", sf, name), None)
+        first = _eval_truth(spark, sf, fixed)
+        fresh = similarity.topk_cosine_exact(emb, sem_q, k=10).select(
+            "query_id", F.col("neighbor_id").alias("doc_id")
+        )
+        assert sorted(map(key, first.collect())) == sorted(
+            map(key, fresh.collect())
+        )
+        second = _eval_truth(spark, sf, fixed)
+        plan = second._jdf.queryExecution().executedPlan().toString()
+        assert name in plan and "embeddings" not in plan
+        assert sorted(map(key, second.collect())) == sorted(
+            map(key, first.collect())
+        )
 
 
 def test_rrf_hybrid_served_degenerates_to_exact_legs(spark):
