@@ -3281,18 +3281,8 @@ def _pq_artifacts(spark, sf_dir):
 
     def build():
         emb = widen_scan(load_table(spark, sf_dir, "embeddings"))
-        q = similarity._pq_quantized(emb, "vec_id", "embedding")
-        cents = similarity._pq_train(
-            q, similarity.PQ_M, similarity.PQ_SUBDIM,
-            similarity.PQ_K, similarity.PQ_ITERS,
-        )
-        a = similarity._pq_assign(
-            q, cents, similarity.PQ_M, similarity.PQ_SUBDIM
-        ).localCheckpoint(eager=False)
-        luts = similarity._pq_luts(
-            q, cents, 8, similarity.PQ_M, similarity.PQ_SUBDIM
-        )
-        return cents, a, luts
+        cents, a, luts = similarity.pq_artifacts(emb)
+        return cents, a.localCheckpoint(eager=False), luts
 
     return _cached(spark, ("pq", sf_dir), build)
 
@@ -3318,8 +3308,8 @@ def q_pq_codes(spark, sf_dir):
     Assignment itself is map-only (codebooks ride as literals) and is
     served from the session-cached checkpointed codes frame — the
     at-rest read path."""
-    cents, a, _ = _pq_artifacts(spark, sf_dir)
-    return similarity.pq_codes(None, cents=cents, assigned=a)
+    _, a, _ = _pq_artifacts(spark, sf_dir)
+    return similarity.pq_codes(a)
 
 
 # Shared ADC lookup-table CTE fragment (8 smallest-id queries, exact
@@ -3374,8 +3364,8 @@ def q_pq_topk_adc(spark, sf_dir):
     path that complements IVF's pruned-scan path — and, because the
     whole LUT is exact integers, a fully oracle-checked ANN ranking.
     Serves from the session-cached checkpointed codes frame."""
-    cents, a, luts = _pq_artifacts(spark, sf_dir)
-    return similarity.pq_topk_adc(None, cents=cents, assigned=a, luts=luts)
+    _, a, luts = _pq_artifacts(spark, sf_dir)
+    return similarity.pq_topk_adc(a, luts)
 
 
 @declare(
@@ -3418,8 +3408,8 @@ def q_pq_topk_imi(spark, sf_dir):
     scored all pairs and discarded 3/4 after). At rest the codes
     table partitions by cell0 → partition-pruned probes over 4-byte
     codes. Serves from the session-cached checkpointed codes frame."""
-    cents, a, luts = _pq_artifacts(spark, sf_dir)
-    return similarity.pq_topk_imi(None, cents=cents, assigned=a, luts=luts)
+    _, a, luts = _pq_artifacts(spark, sf_dir)
+    return similarity.pq_topk_imi(a, luts)
 
 
 @declare(

@@ -44,6 +44,74 @@ def cosine_fx(a, b) -> F.Column:
     return _fx_dot(a, b) / (F.sqrt(_fx_dot(a, a)) * F.sqrt(_fx_dot(b, b)))
 
 
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The one top-k cut of every cosine ranking: per ``query_id``,
+    ``score`` descending, ties to the lowest ``neighbor_id`` (so the
+    cut is deterministic under any partitioning), ranks 1..k. Adds
+    ``rank`` after ``scored``'s columns."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _cos_side(
+    df: DataFrame, role: str, id_col: str, vec_col: str, label_col: str | None
+) -> DataFrame:
+    """One side of the exact scorer: ``{role}_id``, ``{role}_label``
+    (with ``label_col``), the vector and its fixed-point norm. The norm
+    sits below the join, so it is evaluated once per row, not once per
+    (query, corpus) pair."""
+    v, n = ("qvec", "qnorm") if role == "query" else ("cvec", "cnorm")
+    cols = [
+        F.col(id_col).alias(f"{role}_id"),
+        F.col(vec_col).alias(v),
+        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias(n),
+    ]
+    if label_col is not None:
+        cols.insert(1, F.col(label_col).alias(f"{role}_label"))
+    return df.select(*cols)
+
+
+def _cos_scored(pairs: DataFrame, label_col: str | None) -> DataFrame:
+    """The exact fixed-point cosine over joined ``_cos_side`` rows:
+    (query_id, [query_label,] neighbor_id, [neighbor_label,] score)."""
+    keys = ["query_id", "neighbor_id"]
+    if label_col is not None:
+        keys = ["query_id", "query_label", "neighbor_id", "neighbor_label"]
+    return pairs.select(
+        *keys,
+        (
+            _fx_dot(F.col("qvec"), F.col("cvec"))
+            / (F.col("qnorm") * F.col("cnorm"))
+        ).alias("score"),
+    )
+
+
+def _exact_scored(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    pred: F.Column,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None = None,
+) -> DataFrame:
+    """The one exact-cosine scorer: ``queries`` is broadcast, the
+    corpus is scanned once, and ``pred`` (the caller's id and/or label
+    predicate) rides the join, so excluded pairs never reach the
+    scorer. Returns the UNRANKED ``_cos_scored`` frame.
+
+    The corpus stream side is widened: the interpreted per-pair
+    fixed-point folds ran single-task on the 1-row-group fixture scan
+    (1.7 s → 0.7 s warm at sf0.1 for the declared topk_cosine; exact
+    integer scores + the deterministic ``_topk`` tie-break, so
+    partitioning cannot change rows). Self-disabling on pre-split
+    input (widen_scan contract)."""
+    from ..sources.tables import widen_scan
+
+    q = _cos_side(queries, "query", id_col, vec_col, label_col)
+    c = _cos_side(widen_scan(embeddings), "neighbor", id_col, vec_col, label_col)
+    return _cos_scored(c.join(F.broadcast(q), pred), label_col)
+
+
 def topk_cosine_exact(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -57,41 +125,8 @@ def topk_cosine_exact(
     by neighbor id for determinism. Columns: (query_id, neighbor_id,
     score, rank).
     """
-    # Precompute per-side norms below the join: corpus norms are
-    # evaluated once per corpus row, not once per (query, corpus) pair.
-    # Widen the corpus stream side: the
-    # interpreted per-pair fixed-point folds ran single-task on the
-    # 1-row-group fixture scan (1.7 s → 0.7 s warm at sf0.1 for the
-    # declared topk_cosine; parity-verified — exact integer scores +
-    # deterministic tie-break, so partitioning cannot change rows).
-    # Self-disabling on pre-split input (widen_scan contract).
-    from ..sources.tables import widen_scan
-
-    embeddings = widen_scan(embeddings)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("qnorm"),
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("cnorm"),
-    )
-    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
-        "query_id",
-        "neighbor_id",
-        (
-            _fx_dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    pred = F.col("query_id") != F.col("neighbor_id")
+    return _topk(_exact_scored(embeddings, queries, pred, id_col, vec_col), k)
 
 
 def hyperplane_signature(vec_col, planes: list[list[float]]) -> F.Column:
@@ -139,55 +174,16 @@ def hard_negatives(
     confuse a model, per the in-batch-negatives literature (e.g.
     Karpukhin et al. 2020, DPR §3.2).
 
-    Same shape as ``topk_cosine_exact`` (broadcast queries, one
-    corpus scan, fixed-point dot products, WindowGroupLimit top-k);
-    the label inequality rides the join condition, so same-label
-    rows never reach the scorer. Ties break by neighbor id.
+    The ``topk_cosine_exact`` scorer and cut with the label
+    inequality as the join predicate, so same-label rows never reach
+    the scorer. Ties break by neighbor id.
 
     Columns: (query_id, query_label, neighbor_id, neighbor_label,
     score, rank).
     """
-    from ..sources.tables import widen_scan
-
-    embeddings = widen_scan(embeddings)  # the topk_cosine_exact rule
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("qvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("qnorm"),
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("cvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("cnorm"),
-    )
-    scored = c.join(
-        F.broadcast(q), F.col("query_label") != F.col("neighbor_label")
-    ).select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        (
-            _fx_dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            "score",
-            "rank",
-        )
+    pred = F.col("query_label") != F.col("neighbor_label")
+    return _topk(
+        _exact_scored(embeddings, queries, pred, id_col, vec_col, label_col), k
     )
 
 
@@ -203,19 +199,25 @@ def contrastive_pairs(
     2020 §3): for each anchor, ONE gold positive (the nearest
     same-label neighbor) and ``n_neg`` hard negatives (the nearest
     different-label neighbors) — the assembled training-example table
-    a bi-encoder trains on, in one operator. Same broadcast-anchor /
-    fixed-point-cosine shape as hard_negatives; the label predicate
-    (== for the positive leg, != for the negative leg) rides each
-    join. Columns: (query_id, query_label, other_id, other_label,
+    a bi-encoder trains on, in one operator. Both legs are the exact
+    scorer with the label predicate (== for the positive leg, != for
+    the negative leg) and the id inequality riding each join.
+    Columns: (query_id, query_label, other_id, other_label,
     pair_role ∈ {positive, hard_negative}, score, rank); anchors
     whose label is unique in the corpus produce no positive row
     (rank never reached — the standard drop)."""
-    pos = _label_topk(
-        embeddings, queries, 1, True, id_col, vec_col, label_col
-    ).withColumn("pair_role", F.lit("positive"))
-    neg = _label_topk(
-        embeddings, queries, n_neg, False, id_col, vec_col, label_col
-    ).withColumn("pair_role", F.lit("hard_negative"))
+    other = F.col("query_id") != F.col("neighbor_id")
+
+    def leg(pred, k, role):
+        scored = _exact_scored(
+            embeddings, queries, pred & other, id_col, vec_col, label_col
+        )
+        return _topk(scored, k).withColumn("pair_role", F.lit(role))
+
+    pos = leg(F.col("query_label") == F.col("neighbor_label"), 1, "positive")
+    neg = leg(
+        F.col("query_label") != F.col("neighbor_label"), n_neg, "hard_negative"
+    )
     return pos.unionByName(neg).select(
         "query_id",
         "query_label",
@@ -227,75 +229,12 @@ def contrastive_pairs(
     )
 
 
-def _label_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int,
-    same_label: bool,
-    id_col: str,
-    vec_col: str,
-    label_col: str,
-) -> DataFrame:
-    """hard_negatives' scorer with the label predicate parameterized:
-    same_label=False IS hard-negative mining, same_label=True mines
-    gold positives. Kept private; hard_negatives stays the public
-    cited form."""
-    from ..sources.tables import widen_scan
-
-    embeddings = widen_scan(embeddings)  # the topk_cosine_exact rule
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(label_col).alias("query_label"),
-        F.col(vec_col).alias("qvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("qnorm"),
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("neighbor_label"),
-        F.col(vec_col).alias("cvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("cnorm"),
-    )
-    lab = (
-        (F.col("query_label") == F.col("neighbor_label"))
-        if same_label
-        else (F.col("query_label") != F.col("neighbor_label"))
-    )
-    scored = c.join(
-        F.broadcast(q), lab & (F.col("query_id") != F.col("neighbor_id"))
-    ).select(
-        "query_id",
-        "query_label",
-        "neighbor_id",
-        "neighbor_label",
-        (
-            _fx_dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            "score",
-            "rank",
-        )
-    )
-
-
 def hard_negatives_imi(
     embeddings: DataFrame,
-    assigned: DataFrame = None,
-    luts=None,
+    assigned: DataFrame,
+    luts,
     k: int = 5,
     n_probe: int = 4,
-    n_queries: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
@@ -306,11 +245,11 @@ def hard_negatives_imi(
     rides the candidate join, and only SURVIVORS get the exact
     fixed-point cosine verify. The ANN-backed serve path next to the
     exact ``hard_negatives`` differential twin — the topk_cosine /
-    topk_cosine_ivf precedent applied to negative mining.
+    IVFIndex precedent applied to negative mining.
 
-    ``assigned`` is a PQ-assigned frame (``_pq_assign`` output, e.g.
-    the session-cached codes frame) and ``luts`` the ``_pq_luts``
-    query LUTs; the query set is luts' key set. Candidates join the
+    ``assigned`` and ``luts`` are ``pq_artifacts``' assigned frame
+    (e.g. the session-cached codes frame) and query LUTs; the query
+    set is luts' key set. Candidates join the
     broadcast (cell0, query) probe rows BEFORE any dot product
     (prune-then-score); the only corpus-sized shuffle is the honest
     id join-back attaching labels/raw vectors to cell assignments —
@@ -319,36 +258,21 @@ def hard_negatives_imi(
 
     n_probe = K (all cells probed) degenerates to the exact
     ``hard_negatives`` for the same query set — pinned in tests.
-    Columns match ``hard_negatives``. Passing assigned/luts as None
-    trains + assigns one-shot (the pq_topk_imi convenience form)."""
-    scored = _imi_pruned_cosine(
-        embeddings, assigned, luts, n_probe, n_queries,
-        id_col, vec_col, label_col,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            "score",
-            "rank",
-        )
+    Columns match ``hard_negatives``."""
+    return _topk(
+        _imi_pruned_cosine(
+            embeddings, assigned, luts, n_probe, id_col, vec_col, label_col
+        ),
+        k,
     )
 
 
 def topk_cosine_imi(
     embeddings: DataFrame,
-    assigned: DataFrame = None,
-    luts=None,
+    assigned: DataFrame,
+    luts,
     k: int = 5,
     n_probe: int = 4,
-    n_queries: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -367,18 +291,18 @@ def topk_cosine_imi(
     tests/test_similarity.py. The query set is luts' key set (the PQ
     LUT idiom), and the whole pruned ranking oracle-checks through
     the PQ CTE chain, like hard_negatives_imi."""
-    scored = _imi_pruned_cosine(
-        embeddings, assigned, luts, n_probe, n_queries,
-        id_col, vec_col, label_col=None,
+    return _topk(
+        _imi_pruned_cosine(
+            embeddings, assigned, luts, n_probe, id_col, vec_col, None
+        ),
+        k,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+
+
+def _lut_probe_cells(lut, n_probe: int) -> list[int]:
+    """A query's ``n_probe`` coarse cells: the subspace-0 codes with
+    the smallest LUT distance, ties to the lowest code."""
+    return [c for _, c in sorted((d, c) for c, d in enumerate(lut[0]))[:n_probe]]
 
 
 def _imi_pruned_cosine(
@@ -386,7 +310,6 @@ def _imi_pruned_cosine(
     assigned: DataFrame,
     luts,
     n_probe: int,
-    n_queries: int,
     id_col: str,
     vec_col: str,
     label_col: str | None,
@@ -398,44 +321,22 @@ def _imi_pruned_cosine(
     label-inequality filter rides the candidate join (negative
     mining); without it every probed-cell vector is a candidate
     (retrieval). Returns the UNRANKED scored frame."""
-    if assigned is None or luts is None:
-        q = _pq_quantized(embeddings, id_col, vec_col)
-        cents = _pq_train(q, PQ_M, PQ_SUBDIM, PQ_K, PQ_ITERS)
-        assigned = _pq_assign(q, cents, PQ_M, PQ_SUBDIM)
-        luts = _pq_luts(q, cents, n_queries, PQ_M, PQ_SUBDIM)
     qids = sorted(luts)
-    probe_cells = []
-    for qid in qids:
-        cells = [
-            c
-            for _, c in sorted(
-                (d, c) for c, d in enumerate(luts[qid][0])
-            )[:n_probe]
-        ]
-        for c in cells:
-            probe_cells.append((int(c), int(qid)))
     probe_df = embeddings.sparkSession.createDataFrame(
-        probe_cells, "qcell0 int, query_id long"
+        [
+            (int(c), int(qid))
+            for qid in qids
+            for c in _lut_probe_cells(luts[qid], n_probe)
+        ],
+        "qcell0 int, query_id long",
     )
-    qcols = [
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("qnorm"),
-    ]
-    ccols = [
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.sqrt(_fx_dot(F.col(vec_col), F.col(vec_col))).alias("cnorm"),
-    ]
-    if label_col is not None:
-        qcols.insert(1, F.col(label_col).alias("query_label"))
-        ccols.insert(1, F.col(label_col).alias("neighbor_label"))
-    qside = (
-        embeddings.filter(F.col(id_col).isin([int(q) for q in qids]))
-        .select(*qcols)
-        .join(probe_df, "query_id")
-    )
-    corpus = embeddings.select(*ccols).join(
+    qside = _cos_side(
+        embeddings.filter(F.col(id_col).isin([int(q) for q in qids])),
+        "query", id_col, vec_col, label_col,
+    ).join(probe_df, "query_id")
+    corpus = _cos_side(
+        embeddings, "neighbor", id_col, vec_col, label_col
+    ).join(
         assigned.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("_b0.cid").cast("int").alias("cell0"),
@@ -447,22 +348,11 @@ def _imi_pruned_cosine(
     )
     if label_col is not None:
         cond = cond & (F.col("query_label") != F.col("neighbor_label"))
-    cand = corpus.join(F.broadcast(qside), cond)
-    out_cols = ["query_id", "neighbor_id"]
-    if label_col is not None:
-        out_cols = ["query_id", "query_label", "neighbor_id", "neighbor_label"]
     # no distinct needed: each corpus vector has exactly ONE cell0 and
     # probe rows are unique (cell, query) pairs, so a (query, neighbor)
     # candidate appears at most once — a dedup here would add a
-    # candidate-sized shuffle for nothing (unlike topk_cosine_ivf,
-    # whose per-call assignment frame can carry multi-probe rows)
-    return cand.select(
-        *out_cols,
-        (
-            _fx_dot(F.col("qvec"), F.col("cvec"))
-            / (F.col("qnorm") * F.col("cnorm"))
-        ).alias("score"),
-    )
+    # candidate-sized shuffle for nothing
+    return _cos_scored(corpus.join(F.broadcast(qside), cond), label_col)
 
 
 def knn_label_eval(
@@ -524,11 +414,10 @@ def _knn_vote_tail(
 
 def knn_label_eval_imi(
     embeddings: DataFrame,
-    assigned: DataFrame = None,
-    luts=None,
+    assigned: DataFrame,
+    luts,
     k: int = 5,
     n_probe: int = 4,
-    n_queries: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     label_col: str = "label",
@@ -548,7 +437,7 @@ def knn_label_eval_imi(
     (corpus/K per probe), never corpus×queries."""
     top = topk_cosine_imi(
         embeddings, assigned, luts, k=k, n_probe=n_probe,
-        n_queries=n_queries, id_col=id_col, vec_col=vec_col,
+        id_col=id_col, vec_col=vec_col,
     )
     truth = embeddings.select(
         F.col(id_col).alias("query_id"), F.col(label_col).alias("true_label")
@@ -612,12 +501,7 @@ def topk_cosine_lsh(
         "neighbor_id",
         cosine_fx(F.col("query_id_vec"), F.col("neighbor_id_vec")).alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _topk(scored, k)
 
 
 def near_pairs_cosine(
@@ -1079,15 +963,19 @@ def quantize_embeddings(
 
 
 class IVFIndex:
-    """Persisted IVF index: the amortization path topk_cosine_ivf's
-    docstring promises. ``build`` writes centroids (tiny parquet) and
-    the corpus cell assignments partitioned BY cell_id; ``query``
-    probes n_probe cells per query and filters on cell_id, so the scan
-    reads only the probed partition directories (partition pruning —
+    """Persisted IVF (inverted-file) index — the one IVF ranking path:
+    the corpus is partitioned into ``n_cells`` by nearest centroid and
+    each query scores only the vectors of its ``n_probe`` nearest
+    cells, exactly. ``build`` writes centroids (tiny parquet) and the
+    corpus cell assignments partitioned BY cell_id; ``query`` probes
+    n_probe cells per query and filters on cell_id, so the scan reads
+    only the probed partition directories (partition pruning —
     asserted in tests/test_plans.py). At 100 TB the one-time build is
     one broadcast-assign pass + one partitioned write; every
     subsequent query batch touches ~n_probe/n_cells of the corpus
-    bytes instead of re-assigning the whole corpus per call.
+    bytes (candidates ≈ corpus × n_probe / n_cells, never corpus²).
+    n_probe = n_cells probes every cell and returns exactly
+    ``topk_cosine_exact``'s rows (pinned in tests).
     """
 
     # Bloom sidecar geometry: 16384 bits x 2 hash lanes per cell. The
@@ -1312,17 +1200,15 @@ class IVFIndex:
         embeddings: DataFrame,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        dedupe: bool = True,
     ) -> "IVFIndex":
         with self._acquire_lease("add"):
-            return self._add_locked(embeddings, id_col, vec_col, dedupe)
+            return self._add_locked(embeddings, id_col, vec_col)
 
     def _add_locked(
         self,
         embeddings: DataFrame,
         id_col: str = "vec_id",
         vec_col: str = "embedding",
-        dedupe: bool = True,
     ) -> "IVFIndex":
         """Incremental ingestion against FROZEN centroids (the
         BM25Index.merge story for ANN): new vectors are assigned to
@@ -1335,9 +1221,9 @@ class IVFIndex:
         when the added fraction gets large (Lucene-style segment
         hygiene).
 
-        ``dedupe=True`` (default) makes add IDEMPOTENT (a retried
-        ingestion job re-adding the same batch must not duplicate
-        vectors in the cell files and change query results): ids
+        ``add`` is IDEMPOTENT (a retried ingestion job re-adding the
+        same batch must not duplicate vectors in the cell files and
+        change query results): ids
         already in the index are anti-joined out before the append —
         an id-column-pruned scan of the existing cells, which a
         retried batch job affords — and the incoming batch is ALSO
@@ -1345,17 +1231,13 @@ class IVFIndex:
         attempts would otherwise append both copies). Only EXACT retry
         duplicates are safe to collapse — the same id arriving with
         two DIFFERENT vectors WITHIN the batch is a caller bug (two
-        writers disagree about the vector), so dedupe raises
+        writers disagree about the vector), so add raises
         ValueError instead of silently keeping an arbitrary copy.
         ACROSS calls the index wins: an id already at rest is
         anti-joined out BEFORE the conflict check, so a changed vector
         for an existing id is dropped, not detected — re-embedding
         requires a rebuild (the existing-beats-batch priority;
         detecting it would mean scanning the at-rest vectors per add).
-        Set ``dedupe=False`` only when the caller guarantees
-        disjointness upstream (e.g. an exactly-once writer), skipping
-        the probe and the conflict check (the documented
-        zero-read-amplification scale path).
 
         BOUNDED idempotency probe (never a scan of the at-rest id
         column of the WHOLE index per batch): the batch ids go through
@@ -1366,9 +1248,7 @@ class IVFIndex:
         depends on the bloom — it only prunes definite-absent rows;
         survivors still get the exact anti-join. The surviving ids are
         claimed in the sidecar BEFORE the cell append (the
-        ``_write_sidecar`` superset-first contract). ``dedupe=False``
-        appends still fold their ids in, keeping later probed adds
-        sound.
+        ``_write_sidecar`` superset-first contract).
 
         SINGLE-WRITER contract (like the BM25 ingestion workdir):
         concurrent add() calls could interleave sidecar writes and
@@ -1400,9 +1280,7 @@ class IVFIndex:
             # delete() contract: a tombstoned id can't be re-added —
             # the at-rest copy would win the idempotency anti-join
             # while the serve-time tombstone filter killed BOTH
-            # copies (silent loss); expunge first. Checked for
-            # dedupe=False too (a blind append would resurrect rows
-            # the tombstone then hides).
+            # copies (silent loss); expunge first.
             dead = [
                 r.neighbor_id
                 for r in batch.join(F.broadcast(tomb), "neighbor_id")
@@ -1416,48 +1294,42 @@ class IVFIndex:
                     f"(e.g. {dead}); run expunge_deletes() before "
                     "re-adding a deleted vector"
                 )
-        if dedupe:
-            # collapse exact retry duplicates first; what survives with
-            # >1 row per id carries conflicting vectors — refuse loudly.
-            # The deduped batch is eagerly pinned:
-            # without the checkpoint the upstream batch lineage re-runs
-            # for the conflict probe, the anti-join AND the write — and
-            # a nondeterministic upstream could pass the check yet
-            # write different rows.
-            batch = batch.dropDuplicates(
-                ["neighbor_id", "cvec_"]
-            ).localCheckpoint()
-            conflicts = [
-                r.neighbor_id
-                for r in batch.groupBy("neighbor_id")
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(5)
-                .collect()
-            ]
-            if conflicts:
-                raise ValueError(
-                    "IVFIndex.add: batch contains the same id with "
-                    f"different vectors (e.g. ids {conflicts}); "
-                    "resolve upstream — add() only collapses exact "
-                    "retry duplicates"
-                )
+        # collapse exact retry duplicates first; what survives with
+        # >1 row per id carries conflicting vectors — refuse loudly.
+        # The deduped batch is eagerly pinned: without the checkpoint
+        # the upstream batch lineage re-runs for the conflict probe,
+        # the anti-join AND the write — and a nondeterministic
+        # upstream could pass the check yet write different rows.
+        batch = batch.dropDuplicates(["neighbor_id", "cvec_"]).localCheckpoint()
+        conflicts = [
+            r.neighbor_id
+            for r in batch.groupBy("neighbor_id")
+            .count()
+            .filter(F.col("count") > 1)
+            .limit(5)
+            .collect()
+        ]
+        if conflicts:
+            raise ValueError(
+                "IVFIndex.add: batch contains the same id with "
+                f"different vectors (e.g. ids {conflicts}); "
+                "resolve upstream — add() only collapses exact "
+                "retry duplicates"
+            )
         assigned = _assign_cells(
             batch, self.centroids, "neighbor_id", "cvec_", n_probe=1
         ).localCheckpoint(eager=False)
         side = self._sidecar()
-        self.last_probe_cells = []
-        if dedupe:
-            self.last_probe_cells = self._bloom_probe(assigned, side)
-            if self.last_probe_cells:
-                existing = (
-                    self.spark.read.parquet(f"{self.path}/cells")
-                    .filter(F.col("cell_id").isin(self.last_probe_cells))
-                    .select("neighbor_id")
-                )
-                assigned = assigned.join(
-                    existing, "neighbor_id", "left_anti"
-                ).localCheckpoint(eager=False)
+        self.last_probe_cells = self._bloom_probe(assigned, side)
+        if self.last_probe_cells:
+            existing = (
+                self.spark.read.parquet(f"{self.path}/cells")
+                .filter(F.col("cell_id").isin(self.last_probe_cells))
+                .select("neighbor_id")
+            )
+            assigned = assigned.join(
+                existing, "neighbor_id", "left_anti"
+            ).localCheckpoint(eager=False)
         # superset-first: claim the surviving ids in the sidecar
         # BEFORE the cell append (``_write_sidecar``)
         self._write_sidecar(self._sidecar_merge(side, assigned))
@@ -1924,15 +1796,16 @@ class IVFIndex:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> DataFrame:
-        """Same output contract as topk_cosine_ivf, but the corpus
-        side is the persisted, cell-partitioned index.
+        """Top-k cosine neighbors per query from the probed cells:
+        the ``topk_cosine_exact`` column contract (query_id,
+        neighbor_id, score, rank) over the persisted, cell-partitioned
+        corpus.
 
         SELECTIVE-BATCH CONTRACT: the query table must fit in a
         broadcast — its n_probe rows per query are collected for the
-        probe set and broadcast into the cell join, so a corpus-sized
-        query table does not fit this path (shard it, or use
-        ``topk_cosine_ivf``). Probe cells are assigned map-only, and
-        the assigned (query_id, qvec_, cell_id) rows are pinned once
+        probe set and broadcast into the cell join (shard a larger
+        query table into batches). Probe cells are assigned map-only,
+        and the assigned (query_id, qvec_, cell_id) rows are pinned once
         per call: the probe-set collect and the broadcast both read
         the pinned blocks, so the caller's lineage runs exactly once.
         The centroid rows and the cells schema are cached per
@@ -1958,13 +1831,11 @@ class IVFIndex:
 
 
 def _ivf_rank(corpus_cells: DataFrame, query_cells: DataFrame, k: int) -> DataFrame:
-    """The shared IVF scoring tail: join the (cell_id, neighbor_id,
-    cvec_) corpus rows with the broadcast (cell_id, query_id, qvec_)
-    probe table, score exact cosine, take top-k per query. Used by
-    both ``topk_cosine_ivf`` and the at-rest ``IVFIndex.query``, so
-    the two stay in lockstep (the retrieval._bm25_rank rule). The
-    candidates are partitioned once by query_id, so the distinct and
-    the top-k window share that one shuffle."""
+    """``IVFIndex.query``'s scoring tail: join the (cell_id,
+    neighbor_id, cvec_) corpus rows with the broadcast (cell_id,
+    query_id, qvec_) probe table, score exact cosine, take top-k per
+    query. The candidates are partitioned once by query_id, so the
+    distinct and the top-k window share that one shuffle."""
     cand = corpus_cells.join(F.broadcast(query_cells), "cell_id").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
@@ -1977,44 +1848,7 @@ def _ivf_rank(corpus_cells: DataFrame, query_cells: DataFrame, k: int) -> DataFr
         .repartition("query_id")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def topk_cosine_ivf(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k via IVF: corpus partitioned into ``n_cells`` by
-    nearest centroid; each query probes its ``n_probe`` nearest cells
-    and scores only those vectors exactly.
-
-    Scale shape: corpus assignment is one broadcast join + one write
-    (amortized across queries if persisted, e.g. bucketed by
-    cell_id); the query join is an equi-join on cell_id — candidates
-    ≈ corpus × n_probe / n_cells, never corpus².
-    """
-    cents = _centroid_rows(
-        ivf_centroids(embeddings, k=n_cells, id_col=id_col, vec_col=vec_col)
-    )
-    corpus_cells = _assign_cells(
-        embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec_")),
-        cents, "neighbor_id", "cvec_", n_probe=1,
-    )
-    query_cells = _assign_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec_")),
-        cents, "query_id", "qvec_", n_probe=n_probe,
-    )
-    return _ivf_rank(corpus_cells, query_cells, k)
+    return _topk(scored, k)
 
 
 # ------------------------------------------- md5-portable SRP LSH
@@ -2478,13 +2312,7 @@ def _pq_imi_scored(
     rows = []
     for qid in sorted(luts):
         flat = [int(d) for s in range(m) for d in luts[qid][s]]
-        cells = [
-            c
-            for _, c in sorted(
-                (d, c) for c, d in enumerate(luts[qid][0])
-            )[:n_probe]
-        ]
-        for c in cells:
+        for c in _lut_probe_cells(luts[qid], n_probe):
             rows.append((int(c), int(qid), flat))
     probed_df = a.sparkSession.createDataFrame(
         rows, "cell0 int, query_id long, lut array<long>"
@@ -2530,85 +2358,46 @@ def _pq_topk_window(scored: DataFrame, topk: int) -> DataFrame:
     )
 
 
-def pq_codes(
-    emb: DataFrame,
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents=None,
-    assigned=None,
-) -> DataFrame:
+def pq_artifacts(emb: DataFrame, n_queries: int = 8):
+    """(cents, assigned, luts): the one PQ train + assign + LUT step
+    every PQ/IMI ranker serves from. ``cents`` are the seeded
+    fixed-point per-subspace Lloyd codebooks (``_pq_train``),
+    ``assigned`` the lazy map-only assignment frame (``_pq_assign``)
+    and ``luts`` the exact integer query LUTs of the ``n_queries``
+    smallest-id vectors (``_pq_luts``). Training and the LUTs collect
+    driver-tiny results; the assignment stays lazy, so a caller
+    serving many rankings checkpoints it once (the declared entries
+    do, in the queries_llm session cache; at rest, codes are
+    materialized once and this is the read path)."""
+    q = _pq_quantized(emb, "vec_id", "embedding")
+    cents = _pq_train(q, PQ_M, PQ_SUBDIM, PQ_K, PQ_ITERS)
+    assigned = _pq_assign(q, cents, PQ_M, PQ_SUBDIM)
+    return cents, assigned, _pq_luts(q, cents, n_queries, PQ_M, PQ_SUBDIM)
+
+
+def pq_codes(assigned: DataFrame) -> DataFrame:
     """PQ code assignment: (vec_id, code, qerr) with code = the M
     4-bit subspace codes packed into one bigint and qerr = the exact
-    integer reconstruction error Σ_sub dist2 (quantized scale).
-    Pass ``cents`` (from _pq_train) to reuse trained codebooks, or
-    ``assigned`` (from _pq_assign, e.g. the session-cached
-    checkpointed frame) to skip assignment entirely — the declared
-    entries share ONE training+assignment per session (the
-    queries_llm session cache; at rest, codes are materialized once
-    and this is the read path)."""
-    assert k <= 16, "code packing assumes 4-bit subspace codes"
-    if assigned is None:
-        q = _pq_quantized(emb, id_col, vec_col)
-        if cents is None:
-            cents = _pq_train(q, m, subdim, k, iters)
-        assigned = _pq_assign(q, cents, m, subdim)
-    return _pq_pack(assigned, m)
+    integer reconstruction error Σ_sub dist2 (quantized scale), over
+    ``pq_artifacts``' assigned frame."""
+    return _pq_pack(assigned, PQ_M)
 
 
-def pq_topk_adc(
-    emb: DataFrame,
-    n_queries: int = 8,
-    topk: int = 10,
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents=None,
-    assigned=None,
-    luts=None,
-) -> DataFrame:
-    """ADC top-k: the n_queries smallest-id vectors query the PQ
-    codes. Per query the K×M lookup table of exact integer
-    query-to-centroid subdistances is built driver-side (tiny integer
-    math) and scored map-only as literal arrays —
-    adc = Σ_sub LUT[sub][code_sub] — followed by one top-k window.
-    Self-matches excluded. Pass ``assigned`` + ``luts`` (session
-    cache) to serve from a materialized codes frame instead of
-    re-assigning. Columns: (query_id, neighbor_id, adc_dist2,
-    rank) — all exact integers, fully oracle-checkable."""
-    if assigned is None or luts is None:
-        q = _pq_quantized(emb, id_col, vec_col)
-        if cents is None:
-            cents = _pq_train(q, m, subdim, k, iters)
-        if assigned is None:
-            assigned = _pq_assign(q, cents, m, subdim)
-        if luts is None:
-            luts = _pq_luts(q, cents, n_queries, m, subdim)
+def pq_topk_adc(assigned: DataFrame, luts, topk: int = 10) -> DataFrame:
+    """ADC top-k: the LUT queries (``pq_artifacts``' n_queries
+    smallest-id vectors) query the PQ codes. Per query the K×M lookup
+    table of exact integer query-to-centroid subdistances is built
+    driver-side (tiny integer math) and scored map-only as literal
+    arrays — adc = Σ_sub LUT[sub][code_sub] — followed by one top-k
+    window. Self-matches excluded. Columns: (query_id, neighbor_id,
+    adc_dist2, rank) — all exact integers, fully oracle-checkable."""
     return _pq_topk_window(
-        _pq_adc_scored(assigned, luts, m).drop("cell0"), topk
+        _pq_adc_scored(assigned, luts, PQ_M).drop("cell0"), topk
     )
 
 
 def pq_topk_imi(
-    emb: DataFrame,
-    n_queries: int = 8,
-    topk: int = 10,
-    n_probe: int = 4,
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents=None,
-    assigned=None,
-    luts=None,
+    assigned: DataFrame, luts, topk: int = 10, n_probe: int = 4
 ) -> DataFrame:
     """IVF-PQ composition, inverted-multi-index style (Babenko &
     Lempitsky: the coarse index IS a PQ subspace codebook): corpus
@@ -2629,20 +2418,11 @@ def pq_topk_imi(
     frame, then n_queries·n_probe/k ADC rows per vector (2 at the
     declared 8·4/16, vs 8 unpruned); at rest the codes table is
     partitioned by cell0, so probes prune partitions exactly like
-    IVFIndex — but over 4-byte codes instead of raw vectors. Pass
-    ``assigned`` + ``luts`` (session cache) to serve from a
-    materialized codes frame. Columns: (query_id, neighbor_id,
-    adc_dist2, rank)."""
-    if assigned is None or luts is None:
-        q = _pq_quantized(emb, id_col, vec_col)
-        if cents is None:
-            cents = _pq_train(q, m, subdim, k, iters)
-        if assigned is None:
-            assigned = _pq_assign(q, cents, m, subdim)
-        if luts is None:
-            luts = _pq_luts(q, cents, n_queries, m, subdim)
+    IVFIndex — but over 4-byte codes instead of raw vectors.
+    ``assigned`` and ``luts`` come from ``pq_artifacts``. Columns:
+    (query_id, neighbor_id, adc_dist2, rank)."""
     k_eff = len(next(iter(luts.values()))[0])
-    scored = _pq_imi_scored(assigned, luts, n_probe, m, k_eff)
+    scored = _pq_imi_scored(assigned, luts, n_probe, PQ_M, k_eff)
     return _pq_topk_window(scored, topk)
 
 
@@ -2830,17 +2610,13 @@ def margin_bitext_mine_imi(
         .collect()
     ]
     fluts = _pq_luts_for_ids(q, cents, qids, PQ_M, PQ_SUBDIM)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
     fwd = (
-        _imi_pruned_cosine(
-            embeddings, assigned, fluts, n_probe, n_queries,
-            id_col, vec_col, label_col=None,
+        _topk(
+            _imi_pruned_cosine(
+                embeddings, assigned, fluts, n_probe, id_col, vec_col, None
+            ).filter(F.col("neighbor_id") % 2 == tgt_mod),
+            k,
         )
-        .filter(F.col("neighbor_id") % 2 == tgt_mod)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
         .withColumn("cos_fx", F.floor(F.col("score") * FX).cast("long"))
         .localCheckpoint(eager=False)
     )
@@ -2854,17 +2630,11 @@ def margin_bitext_mine_imi(
             # building LUT/probe frames off an empty list
             return fwd.limit(0)
         bluts = _pq_luts_for_ids(q, cents, cand_ids, PQ_M, PQ_SUBDIM)
-        return (
+        return _topk(
             _imi_pruned_cosine(
-                embeddings, assigned, bluts, n_probe, len(cand_ids),
-                id_col, vec_col, label_col=None,
-            )
-            .filter(F.col("neighbor_id") % 2 == src_mod)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .withColumn(
-                "cos_fx", F.floor(F.col("score") * FX).cast("long")
-            )
-        )
+                embeddings, assigned, bluts, n_probe, id_col, vec_col, None
+            ).filter(F.col("neighbor_id") % 2 == src_mod),
+            k,
+        ).withColumn("cos_fx", F.floor(F.col("score") * FX).cast("long"))
 
     return _margin_stitch(fwd, make_bwd, k)

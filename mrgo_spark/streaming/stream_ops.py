@@ -609,7 +609,6 @@ def serve_bm25_foreach_batch(index, query_stream: DataFrame, sink, k: int = 10):
 def ingest_ann_foreach_batch(
     index,
     vec_stream: DataFrame,
-    dedupe: bool = True,
     compact_max_files: int | None = 8,
     holder: dict | None = None,
 ):
@@ -643,7 +642,7 @@ def ingest_ann_foreach_batch(
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        index.add(batch_df, dedupe=dedupe)
+        index.add(batch_df)
         if compact_max_files is not None:
             stats = index.compact_cells(compact_max_files)
             if holder is not None and stats["compacted_cells"]:
@@ -1024,10 +1023,7 @@ def ingest_corpus_foreach_batch(
         bm_holder["_ingest"](surv.select("doc_id", "text"), batch_id)
         holder["index"] = bm_holder["index"]
         ann_index.add(
-            surv.select(
-                F.col("doc_id").alias("vec_id"), "embedding"
-            ),
-            dedupe=True,
+            surv.select(F.col("doc_id").alias("vec_id"), "embedding")
         )
         if compact_max_files is not None:
             ann_index.compact_cells(compact_max_files)

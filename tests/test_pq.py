@@ -87,7 +87,7 @@ def test_pq_codes_match_python_replay(spark):
     emb = load_table(spark, SF, "embeddings")
     got = {
         r.vec_id: (r.code, r.qerr)
-        for r in similarity.pq_codes(emb).collect()
+        for r in similarity.pq_codes(similarity.pq_artifacts(emb)[1]).collect()
     }
     vecs = _quantized(spark, SF)
     codes, qerrs, _ = _py_pq(vecs)
@@ -97,7 +97,7 @@ def test_pq_codes_match_python_replay(spark):
 
 def test_pq_code_range_and_seeds(spark):
     emb = load_table(spark, SF, "embeddings")
-    rows = similarity.pq_codes(emb).collect()
+    rows = similarity.pq_codes(similarity.pq_artifacts(emb)[1]).collect()
     assert len(rows) == emb.count()
     for r in rows:
         assert 0 <= r.code < (1 << (4 * M))
@@ -113,7 +113,8 @@ def test_pq_adc_planted_duplicate(spark):
     q0 = emb.orderBy("vec_id").limit(1)
     dup = q0.selectExpr("90000 AS vec_id", "embedding", "label")
     aug = emb.unionByName(dup)
-    adc = similarity.pq_topk_adc(aug, n_queries=1, topk=5).collect()
+    _, a, luts = similarity.pq_artifacts(aug, n_queries=1)
+    adc = similarity.pq_topk_adc(a, luts, topk=5).collect()
     top = min(adc, key=lambda r: r.rank)
     assert top.neighbor_id == 90000
     # the duplicate quantizes identically, so its ADC distance equals
@@ -139,9 +140,10 @@ def test_pq_adc_recall_vs_exact_l2(spark):
             if i != qid
         )[:10]
         truth |= {(qid, i) for _, i in dists}
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=8)
     got = {
         (r.query_id, r.neighbor_id)
-        for r in similarity.pq_topk_adc(emb, n_queries=8, topk=10).collect()
+        for r in similarity.pq_topk_adc(a, luts, topk=10).collect()
     }
     recall = len(truth & got) / len(truth)
     # random baseline would be 10/499 ≈ 0.02; pin a generous floor
@@ -151,16 +153,18 @@ def test_pq_adc_recall_vs_exact_l2(spark):
 def test_pq_imi_degenerates_to_full_adc(spark):
     # probing every cell must reproduce the unpruned ADC ranking
     emb = load_table(spark, SF, "embeddings")
-    full = similarity.pq_topk_adc(emb, n_queries=4, topk=5).collect()
-    imi = similarity.pq_topk_imi(emb, n_queries=4, topk=5, n_probe=K).collect()
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=4)
+    full = similarity.pq_topk_adc(a, luts, topk=5).collect()
+    imi = similarity.pq_topk_imi(a, luts, topk=5, n_probe=K).collect()
     key = lambda r: (r.query_id, r.rank, r.neighbor_id, r.adc_dist2)  # noqa: E731
     assert sorted(map(key, imi)) == sorted(map(key, full))
 
 
 def test_pq_imi_prunes_and_recalls(spark):
     emb = load_table(spark, SF, "embeddings")
-    full = similarity.pq_topk_adc(emb, n_queries=8, topk=10).collect()
-    imi = similarity.pq_topk_imi(emb, n_queries=8, topk=10, n_probe=4).collect()
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=8)
+    full = similarity.pq_topk_adc(a, luts, topk=10).collect()
+    imi = similarity.pq_topk_imi(a, luts, topk=10, n_probe=4).collect()
     fullset = {(r.query_id, r.neighbor_id) for r in full}
     imiset = {(r.query_id, r.neighbor_id) for r in imi}
     # pruned scores are identical ADC values, so every IMI hit that

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from mrgo_spark.operators import similarity
@@ -116,7 +117,17 @@ def test_semantic_dedup_lsh_agrees_with_exact_fold(spark):
     assert agree >= 0.9, f"kept agreement {agree:.2f}"
 
 
-def test_ivf_recall_vs_exact(spark):
+@pytest.fixture(scope="module")
+def ivf16(spark, tmp_path_factory):
+    """One 16-cell index over the fixture corpus, built once for the
+    IVF recall and score tests."""
+    emb = load_table(spark, SF, "embeddings")
+    return similarity.IVFIndex.build(
+        emb, str(tmp_path_factory.mktemp("ivf16")), n_cells=16
+    )
+
+
+def test_ivf_recall_vs_exact(spark, ivf16):
     """IVF with 16 cells / 6 probes must recover most true top-5
     neighbors (recall ≥ 0.5 on the fixture — the fixture's vectors
     are near-orthogonal random, the hostile case for ANN; real
@@ -124,40 +135,40 @@ def test_ivf_recall_vs_exact(spark):
     emb = load_table(spark, SF, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     exact = similarity.topk_cosine_exact(emb, queries, k=5).collect()
-    approx = similarity.topk_cosine_ivf(emb, queries, k=5).collect()
+    approx = ivf16.query(queries, k=5, n_probe=6).collect()
     truth = {(r.query_id, r.neighbor_id) for r in exact}
     got = {(r.query_id, r.neighbor_id) for r in approx}
     recall = len(truth & got) / len(truth)
     assert recall >= 0.5, f"recall {recall:.2f}"
 
 
-def test_ivf_scores_exact_where_overlapping(spark):
+def test_ivf_scores_exact_where_overlapping(spark, ivf16):
     emb = load_table(spark, SF, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
     exact = {
         (r.query_id, r.neighbor_id): r.score
         for r in similarity.topk_cosine_exact(emb, queries, k=5).collect()
     }
-    for r in similarity.topk_cosine_ivf(emb, queries, k=5).collect():
+    for r in ivf16.query(queries, k=5, n_probe=6).collect():
         if (r.query_id, r.neighbor_id) in exact:
             assert r.score == exact[(r.query_id, r.neighbor_id)]
 
 
 def test_ivf_index_persisted_matches_fresh(spark, tmp_path):
-    """The persisted index must return exactly what the one-shot
-    topk_cosine_ivf computes (same deterministic centroids), and its
-    probe scan must prune to the probed cell partitions."""
+    """Probing every cell of the persisted index (n_probe = n_cells)
+    must return exactly the exact top-k, row for row, and a probe scan
+    must prune to the probed cell partitions."""
     from mrgo_spark import plans
-    from mrgo_spark.operators.similarity import IVFIndex, topk_cosine_ivf
+    from mrgo_spark.operators.similarity import IVFIndex
     from mrgo_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0)
-    fresh = topk_cosine_ivf(emb, queries, k=5, n_cells=8, n_probe=3)
+    exact = similarity.topk_cosine_exact(emb, queries, k=5)
     idx = IVFIndex.build(emb, str(tmp_path / "ivf"), n_cells=8)
-    served = idx.query(queries, k=5, n_probe=3)
-    assert sorted(map(tuple, fresh.collect())) == sorted(map(tuple, served.collect()))
-    plan = plans.explain_str(served, "formatted")
+    served = idx.query(queries, k=5, n_probe=8)
+    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, served.collect()))
+    plan = plans.explain_str(idx.query(queries, k=5, n_probe=3), "formatted")
     assert "PartitionFilters: [cell_id" in plan or "cell_id#" in plan.split(
         "PartitionFilters"
     )[1][:120]
@@ -441,8 +452,9 @@ def test_hard_negatives_imi_degenerates_to_exact(spark):
     the exact hard_negatives for the same 8-smallest-id query set —
     the pq_imi/pq_adc degeneration pin applied to negative mining."""
     emb = load_table(spark, SF, "embeddings")
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=8)
     imi = similarity.hard_negatives_imi(
-        emb, k=5, n_probe=similarity.PQ_K, n_queries=8
+        emb, a, luts, k=5, n_probe=similarity.PQ_K
     ).collect()
     qids = [r.vec_id for r in emb.orderBy("vec_id").limit(8).collect()]
     exact = similarity.hard_negatives(
@@ -457,7 +469,8 @@ def test_hard_negatives_imi_prunes_with_recall(spark):
     label-mismatched, correctly-ranked survivors and keeps a usable
     fraction of the exact top-5 per query."""
     emb = load_table(spark, SF, "embeddings")
-    out = similarity.hard_negatives_imi(emb, k=5, n_probe=4).collect()
+    _, a, luts = similarity.pq_artifacts(emb)
+    out = similarity.hard_negatives_imi(emb, a, luts, k=5, n_probe=4).collect()
     assert out
     labels = {r.vec_id: r.label for r in emb.select("vec_id", "label").collect()}
     for r in out:
@@ -481,8 +494,9 @@ def test_hard_negatives_imi_plan_prunes_before_scoring(spark):
     a nested-loop over the corpus) and the exact dot product must sit
     ABOVE the join — prune-then-score."""
     emb = load_table(spark, SF, "embeddings")
+    _, a, luts = similarity.pq_artifacts(emb)
     plan = (
-        similarity.hard_negatives_imi(emb, k=5, n_probe=4)
+        similarity.hard_negatives_imi(emb, a, luts, k=5, n_probe=4)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -612,8 +626,9 @@ def test_topk_cosine_imi_degenerates_to_exact(spark):
     topk_cosine_exact for the same 8-smallest-id query set — the
     VERDICT_r7 #1 parity pin for the served hybrid semantic leg."""
     emb = load_table(spark, SF, "embeddings")
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=8)
     imi = similarity.topk_cosine_imi(
-        emb, k=5, n_probe=similarity.PQ_K, n_queries=8
+        emb, a, luts, k=5, n_probe=similarity.PQ_K
     ).collect()
     qids = [r.vec_id for r in emb.orderBy("vec_id").limit(8).collect()]
     exact = similarity.topk_cosine_exact(
@@ -629,7 +644,8 @@ def test_topk_cosine_imi_pruned_recall_and_shape(spark):
     top-5, and shares hard_negatives_imi's plan shape (prune before
     score: no BroadcastNestedLoopJoin anywhere)."""
     emb = load_table(spark, SF, "embeddings")
-    df = similarity.topk_cosine_imi(emb, k=5, n_probe=4)
+    _, a, luts = similarity.pq_artifacts(emb)
+    df = similarity.topk_cosine_imi(emb, a, luts, k=5, n_probe=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     out = df.collect()
@@ -835,8 +851,9 @@ def test_knn_label_eval_imi_degenerates_to_exact(spark):
     the whole corpus: output must equal the exact knn_label_eval for
     the same 8-smallest-id query set (VERDICT_r8 #4 parity pin)."""
     emb = load_table(spark, SF, "embeddings")
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=8)
     imi = similarity.knn_label_eval_imi(
-        emb, k=5, n_probe=similarity.PQ_K, n_queries=8
+        emb, a, luts, k=5, n_probe=similarity.PQ_K
     ).collect()
     qids = [r.vec_id for r in emb.orderBy("vec_id").limit(8).collect()]
     exact = similarity.knn_label_eval(
@@ -854,7 +871,8 @@ def test_knn_label_eval_imi_pruned_shape(spark):
     LUT query with a valid vote; no BroadcastNestedLoopJoin anywhere
     (prune-before-score, the topk_cosine_imi plan contract)."""
     emb = load_table(spark, SF, "embeddings")
-    df = similarity.knn_label_eval_imi(emb, k=5, n_probe=4)
+    _, a, luts = similarity.pq_artifacts(emb)
+    df = similarity.knn_label_eval_imi(emb, a, luts, k=5, n_probe=4)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     out = df.collect()
@@ -921,3 +939,44 @@ def test_assign_cells_literal_path_matches_window_form(spark):
             assert len(rows) == len(want) and set(rows) == want
             plan = out._jdf.queryExecution().executedPlan().toString()
             assert "Exchange" not in plan and "Window" not in plan
+
+
+def test_score_ties_rank_by_neighbor_id(spark, tmp_path):
+    """Exactly tied scores rank by neighbor_id ascending in every
+    cosine ranking that shares the one top-k cut. Five ids carry the
+    same vector (twice the query's, so each scores the same cosine
+    and shares the query's LSH buckets) and are written in descending
+    id order; k=3 must keep the three lowest of them, in id order."""
+    import random
+
+    rnd = random.Random(7)
+    qvec = [rnd.uniform(-1.0, 1.0) for _ in range(64)]
+    tied = [x * 2.0 for x in qvec]
+    rows = [(0, qvec, 0)]
+    rows += [(i, tied, 1) for i in (41, 30, 17, 9, 4)]
+    rows += [
+        (i, [rnd.uniform(-1.0, 1.0) for _ in range(64)], i % 2)
+        for i in range(50, 70)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, label int"
+    )
+    queries = emb.filter(F.col("vec_id") == 0)
+    want = [(0, 1, 4), (0, 2, 9), (0, 3, 17)]
+
+    def ranks(df):
+        return sorted((r.query_id, r.rank, r.neighbor_id) for r in df.collect())
+
+    idx = similarity.IVFIndex.build(emb, str(tmp_path / "ties"), n_cells=4)
+    _, a, luts = similarity.pq_artifacts(emb, n_queries=1)
+    rankings = {
+        "exact": similarity.topk_cosine_exact(emb, queries, k=3),
+        "hard_negatives": similarity.hard_negatives(emb, queries, k=3),
+        "lsh": similarity.topk_cosine_lsh(emb, queries, k=3),
+        "ivf": idx.query(queries, k=3, n_probe=4),
+        "imi": similarity.topk_cosine_imi(
+            emb, a, luts, k=3, n_probe=similarity.PQ_K
+        ),
+    }
+    for name, df in rankings.items():
+        assert ranks(df) == want, name
